@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -202,7 +200,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // developer knob: comma-separated query names to restrict the sweep
     // (iterating on one operator shouldn't cost a full 6-minute run);
@@ -210,17 +207,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val sweep = only.fold(headline)(f => headline.filter(f))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // reap truncated-lineage shuffle files between query phases —
-      // peak scratch = max-over-phases, not sum-over-job (see BenchOne)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
     // LOAD GUARD: a busy machine inflates every pass uniformly and the
     // per-query median can't reject it (rounds 4 and 6 both shipped
     // load-contaminated benches under a warn-and-record guard). The

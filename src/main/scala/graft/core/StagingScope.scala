@@ -77,7 +77,8 @@ object StagingScope {
   /** Directory for `reliable` mode's checkpoint files (set once per
     * SparkContext on first use; on a cluster this must be distributed
     * storage). Defaults to a fresh temp dir — fine in local mode,
-    * wrong on a cluster, hence the conf.
+    * wrong on a cluster, hence the conf. Once the context checkpoints
+    * somewhere, a different value here is refused, not ignored.
     */
   val DirKey = "graft.staging.dir"
 
@@ -95,12 +96,24 @@ object StagingScope {
       case "off" => df
       case "reliable" =>
         val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) synchronized {
-          if (sc.getCheckpointDir.isEmpty) {
-            val dir = spark.conf.get(DirKey,
-              java.nio.file.Files
-                .createTempDirectory("graft-staging-").toString)
-            sc.setCheckpointDir(dir)
+        val wanted = spark.conf.getOption(DirKey)
+        synchronized {
+          sc.getCheckpointDir match {
+            case None =>
+              sc.setCheckpointDir(wanted.getOrElse(java.nio.file.Files
+                .createTempDirectory("graft-staging-").toString))
+            case Some(have) => wanted.foreach { w =>
+              // setCheckpointDir files under a per-context subdirectory
+              // of the dir it is given, qualified with its file system
+              val want = new org.apache.hadoop.fs.Path(w)
+              val parent = new org.apache.hadoop.fs.Path(have).getParent
+              if (want.getFileSystem(sc.hadoopConfiguration)
+                  .makeQualified(want) != parent)
+                throw new IllegalStateException(
+                  s"$DirKey is '$w' but this SparkContext already " +
+                    s"checkpoints to '$have'; unset $DirKey or set it to " +
+                    s"'$parent' (the checkpoint dir is fixed per context)")
+            }
           }
         }
         register(df.checkpoint(eager = eager))

@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -114,35 +113,4 @@ object Genomics {
   def percentIdentity(a: Column, b: Column): Column =
     GraftColumnBridge.column(PercentIdentity(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
-}
-
-/** Session extension registering the genomics functions for SQL use
-  * (`SELECT cigar_expand(c, s)` …). Activate with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`,
-  * or on a live session via [[GraftExtensions.registerInto]].
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.BroadcastIntervalJoinStrategy)
-  }
-}
-
-object GraftExtensions {
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (
-      FunctionIdentifier("cigar_expand"),
-      new ExpressionInfo("graft.functions.Genomics", "cigar_expand"),
-      (args: Seq[Expression]) => Genomics.CigarExpand(args(0), args(1))),
-    (
-      FunctionIdentifier("percent_identity"),
-      new ExpressionInfo("graft.functions.Genomics", "percent_identity"),
-      (args: Seq[Expression]) => Genomics.PercentIdentity(args(0), args(1))))
-
-  /** Register all graft functions into a running session. */
-  def registerInto(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (name, info, builder) =>
-      org.apache.spark.sql.classic.GraftColumnBridge
-        .registerFunction(spark, name, info, builder)
-    }
 }

@@ -563,17 +563,22 @@ object Apss {
     * plan the pre-r17 planner happened to pick from (luckily small)
     * size estimates at gate scales; beyond it the join is hinted
     * shuffle-hash so the (dim, salt) exchange never re-SORTS either
-    * posting stream. ~128 MiB ≈ 2M posting rows at
-    * [[CandBroadcastBytesPerRow]] — guide §3.1's comfortable zone,
+    * posting stream. ~128 MiB ≈ 2M numeric-dim posting rows at
+    * [[broadcastCandBuild]]'s row width — guide §3.1's comfortable zone,
     * far under the 8 GiB broadcast cap.
     */
   val CandBroadcastBytes: Long = 128L << 20
 
-  /** Conservative bytes per salted posting row for the
-    * [[CandBroadcastBytes]] decision: dim (≤8) + salt (4) + id (8) +
-    * rem/wn/dropped (24) + row overhead.
+  /** The [[CandBroadcastBytes]] decision for a salted build side of
+    * `saltedBuildRows` rows keyed by `dimType` dims, at conservative
+    * bytes per row: the dim key ([[dimKeyBytes]], as the
+    * [[MeetDimsBroadcastBytes]] decision counts it) + salt (4) + id (8)
+    * + rem/wn/dropped (24) + row overhead — 64 for numeric dims.
     */
-  val CandBroadcastBytesPerRow: Long = 64L
+  private[graft] def broadcastCandBuild(
+      saltedBuildRows: Double,
+      dimType: org.apache.spark.sql.types.DataType): Boolean =
+    saltedBuildRows * (dimKeyBytes(dimType) + 56L) <= CandBroadcastBytes
 
   /** Grid-side cap: ~k²/2 sequential passes is the price of bounded
     * scratch, and past this k the pass count stops being a sensible
@@ -703,8 +708,8 @@ object Apss {
       verifyAuto(
         candidatesOf(probeSide, buildSide, ordered, dimCap, threshold,
           predicted, Some(meetDims),
-          broadcastBuild =
-            saltedBuildRows * CandBroadcastBytesPerRow <= CandBroadcastBytes),
+          broadcastBuild = broadcastCandBuild(
+            saltedBuildRows, buildSide.schema("dim").dataType)),
         predicted, left, right, threshold, verifyShardPairs)
     else {
       // the guard df aggregate just shuffled the full posting set; reap

@@ -22,6 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   *
   * Ordering: descending by score, ties broken by ascending id — the
   * same deterministic rule as the reference's representative selection.
+  * Scores compare by `java.lang.Double.compare`, a total order that
+  * ranks NaN above every number (as Spark's own sort does), so a NaN
+  * lands in the same place whatever order the rows arrive in.
   */
 object TopK {
 
@@ -31,8 +34,10 @@ object TopK {
   class TopKAggregator(k: Int) extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
     require(k > 0)
 
-    private def better(a: Scored, b: Scored): Boolean =
-      a.score > b.score || (a.score == b.score && a.id < b.id)
+    private def better(a: Scored, b: Scored): Boolean = {
+      val c = java.lang.Double.compare(a.score, b.score)
+      c > 0 || (c == 0 && a.id < b.id)
+    }
 
     private def insert(buf: Seq[Scored], x: Scored): Seq[Scored] = {
       if (buf.size >= k && better(buf.last, x)) buf
@@ -69,8 +74,10 @@ object TopK {
     var n = 0
 
     /** x better than position i's entry? */
-    private def better(score: Double, id: Long, i: Int): Boolean =
-      score > scores(i) || (score == scores(i) && id < ids(i))
+    private def better(score: Double, id: Long, i: Int): Boolean = {
+      val c = java.lang.Double.compare(score, scores(i))
+      c > 0 || (c == 0 && id < ids(i))
+    }
 
     def insert(id: Long, score: Double): Unit = {
       var pos = n

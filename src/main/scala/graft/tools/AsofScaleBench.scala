@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -22,11 +21,7 @@ object AsofScaleBench {
     val nRight = args.lift(1).map(_.toLong).getOrElse(4000000L)
     val nKeys = args.lift(2).map(_.toLong).getOrElse(100000L)
     val nPayload = args.lift(3).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.start("ERROR")
 
     val payloadNames = (0 until nPayload).map(i => s"p$i")
     val left = spark.range(nLeft).select(

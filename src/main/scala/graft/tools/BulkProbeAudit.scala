@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -37,14 +36,7 @@ object BulkProbeAudit {
     val k = args.lift(2).map(_.toInt).getOrElse(5)
     val nProbe = args.lift(3).map(_.toInt).getOrElse(2)
     val mode = args.lift(4).getOrElse("both")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = emb.count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, SimilarityGuard}
@@ -31,14 +30,7 @@ object ClusterednessAudit {
         "/root/repo/testdata_clustered:0.8",
         "/root/repo/testdata_sf10:0.8",
         "/root/repo/testdata_sf10:0.35")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
     cases.foreach { c =>
       val Array(dir, t) = c.split(":")
       val threshold = t.toDouble

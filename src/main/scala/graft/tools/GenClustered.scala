@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize a CLUSTERED embeddings table — the corpus
@@ -25,10 +24,7 @@ object GenClustered {
     val n = args.lift(1).map(_.toLong).getOrElse(500000L)
     val members = args.lift(2).map(_.toInt).getOrElse(50)
     val dim = args.lift(3).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
 
     // uniform in [-1, 1] from a keyed hash — same idea as the engine's
     // salted-md5 splits, xxhash64 for speed

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -52,14 +51,7 @@ object HierarchyRecallAudit {
     val threshold = args.lift(2).map(_.toDouble).getOrElse(0.35)
     val seedMode = args.lift(3).getOrElse("first")
     val nCoarseProbe = args.lift(4).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

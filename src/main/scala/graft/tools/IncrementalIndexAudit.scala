@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: prices INCREMENTAL posting-artifact maintenance against
@@ -27,12 +26,7 @@ object IncrementalIndexAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val span = args.lift(1).map(_.toLong).getOrElse(100L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.start("ERROR")
 
     val docs = graft.core.Tables.documents(spark, sfDir)
     // churn lands in 3 shards of every `block` (arg 3, default 10):

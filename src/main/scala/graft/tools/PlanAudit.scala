@@ -1,11 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.classic.GraftColumnBridge
 
-/** Dev tool: physical-plan audit of a catalog query — the per-operator
-  * checklist the scale reviews run (is the dim join broadcast, did a
-  * cartesian/BNLJ sneak in, how wide are the codegen spans, how many
-  * exchanges). Prints operator counts plus the formatted plan.
+/** Dev tool: physical-plan audit and one-run profile of a catalog
+  * query — the per-operator checklist the scale reviews run (is the dim
+  * join broadcast, did a cartesian/BNLJ sneak in, how wide are the
+  * codegen spans, how many exchanges) plus what the run cost: each
+  * stage's shuffle/spill bytes as it completes, then build and action
+  * wall time with the Spark jobs each launched. Prints operator counts,
+  * and the final plan with `--full`.
   *
   * Usage:
   *   runMain graft.tools.PlanAudit <queryName> [sfDir] [--full]
@@ -14,6 +18,10 @@ import org.apache.spark.sql.SparkSession
   * `--all` sweeps the whole catalog and FAILS (exit 1) if any query's
   * adaptive final plan contains a BroadcastNestedLoopJoin or
   * CartesianProduct — the quadratic-join regression net.
+  *
+  * The run is cold (first execution in a fresh JVM); for steady-state
+  * timing of a headline query use `graft.Bench` with
+  * `SPARK_GRAFT_BENCH_ONLY` and `SPARK_GRAFT_BENCH_PASSES`.
   */
 object PlanAudit {
 
@@ -32,15 +40,33 @@ object PlanAudit {
     }).toString
   }
 
+  /** Counts jobs and prints one line per completed stage: its shuffle
+    * read/write and spill bytes — which stage of a multi-phase plan
+    * eats a box's scratch disk at audit scales.
+    */
+  private final class StageLog extends SparkListener {
+    @volatile var jobs = 0
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val i = s.stageInfo
+      val m = i.taskMetrics
+      def mb(b: Long) = f"${b / 1e6}%.1fMB"
+      val secs = (for (sub <- i.submissionTime; done <- i.completionTime)
+        yield (done - sub) / 1000.0).getOrElse(-1.0)
+      val r = m.shuffleReadMetrics
+      println(f"stage ${i.stageId} $secs%.2fs tasks=${i.numTasks} " +
+        s"write=${mb(m.shuffleWriteMetrics.bytesWritten)}/" +
+        s"${m.shuffleWriteMetrics.recordsWritten} " +
+        s"read=${mb(r.remoteBytesRead + r.localBytesRead)}/${r.recordsRead} " +
+        s"spillDisk=${mb(m.diskBytesSpilled)} spillMem=${mb(m.memoryBytesSpilled)} " +
+        s"in=${mb(m.inputMetrics.bytesRead)} : ${i.name.take(90)}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(1).filterNot(_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.start("ERROR")
 
     if (args(0) == "--all") {
       // exemption sets are CATALOG-OWNED (graft.queries.Queries) so
@@ -97,7 +123,22 @@ object PlanAudit {
 
     val name = args(0)
     val full = args.contains("--full")
-    val plan = finalPlanOf(graft.SparkEntry.queries(name)(spark, sfDir))
+    val log = new StageLog
+    spark.sparkContext.addSparkListener(log)
+    val t0 = System.nanoTime()
+    val df = graft.SparkEntry.queries(name)(spark, sfDir)
+    val built = System.nanoTime()
+    GraftColumnBridge.awaitListeners(spark.sparkContext)
+    val buildJobs = log.jobs
+    val t1 = System.nanoTime()
+    val plan = finalPlanOf(df)
+    val done = System.nanoTime()
+    GraftColumnBridge.awaitListeners(spark.sparkContext)
+    val buildS = (built - t0) / 1e9
+    val actionS = (done - t1) / 1e9
+    println(f"== $name wall ${buildS + actionS}%.2fs jobs=${log.jobs}: " +
+      f"build $buildS%.2fs ($buildJobs jobs), action $actionS%.2fs " +
+      s"(${log.jobs - buildJobs} jobs) ==")
     def count(p: String): Int = p.r.findAllIn(plan).length
     println(s"== $name physical-plan audit ($sfDir) ==")
     Seq(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize an sf1.0-scale dataset as a 10× upscale of the
@@ -25,12 +25,8 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/root/repo/testdata_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // the driver's layout is ONE parquet FILE per table (and the DuckDB

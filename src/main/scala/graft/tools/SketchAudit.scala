@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -39,13 +39,7 @@ object SketchAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/repo/testdata_sf10")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "16g"))
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.start("ERROR")
     println(s"[sketchaudit] sfDir=$sfDir")
     val docs = Tables.documents(spark, sfDir)
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/audit tool: the 128-bit gram-key PRICE TAG. Runs the two
   * gram-keyed operators (q63 APSS TF-IDF, q83 corpus-self substring
   * dedup) in both key widths at the given sfDir, asserts the results
@@ -17,14 +15,7 @@ object WideKeyAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/repo/testdata_sf10")
     val which = args.lift(1).getOrElse("both")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.start()
 
     def timed(label: String)(df: => org.apache.spark.sql.DataFrame)
         : (Array[String], Double) = {

@@ -116,15 +116,9 @@ object GraftColumnBridge {
       case _ => df
     }
 
-  /** Register a function into an ALREADY-RUNNING session's registry —
-    * the live-session counterpart of `SparkSessionExtensions
-    * .injectFunction` (which only applies at session build time).
+  /** Block until every listener has seen every event posted so far, so
+    * counters a listener keeps are complete once an action returns.
     */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[SparkSession].sessionState.functionRegistry
-      .registerFunction(name, info, builder)
+  def awaitListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -343,6 +343,19 @@ class ApssSpec extends SparkSpec {
     assert(got == want, s"missed=${want diff got} extra=${got diff want}")
   }
 
+  test("candidate-build broadcast counts the dim key width: string " +
+      "dims stay under the byte budget") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    // between budget/88 (32-byte string key) and budget/64 (8-byte key)
+    val rows = 1800000.0
+    assert(rows * 64 <= Apss.CandBroadcastBytes &&
+      rows * 88 > Apss.CandBroadcastBytes)
+    assert(Apss.broadcastCandBuild(rows, LongType))
+    assert(!Apss.broadcastCandBuild(rows, StringType),
+      "a string-dim build side of this many rows overshoots the budget")
+    assert(Apss.broadcastCandBuild(1000000.0, StringType))
+  }
+
   test("declareHashPartitioned fails fast on a partition-count mismatch " +
       "instead of silently mis-joining") {
     val n = spark.sessionState.conf.numShufflePartitions

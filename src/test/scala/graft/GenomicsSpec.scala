@@ -51,10 +51,9 @@ class GenomicsSpec extends SparkSpec {
   }
 
   test("functions are SQL-registered via GraftExtensions") {
-    // a child session with the same injectFunction builders registered
-    val s2 = spark.newSession()
-    graft.functions.GraftExtensions.registerInto(s2)
-    val got = s2.sql("SELECT cigar_expand('2M1D1M', 'abc') AS e, " +
+    // the shared session is built with graft.GraftExtensions, which
+    // injects the SQL functions alongside the planner strategies
+    val got = spark.sql("SELECT cigar_expand('2M1D1M', 'abc') AS e, " +
       "percent_identity('AB-D', 'ABCD') AS p").head()
     assert(got.getString(0) == "ab-c")
     assert(got.getDouble(1) == 1.0)

@@ -8,9 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LintSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[(java.nio.file.Path, String)] = {
+  private def mainSources: Seq[(java.nio.file.Path, String)] =
+    sources("src/main/scala")
+
+  private def sources(dir: String): Seq[(java.nio.file.Path, String)] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
+    val root = java.nio.file.Paths.get(dir)
     scala.util.Using.resource(java.nio.file.Files.walk(root)) { w =>
       w.iterator().asScala
         .filter(_.toString.endsWith(".scala"))
@@ -68,6 +71,29 @@ class LintSpec extends AnyFunSuite {
     } yield s"$p:$ln: ${line.trim}"
     assert(hits.isEmpty,
       "tools must gate with sys.error/require, not assert:\n" + hits.mkString("\n"))
+  }
+
+  test("one session builder: SparkSession.builder appears in src/main " +
+      "only in graft/core/Session.scala, so every main runs Bench's plan") {
+    val hits = for {
+      (p, src) <- mainSources
+      (ln, line) <- codeLines(src)
+      if line.contains("SparkSession.builder")
+    } yield s"$p:$ln"
+    assert(hits.map(_.takeWhile(_ != ':')) ==
+      Seq("src/main/scala/graft/core/Session.scala"),
+      "build sessions through graft.core.Session:\n" + hits.mkString("\n"))
+  }
+
+  test("one extension class: a single class named GraftExtensions, so no " +
+      "session can load a copy missing a function or a strategy") {
+    val defn = """\bclass\s+GraftExtensions\b""".r
+    val hits = for {
+      (p, src) <- sources("src")
+      (ln, line) <- codeLines(src)
+      if defn.findFirstIn(line).isDefined
+    } yield s"$p:$ln"
+    assert(hits.size == 1, hits.mkString("\n"))
   }
 
   test("evidence-gate completeness: bench headline + named exemptions " +

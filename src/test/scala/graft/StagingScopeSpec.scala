@@ -48,10 +48,15 @@ class StagingScopeSpec extends SparkSpec {
     assert(eventuallyFreed(ckpt))
   }
 
+  /** The context's checkpoint dir is fixed once set, so every reliable
+    * test in the shared session names the same one.
+    */
+  private lazy val reliableDir =
+    java.nio.file.Files.createTempDirectory("graft-reliable-").toString
+
   test("reliable mode: stage survives via checkpoint files, results equal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-")
     spark.conf.set(StagingScope.ModeKey, "reliable")
-    spark.conf.set(StagingScope.DirKey, dir.toString)
+    spark.conf.set(StagingScope.DirKey, reliableDir)
     try {
       val df = (1L to 200L).toDF("id")
         .groupBy(pmod(col("id"), lit(7)).as("g")).agg(count(lit(1)).as("n"))
@@ -90,15 +95,40 @@ class StagingScopeSpec extends SparkSpec {
     val local = run()
     spark.conf.set(StagingScope.ModeKey, "off")
     val off = try run() finally spark.conf.unset(StagingScope.ModeKey)
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-")
     spark.conf.set(StagingScope.ModeKey, "reliable")
-    spark.conf.set(StagingScope.DirKey, dir.toString)
+    spark.conf.set(StagingScope.DirKey, reliableDir)
     val reliable = try run() finally {
       spark.conf.unset(StagingScope.ModeKey)
       spark.conf.unset(StagingScope.DirKey)
     }
     assert(off == local && reliable == local)
     StagingScope.drain()
+  }
+
+  test("reliable mode refuses a staging dir that differs from the " +
+      "context's existing checkpoint dir, naming both") {
+    spark.conf.set(StagingScope.ModeKey, "reliable")
+    try {
+      spark.conf.set(StagingScope.DirKey, reliableDir)
+      StagingScope.stage(Seq(1).toDF("x")).collect()
+      val have = spark.sparkContext.getCheckpointDir.get
+      val other =
+        java.nio.file.Files.createTempDirectory("graft-elsewhere-").toString
+      spark.conf.set(StagingScope.DirKey, other)
+      val e = intercept[IllegalStateException] {
+        StagingScope.stage(Seq(2).toDF("x"))
+      }
+      assert(e.getMessage.contains(other) && e.getMessage.contains(have),
+        e.getMessage)
+      // unset, the existing dir is used as before
+      spark.conf.unset(StagingScope.DirKey)
+      assert(StagingScope.stage(Seq(3).toDF("x")).collect().map(_.getInt(0))
+        .toSeq == Seq(3))
+    } finally {
+      spark.conf.unset(StagingScope.ModeKey)
+      spark.conf.unset(StagingScope.DirKey)
+      StagingScope.drain()
+    }
   }
 
   test("unknown mode refuses by name") {

@@ -46,23 +46,29 @@ class TopKSpec extends SparkSpec {
     val rows = (1 to 400).map { i =>
       (rng.nextInt(7), i.toLong, rng.nextInt(12).toDouble)
     }
-    for (parts <- Seq(1, 3, 8); k <- Seq(1, 3, 10)) {
-      val df = rows.toDF("g", "id", "score").repartition(parts)
+    // a NaN score inserted first: both buffers must rank it by the same
+    // total order instead of leaving it wherever it arrived
+    val withNaN = (0, 0L, Double.NaN) +: rows
+    for (input <- Seq(rows, withNaN); parts <- Seq(1, 3, 8); k <- Seq(1, 3, 10)) {
+      val df = input.toDF("g", "id", "score").repartition(parts)
       val native = df.groupBy("g")
         .agg(TopK.topKScored(col("id"), col("score"), k).as("top"))
         .select(col("g"), posexplode(col("top")))
         .select(col("g"), col("pos"), col("col.id"), col("col.score"))
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
+          java.lang.Double.doubleToLongBits(r.getDouble(3))))
         .toSet
-      val typed = rows.toDS().repartition(parts)
+      val typed = input.toDS().repartition(parts)
         .groupByKey(_._1)
         .mapValues { case (_, id, sc) => Scored(id, sc) }
         .agg(TopK.topK(k).toColumn.name("top"))
         .flatMap { case (g, top) =>
-          top.iterator.zipWithIndex.map { case (t, i) => (g, i, t.id, t.score) }
+          top.iterator.zipWithIndex.map { case (t, i) =>
+            (g, i, t.id, java.lang.Double.doubleToLongBits(t.score))
+          }
         }
         .collect().toSet
-      assert(native == typed, s"parts=$parts k=$k")
+      assert(native == typed, s"parts=$parts k=$k rows=${input.size}")
     }
   }
 
