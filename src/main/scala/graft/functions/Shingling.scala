@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.Column
@@ -10,6 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd kernels for the shingle/MinHash hot path of the
@@ -29,7 +32,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[MinHashSig]] == `array((0 until k).map(i => array_min(
   *    transform(sh, s => xxhash64(lit(i), s)))))` — the same
   *    `XxHash64Function` Spark's `xxhash64` lowers to, seeded
-  *    identically (seed 42, then the literal band index folded in).
+  *    identically (seed 42, then the literal band index folded in);
+  *  - [[Md5MinHashSig]] == `array((0 until k).map(i => array_min(
+  *    transform(sh, g => conv(substring(md5(concat("i:", g)), 1, 15),
+  *    16, 10)))))`, the portable signature a SQL engine replays as
+  *    `min(('0x' || substr(md5(i || ':' || gram), 1, 15))::BIGINT)`:
+  *    the top 60 bits of each md5 digest, read big-endian.
   */
 object Shingling {
 
@@ -143,6 +151,63 @@ object Shingling {
       i += 1
     }
     new GenericArrayData(mins.map(Long.box(_): Any))
+  }
+
+  /** Per-k cache of the UTF-8 permutation prefixes `"i:"` that
+    * [[md5MinHashImpl]] feeds the digest ahead of each shingle.
+    */
+  private val md5PrefixCache = new ConcurrentHashMap[Int, Array[Array[Byte]]]()
+  private def md5PrefixesOf(k: Int): Array[Array[Byte]] =
+    md5PrefixCache.computeIfAbsent(k, nh =>
+      Array.tabulate(nh)(i => s"$i:".getBytes(StandardCharsets.UTF_8)))
+
+  private val md5Digest = ThreadLocal.withInitial[MessageDigest](
+    () => MessageDigest.getInstance("MD5"))
+
+  /** Portable k-permutation MinHash signature in ONE pass over the
+    * shingle array. Permutation i hashes shingle g to the first 8
+    * bytes of `md5("i:" ++ g)` read big-endian and shifted `>>> 4`:
+    * the 15-hex-digit prefix `conv(substring(md5(..), 1, 15), 16, 10)`
+    * evaluates to. Null shingles are skipped and a permutation that
+    * saw none is null, as `array_min` over the nulls `md5(null)`
+    * gives; an empty array therefore yields k nulls.
+    */
+  def md5MinHashImpl(sh: ArrayData, k: Int): ArrayData = {
+    val n = sh.numElements()
+    val prefixes = md5PrefixesOf(k)
+    val md = md5Digest.get()
+    val digest = new Array[Byte](16)
+    // message buffer: the shingle sits at offset `at`, and each
+    // permutation's prefix is copied in just ahead of it, so one
+    // digest update covers the whole "i:gram" message
+    val at = prefixes(k - 1).length
+    var msg = new Array[Byte](at + 64)
+    // every hash is < 2^60, so MaxValue marks "no shingle seen"
+    val mins = Array.fill(k)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      if (!sh.isNullAt(i)) {
+        val g = sh.getUTF8String(i)
+        val len = g.numBytes()
+        if (at + len > msg.length) msg = new Array[Byte](at + len)
+        g.writeToMemory(msg, Platform.BYTE_ARRAY_OFFSET + at)
+        var b = 0
+        while (b < k) {
+          val p = prefixes(b)
+          System.arraycopy(p, 0, msg, at - p.length, p.length)
+          md.update(msg, at - p.length, p.length + len)
+          md.digest(digest, 0, 16)
+          var h = 0L
+          var j = 0
+          while (j < 8) { h = (h << 8) | (digest(j) & 0xffL); j += 1 }
+          h >>>= 4
+          if (h < mins(b)) mins(b) = h
+          b += 1
+        }
+      }
+      i += 1
+    }
+    new GenericArrayData(mins.map(m => if (m == Long.MaxValue) null else Long.box(m): Any))
   }
 
   /** Repetition statistics of the (NON-distinct) n-gram bag of a token
@@ -294,6 +359,20 @@ object Shingling {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
+  case class Md5MinHashSig(child: Expression, k: Int)
+      extends UnaryExpression with ExpectsInputTypes {
+    require(k >= 1, s"signature length must be >= 1, got $k")
+    override def nullIntolerant: Boolean = true
+    override def dataType: DataType = ArrayType(LongType, containsNull = true)
+    override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+    override protected def nullSafeEval(sh: Any): Any =
+      md5MinHashImpl(sh.asInstanceOf[ArrayData], k)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c =>
+        s"graft.functions.Shingling.md5MinHashImpl($c, $k)")
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
   case class ShingleStats(child: Expression, n: Int)
       extends UnaryExpression with ExpectsInputTypes {
     require(n >= 1, s"gram width must be >= 1, got $n")
@@ -330,6 +409,12 @@ object Shingling {
   /** One-pass MinHash signature over a MATERIALIZED shingle array. */
   def minHashSignature(sh: Column, numHashes: Int): Column =
     GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(sh), numHashes))
+
+  /** One-pass portable (md5) MinHash signature over a MATERIALIZED
+    * shingle array (see [[Md5MinHashSig]]).
+    */
+  def md5MinHashSignature(sh: Column, numHashes: Int): Column =
+    GraftColumnBridge.column(Md5MinHashSig(GraftColumnBridge.expression(sh), numHashes))
 
   /** One-pass n-gram repetition stats `(total, n_distinct, max_freq)`
     * over a MATERIALIZED token array (see [[ShingleStats]]).

@@ -661,14 +661,7 @@ object Decontaminate {
       .select(col("id"),
         (if (portable) Dedup.minHashSignaturePortable(col("sh"), numHashes)
          else Dedup.minHashSignature(col("sh"), numHashes)).as("sig"))
-      .select(col("id"),
-        explode(array((0 until bands).map { b =>
-          val sliced = slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
-          struct(
-            lit(b).as("band"),
-            (if (portable) concat_ws(",", sliced.cast("array<string>"))
-             else hash(sliced).cast("string")).as("bucket"))
-        }: _*)).as("bb"))
+      .select(col("id"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand, portable).as("bb"))
     // SKEW GUARD ([[graft.ops.Dedup.simHashPairs]] pattern, cross-set
     // form): a hot bucket on the TRAIN side — boilerplate mass-
     // duplicated across the corpus — concentrates dfT×dfB pair work in

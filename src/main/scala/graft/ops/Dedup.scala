@@ -37,19 +37,32 @@ object Dedup {
     graft.functions.Shingling.minHashSignature(shingleCol, numHashes)
 
   /** [[minHashSignature]] with a PORTABLE per-permutation hash — the
-    * low 60 bits of md5("i:gram"), reproducible bit-for-bit in any SQL
+    * top 60 bits of md5("i:gram"), reproducible bit-for-bit in any SQL
     * engine — so a banded screen built on it can be ORACLE-GATED
     * end-to-end (the [[simHashPortable]] move for the MinHash tier).
-    * Interpreted HOFs, numHashes passes per row: strictly a
-    * correctness twin; production signatures stay the native one-pass
-    * [[graft.functions.Shingling.MinHashSig]] kernel.
+    * Evaluated by the native one-pass kernel
+    * [[graft.functions.Shingling.Md5MinHashSig]]; the `transform` HOF
+    * it equals lives in ShinglingSpec as the parity reference. Its
+    * remaining cost over [[minHashSignature]] is the md5 itself.
     */
   def minHashSignaturePortable(shingleCol: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingleCol, g =>
-        conv(substring(md5(concat(lit(s"$i:"), g).cast("binary")), 1, 15),
-          16, 10).cast("long")))
-    }: _*)
+    graft.functions.Shingling.md5MinHashSignature(shingleCol, numHashes)
+
+  /** LSH band buckets of a signature column, one exploded
+    * `(band, bucket)` struct per band of `rowsPerBand` hashes. The
+    * portable bucket is the band's raw value tuple joined by ","
+    * (exact collision semantics, what a SQL oracle replays); the native
+    * one is the narrower murmur `hash` of the slice, a superset the
+    * exact verify prunes.
+    */
+  def bandBuckets(sig: Column, bands: Int, rowsPerBand: Int, portable: Boolean): Column =
+    explode(array((0 until bands).map { b =>
+      val sliced = slice(sig, b * rowsPerBand + 1, rowsPerBand)
+      struct(
+        lit(b).as("band"),
+        (if (portable) concat_ws(",", sliced.cast("array<string>"))
+         else hash(sliced).cast("string")).as("bucket"))
+    }: _*))
 
   /** Candidate probability of the (bands, rowsPerBand) banding for a
     * pair of true Jaccard `s`: `1 − (1 − s^r)^b` — the LSH S-curve.
@@ -143,15 +156,8 @@ object Dedup {
     // Bucket rows are narrow (bucket key + id): the shuffled self-join
     // never carries shingle arrays — at corpus scale that is the
     // difference between shuffling ids and shuffling the corpus.
-    val buckets = sigs.select(
-      col("id"),
-      explode(array((0 until bands).map { b =>
-        val sliced = slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
-        struct(
-          lit(b).as("band"),
-          (if (portable) concat_ws(",", sliced.cast("array<string>"))
-           else hash(sliced).cast("string")).as("bucket"))
-      }: _*)).as("bb"))
+    val buckets = sigs
+      .select(col("id"), bandBuckets(col("sig"), bands, rowsPerBand, portable).as("bb"))
       // both self-join sides replay the k-hash signature otherwise;
       // bucket rows are narrow (bucket key + id), so this is cheap
       .transform(graft.core.StagingScope.stage(_))

@@ -58,15 +58,7 @@ object DocStreams {
       .withColumn("sig",
         if (portable) Dedup.minHashSignaturePortable(col("sh"), numHashes)
         else Dedup.minHashSignature(col("sh"), numHashes))
-      .select(
-        col("*"),
-        explode(array((0 until bands).map { b =>
-          val sliced = slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
-          struct(
-            lit(b).as("band"),
-            (if (portable) concat_ws(",", sliced.cast("array<string>"))
-             else hash(sliced).cast("string")).as("bucket"))
-        }: _*)).as("bb"))
+      .select(col("*"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand, portable).as("bb"))
       .drop("sig")
   }
 

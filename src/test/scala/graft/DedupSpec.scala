@@ -111,6 +111,35 @@ class DedupSpec extends SparkSpec {
     assert(salted === lsh)
   }
 
+  test("portable minhash LSH runs no interpreted lambda: the md5 signature is the native kernel") {
+    // staging `off` keeps the signature inside this one executed plan
+    // instead of behind a checkpointed scan; an RDD source, because a
+    // local Seq's projections fold into a LocalTableScan at optimize time
+    spark.conf.set(graft.core.StagingScope.ModeKey, "off")
+    val plan = try {
+      val docs = spark.sparkContext.parallelize(corpus, 2).toDF("doc_id", "text")
+      val res = Dedup.minHashLsh(docs, "text", "doc_id",
+        shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5, portable = true)
+      assert(res.collect().nonEmpty) // runs THIS plan, so AQE's is final
+      res.queryExecution.executedPlan
+    } finally spark.conf.unset(graft.core.StagingScope.ModeKey)
+    import org.apache.spark.sql.execution.{SparkPlan, adaptive, exchange}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: adaptive.QueryStageExec => nodes(q.plan)
+      case r: exchange.ReusedExchangeExec => nodes(r.child)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    val exprs = nodes(plan).flatMap(_.expressions)
+    assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.Shingling.Md5MinHashSig])),
+      s"expected the md5 kernel in the plan:\n$plan")
+    val lambdas = exprs.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.LambdaFunction => e
+      case e: org.apache.spark.sql.catalyst.expressions.ArrayTransform => e
+    })
+    assert(lambdas.isEmpty, s"interpreted lambdas in the portable plan:\n$plan")
+  }
+
   test("simhash: identical docs collide, near-dups are close, determinism") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),

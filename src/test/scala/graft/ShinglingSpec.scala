@@ -22,6 +22,15 @@ class ShinglingSpec extends SparkSpec {
       array_min(transform(sh, s => xxhash64(lit(i), s)))
     }: _*)
 
+  // parity reference for the md5 kernel: one interpreted
+  // md5 -> hex -> base-16 parse per (shingle, permutation)
+  private def hofMd5MinHash(sh: org.apache.spark.sql.Column, k: Int) =
+    array((0 until k).map { i =>
+      array_min(transform(sh, g =>
+        conv(substring(md5(concat(lit(s"$i:"), g).cast("binary")), 1, 15),
+          16, 10).cast("long")))
+    }: _*)
+
   test("native tokens matches filter(split) on crafted cases") {
     val texts = Seq("a  b   c", "", "   ", " x", "x ", "héllo  wörld",
       "a\tb", "one two  three")
@@ -106,6 +115,37 @@ class ShinglingSpec extends SparkSpec {
     assert(r.getSeq[Any](0) == r.getSeq[Any](1))
   }
 
+  test("md5 minHashSignaturePortable matches the md5 HOF formulation") {
+    // the last text has multi-byte UTF-8 shingles (2- and 3-byte chars)
+    val texts = Seq("a b c d e f g", "q w e r t y", "a a a", "single",
+      "héllo wörld naïve café 東京 タワー")
+    for (k <- Seq(1, 8, 32)) {
+      val df = texts.toDF("text")
+        .select(TextAnalytics.tokens(col("text")).as("toks"))
+        .select(Shingling.sortedShingles(col("toks"), 2).as("sh"))
+        .where(size(col("sh")) > 0)
+        .select(
+          Dedup.minHashSignaturePortable(col("sh"), k).as("native"),
+          hofMd5MinHash(col("sh"), k).as("hof"))
+      val rows = df.collect()
+      assert(rows.length == texts.size - 1)
+      rows.foreach { r =>
+        assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"k=$k row=$r")
+      }
+    }
+  }
+
+  test("md5 signature of an empty or all-null shingle set is all nulls (HOF parity)") {
+    val df = Seq(Seq.empty[String], Seq[String](null, null)).toDF("sh")
+      .select(
+        Dedup.minHashSignaturePortable(col("sh"), 4).as("native"),
+        hofMd5MinHash(col("sh"), 4).as("hof"))
+    df.collect().foreach { r =>
+      assert(r.getSeq[Any](0) == Seq(null, null, null, null))
+      assert(r.getSeq[Any](0) == r.getSeq[Any](1))
+    }
+  }
+
   test("shingleStats matches explode/groupBy counting on crafted cases") {
     val texts = Seq(
       "a b c d e",
@@ -184,19 +224,21 @@ class ShinglingSpec extends SparkSpec {
         lit("a"), col("id").cast("string"), lit("b c")).as("text"))
       .select(TextAnalytics.tokens(col("text")).as("toks"))
       .select(Shingling.sortedShingles(col("toks"), 2).as("sh"))
-      .select(Dedup.minHashSignature(col("sh"), 8).as("sig"))
+      .select(Dedup.minHashSignature(col("sh"), 8).as("sig"),
+        Dedup.minHashSignaturePortable(col("sh"), 8).as("sig_md5"))
       .queryExecution.executedPlan
-    // the Project carrying all three kernels must sit INSIDE a
+    // the Project carrying all four kernels must sit INSIDE a
     // WholeStageCodegen stage (printed as the `*(n)` prefix)
-    val inCodegen = plan.exists {
+    def inCodegen(kernel: Class[_]) = plan.exists {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
         w.exists {
           case p: org.apache.spark.sql.execution.ProjectExec =>
-            p.projectList.toString.contains("minhashsig")
+            p.projectList.exists(_.exists(_.getClass == kernel))
           case _ => false
         }
       case _ => false
     }
-    assert(inCodegen, s"expected the kernel Project inside codegen:\n$plan")
+    for (kernel <- Seq(classOf[Shingling.MinHashSig], classOf[Shingling.Md5MinHashSig]))
+      assert(inCodegen(kernel), s"expected ${kernel.getSimpleName} inside codegen:\n$plan")
   }
 }
