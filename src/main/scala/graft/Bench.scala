@@ -32,10 +32,8 @@ object Bench {
     "q24_pivot_events",
     "q25_top_priced",
     "q26_minhash_lsh",
-    "q26b_minhash_lsh_portable",
     "q27b_simhash_pairs",
     "q28_lsh_ann",
-    "q28b_lsh_ann_portable",
     "q29_tree_stats",
     "q30_interval_merge",
     "q31_hour_bins",
@@ -65,7 +63,6 @@ object Bench {
     "q68_decontaminate_spans",
     "q69_decontaminate_jaccard",
     "q70_decontaminate_minhash",
-    "q70b_minhash_portable",
     "q71_excise_spans",
     "q72_decontam_pipeline",
     "q74_sequence_pack",
@@ -134,7 +131,7 @@ object Bench {
   val exempt: Map[String, String] = {
     val streaming = "streaming micro-batch pipeline; its batch twin is benched"
     val subsec = "sub-second variant; its operator family is in the headline"
-    val twin = "engine-hash path; benched via its portable twin"
+    val samePlan = "same plan as q26/q28/q70"
     Map(
       "q59_sessionize_stream" -> streaming,
       "q60_asof_stream" -> streaming,
@@ -162,11 +159,16 @@ object Bench {
       "q46_domain_roots" -> subsec,
       "q48_foster_graft" -> subsec,
       "q52_bpe_tokens" -> subsec,
-      "q27_simhash" -> (twin + " (q27b)"),
-      "q42_ivf_ann" -> (twin + " (q28b; q55 proves exactness)"),
-      "q51_embedding_neardup_lsh" -> (twin + " (q51b)"),
+      "q26b_minhash_lsh_portable" -> samePlan,
+      "q28b_lsh_ann_portable" -> samePlan,
+      "q70b_minhash_portable" -> samePlan,
+      "q27_simhash" -> "fingerprint stage of q27b, which is benched",
+      "q42_ivf_ann" ->
+        "fitted-quantizer ANN; q28's LSH ANN is benched and q55 proves exactness",
+      "q51_embedding_neardup_lsh" ->
+        "corpus-sized-bits form of q51b, which is benched",
       "q55_ivf_exact" ->
-        "exhaustive-probe exactness proof; the benched ANN paths are q28b/q42")
+        "exhaustive-probe exactness proof; the benched ANN path is q28")
   }
 
   /** 1-minute system load average from /proc/loadavg (-1.0 if absent),

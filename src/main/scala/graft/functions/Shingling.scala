@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{concat, hex, lit, lpad, xxhash64}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftColumnBridge
@@ -24,18 +24,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * per row; on the documents table that interpretation is ~80% of the
   * whole similarity-join runtime. One native pass per row removes it
   * while producing bit-identical output (parity is pinned by unit
-  * tests in TextAnalyticsSpec/DedupSpec):
+  * tests in ShinglingSpec):
   *
   *  - [[SortedShingles]] == `sort_array(array_distinct(transform(
   *    sequence(0, size-n), i => concat_ws(" ", slice(toks, i+1, n)))))`
   *    (empty when `size(toks) < n`);
-  *  - [[MinHashSig]] == `array((0 until k).map(i => array_min(
-  *    transform(sh, s => xxhash64(lit(i), s)))))` — the same
-  *    `XxHash64Function` Spark's `xxhash64` lowers to, seeded
-  *    identically (seed 42, then the literal band index folded in);
   *  - [[Md5MinHashSig]] == `array((0 until k).map(i => array_min(
   *    transform(sh, g => conv(substring(md5(concat("i:", g)), 1, 15),
-  *    16, 10)))))`, the portable signature a SQL engine replays as
+  *    16, 10)))))`, the MinHash signature a SQL engine replays as
   *    `min(('0x' || substr(md5(i || ':' || gram), 1, 15))::BIGINT)`:
   *    the top 60 bits of each md5 digest, read big-endian.
   */
@@ -120,39 +116,6 @@ object Shingling {
     new GenericArrayData(dedup)
   }
 
-  /** Per-k cache of the folded band seeds: seed(i) = xxhash64 of the
-    * int literal i under Spark's default seed 42 — the partial state
-    * `xxhash64(lit(i), s)` reaches after its first child.
-    */
-  private val seedCache = new ConcurrentHashMap[Int, Array[Long]]()
-  private def seedsOf(k: Int): Array[Long] =
-    seedCache.computeIfAbsent(k, nh =>
-      Array.tabulate(nh)(i => XxHash64Function.hash(i, IntegerType, 42L)))
-
-  /** k-permutation MinHash signature in ONE pass over the shingle
-    * array: k running minima, |sh|·k hash calls, zero allocation
-    * beyond the output. Empty input yields k nulls (what
-    * `array_min(transform(empty))` evaluates to).
-    */
-  def minHashImpl(sh: ArrayData, k: Int): ArrayData = {
-    val n = sh.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](k)) // k nulls
-    val seeds = seedsOf(k)
-    val mins = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val s = sh.getUTF8String(i)
-      var b = 0
-      while (b < k) {
-        val h = XxHash64Function.hash(s, StringType, seeds(b))
-        if (h < mins(b)) mins(b) = h
-        b += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins.map(Long.box(_): Any))
-  }
-
   /** Per-k cache of the UTF-8 permutation prefixes `"i:"` that
     * [[md5MinHashImpl]] feeds the digest ahead of each shingle.
     */
@@ -164,7 +127,7 @@ object Shingling {
   private val md5Digest = ThreadLocal.withInitial[MessageDigest](
     () => MessageDigest.getInstance("MD5"))
 
-  /** Portable k-permutation MinHash signature in ONE pass over the
+  /** k-permutation MinHash signature in ONE pass over the
     * shingle array. Permutation i hashes shingle g to the first 8
     * bytes of `md5("i:" ++ g)` read big-endian and shifted `>>> 4`:
     * the 15-hex-digit prefix `conv(substring(md5(..), 1, 15), 16, 10)`
@@ -345,20 +308,6 @@ object Shingling {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
-  case class MinHashSig(child: Expression, k: Int)
-      extends UnaryExpression with ExpectsInputTypes {
-    require(k >= 1, s"signature length must be >= 1, got $k")
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(LongType, containsNull = true)
-    override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-    override protected def nullSafeEval(sh: Any): Any =
-      minHashImpl(sh.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.Shingling.minHashImpl($c, $k)")
-    override protected def withNewChildInternal(c: Expression) = copy(child = c)
-  }
-
   case class Md5MinHashSig(child: Expression, k: Int)
       extends UnaryExpression with ExpectsInputTypes {
     require(k >= 1, s"signature length must be >= 1, got $k")
@@ -406,14 +355,10 @@ object Shingling {
   def orderedShingles(toks: Column, n: Int): Column =
     GraftColumnBridge.column(OrderedShingles(GraftColumnBridge.expression(toks), n))
 
-  /** One-pass MinHash signature over a MATERIALIZED shingle array. */
-  def minHashSignature(sh: Column, numHashes: Int): Column =
-    GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(sh), numHashes))
-
-  /** One-pass portable (md5) MinHash signature over a MATERIALIZED
-    * shingle array (see [[Md5MinHashSig]]).
+  /** One-pass md5 MinHash signature over a MATERIALIZED shingle
+    * array (see [[Md5MinHashSig]]).
     */
-  def md5MinHashSignature(sh: Column, numHashes: Int): Column =
+  def minHashSignature(sh: Column, numHashes: Int): Column =
     GraftColumnBridge.column(Md5MinHashSig(GraftColumnBridge.expression(sh), numHashes))
 
   /** One-pass n-gram repetition stats `(total, n_distinct, max_freq)`

@@ -629,8 +629,9 @@ object Decontaminate {
     * stream-static shape of [[graft.streaming.DocStreams]], batch form.
     *
     * Same signature/banding machinery as [[graft.ops.Dedup.minHashLsh]]
-    * (engine-seeded xxhash64 — rows-only under the oracle gate; exact
-    * recall is pinned against [[jaccardScreen]] in DecontaminateSpec).
+    * (md5 signatures and raw-value band buckets, so the oracle replays
+    * signature → band collision → exact-Jaccard verify in SQL; recall
+    * is pinned against [[jaccardScreen]] in DecontaminateSpec).
     * Returns `(id, bench_id, jaccard)` like the exact screen — missed
     * pairs are LSH false negatives, rarer as `bands` grows.
     */
@@ -643,25 +644,15 @@ object Decontaminate {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
-      bucketCap: Int = 4096,
-      portable: Boolean = false): DataFrame = {
+      bucketCap: Int = 4096): DataFrame = {
     val numHashes = bands * rowsPerBand
     val shT = graft.core.StagingScope.stage(
       shingleTable(train, textCol, idCol, shingleN))
     val shB = graft.core.StagingScope.stage(
       shingleTable(bench, textCol, idCol, shingleN))
-    // `portable = true` is the ORACLE-TWIN configuration (q70b): the
-    // md5-based signature a SQL oracle can replay bit-for-bit, and the
-    // band's RAW value slice as the bucket key (exact collision
-    // semantics — a murmur bucket is a superset the oracle can't
-    // express). Production screens keep the native signature kernel
-    // and the narrower hashed bucket; false-positive buckets are
-    // removed by the exact verify either way.
     def buckets(sh: DataFrame) = sh
-      .select(col("id"),
-        (if (portable) Dedup.minHashSignaturePortable(col("sh"), numHashes)
-         else Dedup.minHashSignature(col("sh"), numHashes)).as("sig"))
-      .select(col("id"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand, portable).as("bb"))
+      .select(col("id"), Dedup.minHashSignature(col("sh"), numHashes).as("sig"))
+      .select(col("id"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
     // SKEW GUARD ([[graft.ops.Dedup.simHashPairs]] pattern, cross-set
     // form): a hot bucket on the TRAIN side — boilerplate mass-
     // duplicated across the corpus — concentrates dfT×dfB pair work in

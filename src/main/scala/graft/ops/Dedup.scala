@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextAnalytics
 
 /** Document deduplication at pretraining-corpus scale: exact, MinHash+LSH
-  * near-dup, SimHash, and n-gram Jaccard. All hash functions are Spark's
-  * native codegen'd `xxhash64`/`hash`/`md5` — deterministic across runs
-  * and executors, no UDFs — so every stage is shuffle-bounded by design:
+  * near-dup, SimHash, and n-gram Jaccard. The similarity hashes derive
+  * from md5, so a SQL engine replays them bit-for-bit; salts and gram
+  * keys use `xxhash64`. All are native codegen'd — deterministic across
+  * runs and executors, no UDFs — so every stage is shuffle-bounded by design:
   * exact dedup is one groupBy on the content hash; MinHash-LSH shuffles
   * once on (band, bucket) instead of ever forming the O(n^2) pair space.
   */
@@ -25,43 +26,28 @@ object Dedup {
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
 
   /** k-permutation MinHash signature over a *materialized* shingle-array
-    * column. Each "permutation" i is xxhash64 seeded by i (mixed in as a
-    * literal column); the signature element is the min hash over the
-    * shingle set. Evaluated row-local, no shuffle — by the native
-    * one-pass kernel [[graft.functions.Shingling.MinHashSig]] (the
-    * equivalent `array_min(transform(...))` per band is interpreted,
-    * k passes, and dominated the LSH runtime; the unit-pinned parity
-    * lives in DedupSpec).
+    * column. Permutation i hashes a shingle to the top 60 bits of
+    * md5("i:gram"), reproducible bit-for-bit in any SQL engine, so a
+    * banded screen built on it is ORACLE-GATED end-to-end; the
+    * signature element is the min hash over the shingle set. Evaluated
+    * row-local, no shuffle — by the native one-pass kernel
+    * [[graft.functions.Shingling.Md5MinHashSig]] (the `transform` HOF
+    * it equals lives in ShinglingSpec as the parity reference).
     */
   def minHashSignature(shingleCol: Column, numHashes: Int): Column =
     graft.functions.Shingling.minHashSignature(shingleCol, numHashes)
 
-  /** [[minHashSignature]] with a PORTABLE per-permutation hash — the
-    * top 60 bits of md5("i:gram"), reproducible bit-for-bit in any SQL
-    * engine — so a banded screen built on it can be ORACLE-GATED
-    * end-to-end (the [[simHashPortable]] move for the MinHash tier).
-    * Evaluated by the native one-pass kernel
-    * [[graft.functions.Shingling.Md5MinHashSig]]; the `transform` HOF
-    * it equals lives in ShinglingSpec as the parity reference. Its
-    * remaining cost over [[minHashSignature]] is the md5 itself.
-    */
-  def minHashSignaturePortable(shingleCol: Column, numHashes: Int): Column =
-    graft.functions.Shingling.md5MinHashSignature(shingleCol, numHashes)
-
   /** LSH band buckets of a signature column, one exploded
     * `(band, bucket)` struct per band of `rowsPerBand` hashes. The
-    * portable bucket is the band's raw value tuple joined by ","
-    * (exact collision semantics, what a SQL oracle replays); the native
-    * one is the narrower murmur `hash` of the slice, a superset the
-    * exact verify prunes.
+    * bucket is the band's raw value tuple joined by "," — exact
+    * collision semantics, what a SQL oracle replays.
     */
-  def bandBuckets(sig: Column, bands: Int, rowsPerBand: Int, portable: Boolean): Column =
+  def bandBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
     explode(array((0 until bands).map { b =>
-      val sliced = slice(sig, b * rowsPerBand + 1, rowsPerBand)
       struct(
         lit(b).as("band"),
-        (if (portable) concat_ws(",", sliced.cast("array<string>"))
-         else hash(sliced).cast("string")).as("bucket"))
+        concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand)
+          .cast("array<string>")).as("bucket"))
     }: _*))
 
   /** Candidate probability of the (bands, rowsPerBand) banding for a
@@ -126,8 +112,7 @@ object Dedup {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
-      bucketCap: Int = 4096,
-      portable: Boolean = false): DataFrame = {
+      bucketCap: Int = 4096): DataFrame = {
     val numHashes = bands * rowsPerBand
     // Materialize shingles in their own projection so the signature's k
     // transforms reference one computed array instead of k inlined copies.
@@ -144,20 +129,14 @@ object Dedup {
       // materialize it once — storage is the shingle table, which the
       // verify joins shuffle anyway
       .transform(graft.core.StagingScope.stage(_))
-    // `portable = true` is the oracle-twin configuration (q26b):
-    // md5-based signatures a SQL oracle replays bit-for-bit, band
-    // buckets on the raw value tuple (exact collision semantics) —
-    // see [[graft.ops.Decontaminate.minHashScreen]]'s portable note.
     val sigs = shingled
-      .select(col("id"), col("sh"),
-        (if (portable) minHashSignaturePortable(col("sh"), numHashes)
-         else minHashSignature(col("sh"), numHashes)).as("sig"))
+      .select(col("id"), col("sh"), minHashSignature(col("sh"), numHashes).as("sig"))
 
     // Bucket rows are narrow (bucket key + id): the shuffled self-join
     // never carries shingle arrays — at corpus scale that is the
     // difference between shuffling ids and shuffling the corpus.
     val buckets = sigs
-      .select(col("id"), bandBuckets(col("sig"), bands, rowsPerBand, portable).as("bb"))
+      .select(col("id"), bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
       // both self-join sides replay the k-hash signature otherwise;
       // bucket rows are narrow (bucket key + id), so this is cheap
       .transform(graft.core.StagingScope.stage(_))
@@ -484,31 +463,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Shared SimHash assembly: every token votes +1/-1 on each of the
-    * low `bits` bits of its hash; positive sums set the bit.
-    * Implemented explode -> `bits` conditional sums -> bit assembly,
-    * i.e. one shuffle on the doc id with map-side partial aggregation.
-    */
-  private def simHashOf(
-      docs: DataFrame, textCol: String, idCol: String,
-      tokHash: Column => Column, bits: Int): DataFrame = {
-    val tok = docs.select(
-      col(idCol).as("id"),
-      explode(TextAnalytics.tokens(col(textCol))).as("tok"))
-    val h = tok.withColumn("h", tokHash(col("tok")))
-    val bitSums = (0 until bits).map { b =>
-      sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0, 1).otherwise(-1)).as(s"b$b")
-    }
-    val summed = h.groupBy("id").agg(bitSums.head, bitSums.tail: _*)
-    val fp = (0 until bits)
-      .map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ bitwiseOR _)
-    summed.select(col("id"), fp.as("simhash"))
-  }
-
-  /** 64-bit SimHash fingerprint per document over the engine-native
-    * token hash (xxhash64 — cheapest, not portable across engines).
-    */
   /** Winnowing-fingerprint near-dup pair screen — the JOIN consumer of
     * the MOSS fingerprints (Schleimer et al. SIGMOD 2003; the per-row
     * set form is [[graft.functions.TextAnalytics
@@ -614,24 +568,32 @@ object Dedup {
       .where(col("n_shared") >= minShared)
   }
 
-  def simHash(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    simHashOf(docs, textCol, idCol, t => xxhash64(t), 64)
-
-  /** [[simHash]] with a PORTABLE token hash — the low 60 bits of the
-    * token's md5 (15 hex chars, so the value is non-negative in any
-    * signed-64 engine) — bit-for-bit reproducible in standard SQL.
-    * This is what lets the chunk-blocked pair join ([[simHashPairs]])
-    * be ORACLE-GATED end-to-end: the oracle recomputes the signatures
-    * and brute-forces the hamming join, and the engine's blocked plan
-    * must match it exactly (q27b; the q55 exhaustive-probe trick for
-    * the SimHash tier). Production fingerprinting stays [[simHash]];
-    * the blocking/salting/verify machinery under test is identical.
+  /** 60-bit SimHash fingerprint per document: every token votes +1/-1
+    * on each bit of its hash, and positive sums set the bit. The token
+    * hash is the top 60 bits of the token's md5 (its first 15 hex
+    * chars, so the value is non-negative in any signed-64 engine) —
+    * bit-for-bit reproducible in standard SQL, which is what lets the
+    * fingerprints (q27) and the chunk-blocked pair join
+    * ([[simHashPairs]], q27b) be ORACLE-GATED end-to-end. Implemented
+    * explode -> 60 conditional sums -> bit assembly, i.e. one shuffle
+    * on the doc id with map-side partial aggregation.
     */
-  def simHashPortable(
-      docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    simHashOf(docs, textCol, idCol,
-      t => conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long"),
-      60)
+  def simHash(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
+    val bits = 60
+    val h = docs.select(
+      col(idCol).as("id"),
+      explode(TextAnalytics.tokens(col(textCol))).as("tok"))
+      .withColumn("h",
+        conv(substring(md5(col("tok").cast("binary")), 1, 15), 16, 10).cast("long"))
+    val bitSums = (0 until bits).map { b =>
+      sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0, 1).otherwise(-1)).as(s"b$b")
+    }
+    val summed = h.groupBy("id").agg(bitSums.head, bitSums.tail: _*)
+    val fp = (0 until bits)
+      .map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+      .reduce(_ bitwiseOR _)
+    summed.select(col("id"), fp.as("simhash"))
+  }
 
   /** SimHash near-dup pairs: block on 16-bit fingerprint chunks (two
     * near-identical docs differing in <= 3 bits must agree on at least
@@ -751,12 +713,7 @@ object Dedup {
       dim: Int,
       bitsPerTable: Int = 0,
       numTables: Int = 8,
-      seed: Long = 42L,
-      portable: Boolean = false,
       maxCandidates: Long = SimilarityGuard.Auto): DataFrame = {
-    require(!portable || bitsPerTable > 0,
-      "portable planes need explicit bitsPerTable (a static SQL oracle " +
-        "can't replay corpus-derived bits)")
     val v = col(vecCol).cast("array<double>")
     // read by the sizing count, the bucket fan-out, and both verify
     // attach joins — materialize the scan+cast once (the minHashLsh
@@ -777,12 +734,7 @@ object Dedup {
         math.max(3, math.min(24,
           math.ceil(math.log(nVecs / 32.0) / math.log(2.0)).toInt))
       }
-    // portable = true is the ORACLE-TWIN configuration (q51b):
-    // md5-derived planes a SQL oracle recomputes bit-for-bit
-    val tables = (0 until numTables).map { t =>
-      t -> (if (portable) Similarity.portableHyperplanes(dim, bits, t)
-            else Similarity.hyperplanes(dim, bits, seed + t))
-    }
+    val tables = (0 until numTables).map(t => t -> Similarity.hyperplanes(dim, bits, t))
     // The candidate stage is NARROW — ids only. Carrying the vectors
     // through the bucket join and pair-dedup multiplies the ~KB array
     // payload by the candidate count (the other half of the audit OOM);
@@ -797,7 +749,7 @@ object Dedup {
       // each replay the numTables × bits dot-product signature kernel
       .transform(graft.core.StagingScope.stage(_))
     // PRE-FLIGHT GUARD: bucket occupancy n/2^bits drives the self-join
-    // volume QUADRATICALLY, so a FIXED bits choice (the portable twin's
+    // volume QUADRATICALLY, so a FIXED bits choice (q51b's
     // static-SQL constraint, or a caller pin) that is right at one SF
     // out-spills the box ten SFs later — the round-11 100× audit killed
     // the disk exactly there (6 pinned bits, 200k vectors → ~2.5B

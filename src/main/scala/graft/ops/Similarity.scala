@@ -142,24 +142,16 @@ object Similarity {
         round(col("sim"), 4).as("sim"))
   }
 
-  /** Deterministic random hyperplanes (fixed seed) for sign-bit LSH. */
-  def hyperplanes(dim: Int, numPlanes: Int, seed: Long = 42L): Seq[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(numPlanes)(Array.fill(dim)(rng.nextGaussian()))
-  }
-
-  /** PORTABLE hyperplanes — every component derives from an md5 a SQL
-    * oracle replays bit-for-bit (the q70b trick applied to SRP):
+  /** Sign-bit LSH hyperplanes of one table — every component derives
+    * from an md5 a SQL oracle replays bit-for-bit:
     * component(t, p, i) = md5_60bit("t:p:i") / 2⁵⁹ − 1 ∈ [−1, 1).
     * The 15-hex-char prefix parses as a non-negative BIGINT on both
     * engines; long→double rounding and the power-of-two scale are
     * IEEE-identical, so DuckDB computes the very same doubles.
     * Uniform rather than Gaussian components — still a valid sign-LSH
-    * family for cosine (symmetric about 0), slightly worse angular
-    * uniformity; production paths keep [[hyperplanes]], this feeds the
-    * oracle-twin queries (q28b/q51b).
+    * family for cosine (symmetric about 0).
     */
-  def portableHyperplanes(dim: Int, numPlanes: Int, table: Int): Seq[Array[Double]] =
+  def hyperplanes(dim: Int, numPlanes: Int, table: Int): Seq[Array[Double]] =
     (0 until numPlanes).map { p =>
       Array.tabulate(dim) { i =>
         md5Hex60(s"$table:$p:$i").toDouble / 576460752303423488.0 - 1.0
@@ -913,16 +905,8 @@ object Similarity {
       k: Int,
       dim: Int,
       bitsPerTable: Int = 8,
-      numTables: Int = 4,
-      seed: Long = 42L,
-      portable: Boolean = false): DataFrame = {
-    // portable = true is the ORACLE-TWIN configuration (q28b): planes
-    // from [[portableHyperplanes]] so a SQL oracle recomputes the
-    // buckets; production keeps the seeded Gaussian planes
-    val tables = (0 until numTables).map { t =>
-      t -> (if (portable) portableHyperplanes(dim, bitsPerTable, t)
-            else hyperplanes(dim, bitsPerTable, seed + t))
-    }
+      numTables: Int = 4): DataFrame = {
+    val tables = (0 until numTables).map(t => t -> hyperplanes(dim, bitsPerTable, t))
     def withBuckets(df: DataFrame, id: String, vecOut: String): DataFrame = {
       val v = asDouble(col(vecCol))
       df.select(

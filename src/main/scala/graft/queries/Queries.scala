@@ -10,8 +10,9 @@ import graft.ops.{Apss, Closure, Dedup, RangeJoin, Similarity, TreeAlgebra}
 /** The engine's declared query catalog: one entry per implemented
   * operator family from SURVEY.md §2 plus the training-data-pipeline
   * operators (dedup / similarity / text analysis). Each query has an
-  * equivalent DuckDB oracle in `oracle` unless the operator's hashing is
-  * engine-specific (MinHash/SimHash/LSH — those get rows-only checks).
+  * equivalent DuckDB oracle in `oracles` unless its output depends on a
+  * fitted quantizer or corpus-sized LSH bits (q42, q51, q84 — those get
+  * rows-only checks).
   *
   * Numeric-parity rules used throughout (the driver hash-compares
   * values): aggregated doubles are `round(_, 2..4)`; counts/ranks are
@@ -866,7 +867,8 @@ object Queries {
   /** Embedding-cosine near-dup, exact baseline
     * ([[graft.ops.Dedup.embeddingNearDupExact]]): all pairs at cosine
     * ≥ 0.35 over the embeddings table, oracle-checked against DuckDB's
-    * brute force. The LSH scale path is q51 (rows-only + recall spec).
+    * brute force. The LSH scale paths are q51 (rows-only + recall spec)
+    * and its oracle-gated fixed-bits form q51b.
     */
   val q50EmbeddingNearDup: Q = (s, d) =>
     Dedup.embeddingNearDupExact(
@@ -874,7 +876,8 @@ object Queries {
 
   /** Embedding-cosine near-dup via SRP-LSH buckets + exact verify —
     * the shape that survives 10⁹ vectors (narrow (table,bucket)
-    * shuffle, no all-pairs). Engine-specific bucketing → rows-only;
+    * shuffle, no all-pairs). The bits per table are sized from the
+    * corpus, which a static SQL oracle can't replay → rows-only;
     * recall vs q50 is pinned in DedupSpec.
     */
   val q51EmbeddingNearDupLsh: Q = (s, d) =>
@@ -887,13 +890,12 @@ object Queries {
       threshold = 0.35, dim = 64, numTables = 12)
 
   /** Embedding near-dup via SRP-LSH under the FULL driver oracle gate:
-    * portable md5-derived planes ([[graft.ops.Similarity
-    * .portableHyperplanes]]) make the bucketing SQL-replayable — the
-    * oracle recomputes signatures, self-joins (table, bucket)
-    * collisions and verifies with exact cosine, so the engine's REAL
-    * banded self-join plan is hash-gated end-to-end (q28b's twin for
-    * the pair form). Static bits (a SQL oracle can't replay
-    * corpus-derived sizing); q51's auto-sized production path stays.
+    * md5-derived planes ([[graft.ops.Similarity.hyperplanes]]) make
+    * the bucketing SQL-replayable — the oracle recomputes signatures,
+    * self-joins (table, bucket) collisions and verifies with exact
+    * cosine, so the engine's REAL banded self-join plan is hash-gated
+    * end-to-end (q28's pair form). Static bits (a SQL oracle can't
+    * replay corpus-derived sizing); q51's auto-sized path stays.
     *
     * GATE-SCALE configuration by design (the q84b pattern): pinned
     * bits make bucket occupancy — and the self-join volume — grow
@@ -910,7 +912,7 @@ object Queries {
     Dedup.embeddingNearDupLsh(
       Tables.embeddings(s, d), "vec_id", "embedding",
       threshold = 0.35, dim = 64, bitsPerTable = 6, numTables = 8,
-      portable = true, maxCandidates = 100L * 1000 * 1000)
+      maxCandidates = 100L * 1000 * 1000)
 
   /** APSS exact cosine-threshold self-join with prefix filtering
     * ([[graft.ops.Apss.cosinePairs]]) over top-8-by-magnitude
@@ -1100,9 +1102,10 @@ object Queries {
   /** Fuzzy decontamination, MinHash+LSH scale path ([[graft.ops
     * .Decontaminate.minHashScreen]]): the benchmark's banded signature
     * index probed by each training doc's signature, candidates verified
-    * with exact Jaccard. Engine-seeded xxhash64 banding — rows-only
-    * under the oracle gate; recall vs the exact screen (q69) is pinned
-    * in DecontaminateSpec (mirroring q22<->q26).
+    * with exact Jaccard. The auto-tuned banding resolves to q70b's
+    * (8, 4), so both run the same plan and share one oracle; recall vs
+    * the exact screen (q69) is pinned in DecontaminateSpec (mirroring
+    * q22<->q26).
     */
   val q70DecontaminateMinhash: Q = (s, d) => {
     val docs = Tables.documents(s, d)
@@ -1114,16 +1117,14 @@ object Queries {
       .withColumnRenamed("id", "doc_id")
   }
 
-  /** The MinHash screen under the FULL driver oracle gate
-    * ([[graft.ops.Decontaminate.minHashScreen]] `portable = true`):
-    * signatures use the md5-60-bit permutation hash so the oracle
-    * recomputes them bit-for-bit, band buckets are the raw value
-    * slices (exact collision semantics), and the oracle replays
-    * signature → band collision → exact-Jaccard verify in SQL — so
-    * the REAL banding/salting/verify machinery gets a hash-match row
-    * (q27b's move for the MinHash tier). q70's native-kernel screen
-    * stays the production path; its recall pin vs q69 lives in
-    * DecontaminateSpec.
+  /** The MinHash screen with its banding pinned instead of derived
+    * ([[graft.ops.Decontaminate.minHashScreen]]): signatures use the
+    * md5-60-bit permutation hash so the oracle recomputes them
+    * bit-for-bit, band buckets are the raw value slices (exact
+    * collision semantics), and the oracle replays signature → band
+    * collision → exact-Jaccard verify in SQL — so the REAL
+    * banding/salting/verify machinery gets a hash-match row. Same plan
+    * and oracle as q70.
     */
   val q70bMinhashPortable: Q = (s, d) => {
     val docs = Tables.documents(s, d)
@@ -1131,7 +1132,7 @@ object Queries {
       docs.where(col("doc_id") % 20 =!= 0),
       docs.where(col("doc_id") % 20 === 0),
       "text", "doc_id", shingleN = 2, bands = 8, rowsPerBand = 4,
-      threshold = 0.5, portable = true)
+      threshold = 0.5)
       .withColumnRenamed("id", "doc_id")
   }
 
@@ -1260,7 +1261,7 @@ object Queries {
         .select("id_a", "id_b"))
       .withColumnRenamed("id", "doc_id")
 
-  // ---- Engine-hash-specific operators: rows-only checks (no oracle) ----
+  // ---- Media features and similarity-hash operators ----
 
   /** Multimodal feature extraction: batched mapPartitions decode-stub +
     * deterministic fake embedding. The float features are emitted as
@@ -1346,11 +1347,10 @@ object Queries {
         md5(col("means_csv").cast("binary")).as("means_digest"))
   }
 
-  /** MinHash+LSH near-dup candidates, verified by exact Jaccard.
-    * xxhash64-based — not oracle-expressible, validated by unit tests +
-    * cross-check against q22's exact pairs. Measured cost: 0.81 s warm
-    * median on perfbench `similarity_sf0.01` (4-core VM, 10 runs), vs
-    * 0.91 s for its oracle-gated twin q26b on the same runs.
+  /** MinHash+LSH near-dup candidates, verified by exact Jaccard, with
+    * the banding derived from the threshold. It resolves to q26b's
+    * (8, 4), so both run the same md5 plan and share one oracle;
+    * recall vs q22's exact pairs is pinned in DedupSpec.
     */
   val q26MinHashLsh: Q = (s, d) =>
     // auto-tuned banding: lshBanding(0.5, 32) = (8, 4), the measured
@@ -1359,71 +1359,59 @@ object Queries {
       Tables.documents(s, d), "text", "doc_id",
       shingleN = 2, threshold = 0.5, numHashes = 32)
 
-  /** The MinHash+LSH SELF-join under the full driver oracle gate
-    * ([[graft.ops.Dedup.minHashLsh]] `portable = true`): portable md5
-    * permutation hashes + raw-value band buckets, so the oracle
-    * replays signature → band collision → exact-Jaccard verify
-    * against the engine's banded + skew-salted self-join plan (the
-    * cross-set twin is q70b). Both signatures are native one-pass
-    * kernels; the md5 permutation hash costs q26b 0.91 s warm median
-    * on perfbench `similarity_sf0.01` (4-core VM, 10 runs) against
-    * q26's 0.81 s, and q26's xxhash64 path stays the production
-    * near-dup screen.
+  /** The MinHash+LSH SELF-join with its banding pinned
+    * ([[graft.ops.Dedup.minHashLsh]]): md5 permutation hashes +
+    * raw-value band buckets, so the oracle replays signature → band
+    * collision → exact-Jaccard verify against the engine's banded +
+    * skew-salted self-join plan (the cross-set form is q70). The
+    * signature is the native one-pass kernel; 0.91 s warm median on
+    * perfbench `similarity_sf0.01` (4-core VM, 10 runs).
     */
   val q26bMinhashLshPortable: Q = (s, d) =>
     Dedup.minHashLsh(
       Tables.documents(s, d), "text", "doc_id",
-      shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5,
-      portable = true)
+      shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5)
 
-  /** SimHash 64-bit fingerprints per document. */
+  /** SimHash 60-bit md5 fingerprints per document
+    * ([[graft.ops.Dedup.simHash]]), replayed by the oracle bit-for-bit.
+    */
   val q27SimHash: Q = (s, d) =>
     Dedup.simHash(Tables.documents(s, d), "text", "doc_id")
 
   /** SimHash near-dup PAIRS under the full driver oracle gate
-    * ([[graft.ops.Dedup.simHashPortable]] + [[graft.ops.Dedup
-    * .simHashPairs]]): signatures use the portable md5-60-bit token
-    * hash so the oracle can recompute them bit-for-bit in SQL and
-    * brute-force the hamming join; the engine side runs the REAL
+    * ([[graft.ops.Dedup.simHash]] + [[graft.ops.Dedup.simHashPairs]]):
+    * the oracle recomputes q27's md5-60-bit signatures in SQL and
+    * brute-forces the hamming join; the engine side runs the REAL
     * chunk-blocked + skew-salted pair plan, so the gate proves
     * blocking == exhaustive (pigeonhole: ≤ 3 differing bits can touch
     * at most 3 of the 4 16-bit chunks, so every qualifying pair
-    * agrees on some chunk). q27's xxhash64 fingerprints remain the
-    * production path; this is its hash-portable oracle twin.
+    * agrees on some chunk).
     */
   val q27bSimhashPairs: Q = (s, d) =>
     Dedup.simHashPairs(
-      Dedup.simHashPortable(Tables.documents(s, d), "text", "doc_id"),
+      Dedup.simHash(Tables.documents(s, d), "text", "doc_id"),
       maxHamming = 3)
       .withColumn("hamming", col("hamming").cast("long"))
 
-  /** SRP-LSH approximate nearest neighbors (bucketed candidates + exact
-    * re-rank); recall is validated in tests against q21's exact top-k.
+  /** SRP-LSH approximate nearest neighbors under the FULL DuckDB
+    * oracle gate ([[graft.ops.Similarity.hyperplanes]]): hyperplane
+    * components derive from md5 — both engines compute the SAME
+    * doubles, so DuckDB replays bucketing (sign bits → bucket id), the
+    * (table, bucket) candidate join and the exact-cosine re-rank
+    * bit-for-bit. Recall is validated in tests against q21's exact
+    * top-k.
     */
   val q28LshAnn: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
     Similarity.lshCosineTopK(
       emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
       k = 5, dim = 64, bitsPerTable = 6, numTables = 6)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
-  /** SRP-LSH ANN under the FULL driver oracle gate ([[graft.ops
-    * .Similarity.portableHyperplanes]]): hyperplane components derive
-    * from md5 — both engines compute the SAME doubles, so DuckDB
-    * replays bucketing (sign bits → bucket id), the (table, bucket)
-    * candidate join and the exact-cosine re-rank bit-for-bit. The
-    * engine side runs the REAL bucketed plan; q28's seeded Gaussian
-    * planes stay the production path (this is its hash-portable twin,
-    * the q26b/q27b/q70b pattern applied to the SRP tier).
-    */
-  val q28bLshAnnPortable: Q = (s, d) => {
-    val emb = Tables.embeddings(s, d)
-    Similarity.lshCosineTopK(
-      emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-      k = 5, dim = 64, bitsPerTable = 6, numTables = 6, portable = true)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"))
-  }
+  /** q28 without the `sim` column. */
+  val q28bLshAnnPortable: Q = (s, d) =>
+    q28LshAnn(s, d).drop("sim")
 
   /** IVF-Flat ANN (k-means coarse quantizer, nProbe cell probing +
     * exact re-rank) — the second scale path besides LSH; recall
@@ -1501,25 +1489,19 @@ object Queries {
     * stream probing the benchmark's static MinHash index, exact-Jaccard
     * verify, watermark-bounded multi-band dedup — the incremental form
     * of q70 (screen every newly crawled batch against the benchmark
-    * index forever). Rows-only under the driver's gate like its batch
-    * twin; StreamGateSpec pins exact equality to
-    * [[graft.ops.Decontaminate.minHashScreen]] on the bounded input.
+    * index forever). Gated by q70's oracle; StreamGateSpec pins exact
+    * equality to [[graft.ops.Decontaminate.minHashScreen]] on the
+    * bounded input.
     */
   val q73DecontaminateStream: Q = (s, d) =>
     graft.streaming.StreamGate.decontaminateScreenAvailableNow(s, d)
 
-  /** The streaming decontamination screen under the FULL driver oracle
-    * gate: the stream's MinHash index and probe signatures switch to
-    * the portable md5 configuration (q70b's replay — same banding,
-    * same raw-value bucket keys), so the watermark-bounded streaming
-    * machinery itself (file-sliced micro-batches, stream-static index
-    * join, in-stream dedup state) is hash-gated against the SQL
-    * replay instead of spec-pinned. q73's engine-hash path stays the
-    * production screen.
+  /** Same plan and oracle as q73: the watermark-bounded streaming
+    * machinery (file-sliced micro-batches, stream-static index join,
+    * in-stream dedup state) hash-gated against q70's SQL replay.
     */
   val q73bDecontaminateStreamPortable: Q = (s, d) =>
-    graft.streaming.StreamGate.decontaminateScreenAvailableNow(
-      s, d, portable = true)
+    graft.streaming.StreamGate.decontaminateScreenAvailableNow(s, d)
 
   /** §2.10 stream-static decorate, gated: each micro-batch
     * broadcast-joins the static customer dimension (the reference's
@@ -1833,7 +1815,7 @@ object Queries {
     * first 16 vectors by id, ties to the lower centroid — so DuckDB
     * recomputes cell assignment, 2-probe inflation, within-cell pair
     * generation and the exact-cosine verify bit-for-bit (the
-    * q26b/q27b/q70b portable-twin pattern applied to cluster scoping).
+    * q26/q27/q70 md5-replay pattern applied to cluster scoping).
     * The ENGINE side still runs the real plan: multi-probe assignment,
     * Σ|cell|²/2 pre-flight guard, skew-blocked triangle join, canonical
     * pair dedup. q84's fitted k-means quantizer stays the production
@@ -2355,10 +2337,10 @@ object Queries {
     * benchmark's banded index, CARRY the prior round's verdicts for
     * unchanged docs (valid because the screen is a pure per-doc
     * function of (text, benchmark) and the benchmark is fixed across
-    * versions). Runs the screen's portable (md5-60-bit) configuration
-    * so THE ORACLE IS THE EQUIVALENCE PROOF: it replays the FULL
-    * MinHash+LSH+verify screen over all of v2 — the incremental union
-    * must be hash-identical to recomputing everything.
+    * versions). The screen's md5-60-bit signatures make THE ORACLE THE
+    * EQUIVALENCE PROOF: it replays the FULL MinHash+LSH+verify screen
+    * over all of v2 — the incremental union must be hash-identical to
+    * recomputing everything.
     */
   val q105IncrementalNearDup: Q = (s, d) => {
     val docs = Tables.documents(s, d)
@@ -2372,7 +2354,7 @@ object Queries {
     def screen(train: org.apache.spark.sql.DataFrame) =
       graft.ops.Decontaminate.minHashScreen(
         train, bench, "text", "doc_id", shingleN = 2, bands = 8,
-        rowsPerBand = 4, threshold = 0.5, portable = true)
+        rowsPerBand = 4, threshold = 0.5)
         .withColumnRenamed("id", "doc_id")
     // the previous round's artifact (in production: read back, not
     // recomputed — recomputed here so the query is self-contained)
@@ -3297,7 +3279,67 @@ object Queries {
                ORDER BY score DESC, doc_id) AS rank
            FROM sc) WHERE rank <= 10"""
 
-  /** Shared by q70b (batch) and q73b (streaming): full MinHash+LSH
+  /** Full SRP-LSH ANN replay of q28/q28b: md5-derived plane
+    * components (identical doubles on both engines — 15-hex-char
+    * BIGINT / 2^59 − 1), sign bits pack into per-table buckets,
+    * candidates share any (table, bucket), exact cosine re-ranks with
+    * neighbor-id ties; `outCols` picks from query_id, rank,
+    * neighbor_id and sim.
+    */
+  private def lshAnnOracle(outCols: String): String =
+    s"""WITH pl AS (
+           SELECT ts.t, ps.p, isq.i,
+             ('0x' || substr(md5(ts.t || ':' || ps.p || ':' || isq.i), 1, 15))::BIGINT
+               / 576460752303423488.0 - 1.0 AS c
+           FROM generate_series(0, 5) ts(t),
+                generate_series(0, 5) ps(p),
+                generate_series(0, 63) isq(i)),
+         proj AS (
+           SELECT e.vec_id, pl.t, pl.p,
+             sum(e.embedding[pl.i + 1]::DOUBLE * pl.c) AS dot
+           FROM embeddings e JOIN pl ON pl.i < len(e.embedding)
+           GROUP BY 1, 2, 3),
+         buck AS (
+           SELECT vec_id, t,
+             sum(CASE WHEN dot >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS bucket
+           FROM proj GROUP BY 1, 2),
+         cand AS (
+           SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+           FROM buck q JOIN buck c ON q.t = c.t AND q.bucket = c.bucket
+           WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
+         SELECT $outCols FROM (
+           SELECT cand.query_id, cand.neighbor_id,
+             round(list_cosine_similarity(a.embedding::DOUBLE[],
+                                          b.embedding::DOUBLE[]), 4) AS sim,
+             row_number() OVER (PARTITION BY cand.query_id
+               ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
+                                               b.embedding::DOUBLE[]) DESC,
+                        cand.neighbor_id) AS rank
+           FROM cand
+             JOIN embeddings a ON a.vec_id = cand.query_id
+             JOIN embeddings b ON b.vec_id = cand.neighbor_id)
+         WHERE rank <= 5"""
+
+  /** SimHash replay ending in `fp(doc_id, simhash)`, shared by q27 and
+    * q27b: the md5-60-bit token hash (15 hex chars parse as a
+    * non-negative BIGINT on both engines), +1/-1 bit votes, positive
+    * sums set the bit.
+    */
+  private val simhashFp: String =
+    s"""t AS (SELECT doc_id, unnest($toks) AS tok FROM documents),
+         h AS (SELECT doc_id,
+                 ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM t),
+         votes AS (
+           SELECT doc_id, b.b AS b,
+             sum(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
+           FROM h, (SELECT unnest(generate_series(0, 59)) AS b) b
+           GROUP BY 1, 2),
+         fp AS (SELECT doc_id,
+                  sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT
+                    AS simhash
+                FROM votes GROUP BY doc_id)"""
+
+  /** Shared by q70/q70b (batch) and q73/q73b (streaming): full MinHash+LSH
     * replay — md5-60-bit permutation hashes (15 hex chars parse as
     * non-negative BIGINT on both engines), per-doc min per permutation,
     * 8 bands × 4 rows collide on the exact value tuple, candidates
@@ -3305,8 +3347,8 @@ object Queries {
     * streaming screen must equal this batch answer verbatim (its dedup
     * state never expires mid-run), so ONE oracle gates both forms.
     */
-  private lazy val minhashPortableCrossOracle: String =
-    minhashPortableOracleOver("SELECT doc_id, text FROM documents")
+  private lazy val minhashCrossOracle: String =
+    minhashOracleOver("SELECT doc_id, text FROM documents")
 
   /** The same full MinHash+LSH replay over a caller-supplied
     * `(doc_id, text)` relation — q105 reuses it with the v2 snapshot
@@ -3314,7 +3356,7 @@ object Queries {
     * so the oracle IS the full-recompute equivalence proof for the
     * incremental screen.
     */
-  private def minhashPortableOracleOver(docsSql: String): String =
+  private def minhashOracleOver(docsSql: String): String =
     s"""WITH t AS (
            SELECT doc_id,
              list_distinct(list_transform(generate_series(1, len(l) - 1),
@@ -3851,23 +3893,11 @@ object Queries {
          FROM lineitem
          ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
          LIMIT 100""",
+    "q27_simhash" -> s"WITH $simhashFp SELECT doc_id AS id, simhash FROM fp",
     "q27b_simhash_pairs" ->
-      // portable-simhash replay: same md5-60-bit token hash (15 hex
-      // chars parse as a non-negative BIGINT on both engines), same
-      // +1/-1 bit votes, then a BRUTE-FORCE hamming join — the engine's
-      // chunk-blocked plan must reproduce it exactly
-      s"""WITH t AS (SELECT doc_id, unnest($toks) AS tok FROM documents),
-         h AS (SELECT doc_id,
-                 ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM t),
-         votes AS (
-           SELECT doc_id, b.b AS b,
-             sum(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-           FROM h, (SELECT unnest(generate_series(0, 59)) AS b) b
-           GROUP BY 1, 2),
-         fp AS (SELECT doc_id,
-                  sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT
-                    AS simhash
-                FROM votes GROUP BY doc_id),
+      // the q27 fingerprints, then a BRUTE-FORCE hamming join — the
+      // engine's chunk-blocked plan must reproduce it exactly
+      s"""WITH $simhashFp,
          pairs AS (
            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
@@ -4146,43 +4176,10 @@ object Queries {
                 round(list_cosine_similarity(a.v, b.v), 4) AS sim
          FROM e a JOIN e b ON a.vec_id < b.vec_id
          WHERE list_cosine_similarity(a.v, b.v) >= 0.35""",
-    "q28b_lsh_ann_portable" ->
-      // full SRP-LSH replay: md5-derived plane components (identical
-      // doubles on both engines — 15-hex-char BIGINT / 2^59 − 1), sign
-      // bits pack into per-table buckets, candidates share any
-      // (table, bucket), exact cosine re-ranks with neighbor-id ties
-      """WITH pl AS (
-           SELECT ts.t, ps.p, isq.i,
-             ('0x' || substr(md5(ts.t || ':' || ps.p || ':' || isq.i), 1, 15))::BIGINT
-               / 576460752303423488.0 - 1.0 AS c
-           FROM generate_series(0, 5) ts(t),
-                generate_series(0, 5) ps(p),
-                generate_series(0, 63) isq(i)),
-         proj AS (
-           SELECT e.vec_id, pl.t, pl.p,
-             sum(e.embedding[pl.i + 1]::DOUBLE * pl.c) AS dot
-           FROM embeddings e JOIN pl ON pl.i < len(e.embedding)
-           GROUP BY 1, 2, 3),
-         buck AS (
-           SELECT vec_id, t,
-             sum(CASE WHEN dot >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS bucket
-           FROM proj GROUP BY 1, 2),
-         cand AS (
-           SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-           FROM buck q JOIN buck c ON q.t = c.t AND q.bucket = c.bucket
-           WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-         SELECT query_id, rank, neighbor_id FROM (
-           SELECT cand.query_id, cand.neighbor_id,
-             row_number() OVER (PARTITION BY cand.query_id
-               ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
-                                               b.embedding::DOUBLE[]) DESC,
-                        cand.neighbor_id) AS rank
-           FROM cand
-             JOIN embeddings a ON a.vec_id = cand.query_id
-             JOIN embeddings b ON b.vec_id = cand.neighbor_id)
-         WHERE rank <= 5""",
+    "q28_lsh_ann" -> lshAnnOracle("query_id, rank, neighbor_id, sim"),
+    "q28b_lsh_ann_portable" -> lshAnnOracle("query_id, rank, neighbor_id"),
     "q51b_embedding_neardup_lsh_portable" ->
-      // pair form of the q28b replay: SELF-join on shared
+      // pair form of the q28 replay: SELF-join on shared
       // (table, bucket), id_a < id_b, exact cosine >= 0.35
       """WITH pl AS (
            SELECT ts.t, ps.p, isq.i,
@@ -4430,12 +4427,14 @@ object Queries {
              JOIN t tb ON tb.doc_id = c.id_b)
          SELECT id_a, id_b, round(j, 4) AS jaccard
          FROM verify WHERE j >= 0.5""",
-    // the engine's banded/salted batch plan must match the portable
-    // replay ([[minhashPortableCrossOracle]])
-    "q70b_minhash_portable" -> minhashPortableCrossOracle,
+    // the engine's banded/salted batch plan must match the replay
+    // ([[minhashCrossOracle]])
+    "q70_decontaminate_minhash" -> minhashCrossOracle,
+    "q70b_minhash_portable" -> minhashCrossOracle,
     // same oracle, STREAMING form: bounded input + non-expiring dedup
     // state make the streamed screen equal the batch answer
-    "q73b_decontaminate_stream_portable" -> minhashPortableCrossOracle,
+    "q73_decontaminate_stream" -> minhashCrossOracle,
+    "q73b_decontaminate_stream_portable" -> minhashCrossOracle,
     "q69_decontaminate_jaccard" ->
       // cross-set distinct-2-gram Jaccard: intersection via the gram
       // equi-join, union by inclusion-exclusion over the set sizes
@@ -5194,10 +5193,10 @@ object Queries {
             FROM (SELECT doc_id, $wideToks AS l0 FROM documents)
             WHERE doc_id < 8"""),
     "q105_incremental_neardup" ->
-      // THE EQUIVALENCE PROOF: the full portable MinHash+LSH+verify
+      // THE EQUIVALENCE PROOF: the full MinHash+LSH+verify
       // screen replayed over ALL of v2 — the engine's carry-unchanged
       // + re-screen-delta union must hash-match the full recompute
-      minhashPortableOracleOver(
+      minhashOracleOver(
         """SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0
            UNION ALL
            SELECT doc_id,
@@ -5666,9 +5665,12 @@ object Queries {
 
   /** The streaming forms are gated against their batch twins' oracles
     * VERBATIM: on bounded input, streaming sessionization / as-of
-    * enrichment must produce exactly the batch answer.
+    * enrichment must produce exactly the batch answer. So is a query
+    * whose derived parameters resolve to its twin's pinned ones.
     */
   val oracles: Map[String, String] = oraclesBase ++ Map(
+    // derived banding resolves to the pinned (8, 4): one plan, one oracle
+    "q26_minhash_lsh" -> oraclesBase("q26b_minhash_lsh_portable"),
     "q59_sessionize_stream" -> oraclesBase("q10_sessionize"),
     "q60_asof_stream" -> oraclesBase("q39_asof_join"),
     "q61_components_stream" -> oraclesBase("q53_dedup_components"),

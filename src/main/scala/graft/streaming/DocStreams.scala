@@ -27,18 +27,15 @@ object DocStreams {
       idCol: String,
       shingleN: Int = 3,
       bands: Int = 8,
-      rowsPerBand: Int = 4,
-      portable: Boolean = false): DataFrame =
-    bucketed(corpus, textCol, idCol, shingleN, bands, rowsPerBand, portable)
+      rowsPerBand: Int = 4): DataFrame =
+    bucketed(corpus, textCol, idCol, shingleN, bands, rowsPerBand)
       .select(col("bb"), col("id").as("corpus_id"), col("sh").as("corpus_sh"))
 
   /** Shared shingle→signature→band-bucket derivation — pure column
     * expressions, so it runs identically on batch and streaming frames.
-    * `portable = true` is the ORACLE-TWIN configuration (q73b, mirroring
-    * [[graft.ops.Decontaminate.minHashScreen]]'s flag): md5-based
-    * signatures and the band's raw value tuple as the bucket key, so a
-    * SQL oracle replays collisions bit-for-bit; the default keeps the
-    * native signature kernel and the narrower hashed bucket.
+    * Signatures and bucket keys are those of
+    * [[graft.ops.Decontaminate.minHashScreen]], so a SQL oracle replays
+    * collisions bit-for-bit.
     */
   private def bucketed(
       docs: DataFrame,
@@ -46,8 +43,7 @@ object DocStreams {
       idCol: String,
       shingleN: Int,
       bands: Int,
-      rowsPerBand: Int,
-      portable: Boolean): DataFrame = {
+      rowsPerBand: Int): DataFrame = {
     val numHashes = bands * rowsPerBand
     docs
       .withColumn("id", col(idCol))
@@ -55,10 +51,8 @@ object DocStreams {
         graft.functions.Shingling.sortedShingles(
           TextAnalytics.tokens(col(textCol)), shingleN))
       .where(size(col("sh")) > 0)
-      .withColumn("sig",
-        if (portable) Dedup.minHashSignaturePortable(col("sh"), numHashes)
-        else Dedup.minHashSignature(col("sh"), numHashes))
-      .select(col("*"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand, portable).as("bb"))
+      .withColumn("sig", Dedup.minHashSignature(col("sh"), numHashes))
+      .select(col("*"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
       .drop("sig")
   }
 
@@ -83,11 +77,10 @@ object DocStreams {
       shingleN: Int = 3,
       bands: Int = 8,
       rowsPerBand: Int = 4,
-      watermark: String = "10 minutes",
-      portable: Boolean = false): DataFrame =
+      watermark: String = "10 minutes"): DataFrame =
     bucketed(
       docs.withWatermark(tsCol, watermark),
-      textCol, idCol, shingleN, bands, rowsPerBand, portable)
+      textCol, idCol, shingleN, bands, rowsPerBand)
       .join(index, Seq("bb"))
       .withColumn("jaccard",
         graft.functions.SetSimilarity.jaccardSorted(

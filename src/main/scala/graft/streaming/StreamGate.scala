@@ -232,9 +232,9 @@ object StreamGate {
     * re-matches ([[DocStreams.nearDupStream]]). On the bounded staged
     * input the result must EQUAL the batch screen
     * ([[graft.ops.Decontaminate.minHashScreen]] with the same
-    * parameters — same engine-seeded signatures, banding and verify),
-    * which is how StreamGateSpec pins it; the driver's gate records it
-    * rows-only like its batch twin q70.
+    * parameters — same md5 signatures, banding and verify), which is
+    * how StreamGateSpec pins it, and why q73 and q73b are gated by
+    * their batch twin's oracle.
     *
     * The synthesized event time (`timestamp_micros(doc_id)`) spreads
     * all stamps well inside one watermark, so the dedup state never
@@ -242,8 +242,7 @@ object StreamGate {
     * bounded-input determinism argument as [[stageEvents]]' sentinels.
     */
   def decontaminateScreenAvailableNow(
-      s: SparkSession, d: String, slices: Int = 4,
-      portable: Boolean = false): DataFrame = {
+      s: SparkSession, d: String, slices: Int = 4): DataFrame = {
     val docs = graft.core.Tables.documents(s, d)
     val bench = docs.where(col("doc_id") % 20 === 0)
     val train = docs
@@ -258,7 +257,7 @@ object StreamGate {
     // the harness's query-boundary drain frees it
     val index = graft.core.StagingScope.register(DocStreams
       .minHashIndex(bench, "text", "doc_id", shingleN = 2,
-        bands = 8, rowsPerBand = 4, portable = portable)
+        bands = 8, rowsPerBand = 4)
       .localCheckpoint(false))
     // probe any staged slice for the schema (slice 0 may be empty and
     // therefore unstaged — slice membership is content-hashed)
@@ -277,8 +276,7 @@ object StreamGate {
       .parquet(dir.toString)
     val out = DocStreams.nearDupStream(
       stream, index, "text", "doc_id", "ts",
-      threshold = 0.5, shingleN = 2, bands = 8, rowsPerBand = 4,
-      portable = portable)
+      threshold = 0.5, shingleN = 2, bands = 8, rowsPerBand = 4)
     runAvailableNow(out)
       .select(col("doc_id"), col("corpus_id").as("bench_id"), col("jaccard"))
   }

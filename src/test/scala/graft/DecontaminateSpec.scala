@@ -381,8 +381,7 @@ class DecontaminateSpec extends SparkSpec {
 
     def screen(train: org.apache.spark.sql.DataFrame) =
       Decontaminate.minHashScreen(train, bench, "text", "doc_id",
-        shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5,
-        portable = true)
+        shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5)
         .withColumnRenamed("id", "doc_id")
 
     val delta = graft.ops.SnapshotDiff.diff(v1, v2, "doc_id", Seq("text"))

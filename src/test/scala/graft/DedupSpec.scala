@@ -119,7 +119,7 @@ class DedupSpec extends SparkSpec {
     val plan = try {
       val docs = spark.sparkContext.parallelize(corpus, 2).toDF("doc_id", "text")
       val res = Dedup.minHashLsh(docs, "text", "doc_id",
-        shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5, portable = true)
+        shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5)
       assert(res.collect().nonEmpty) // runs THIS plan, so AQE's is final
       res.queryExecution.executedPlan
     } finally spark.conf.unset(graft.core.StagingScope.ModeKey)

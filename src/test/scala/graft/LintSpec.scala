@@ -118,6 +118,25 @@ class LintSpec extends AnyFunSuite {
       s"audit exemptions name unknown queries: ${staleAudit.mkString(", ")}")
   }
 
+  test("one similarity-hash family: no parameter named `portable` in " +
+      "src/main chooses between two hashes") {
+    val param = """\bportable\s*:""".r
+    val hits = for {
+      (p, src) <- mainSources
+      (ln, line) <- codeLines(src)
+      if param.findFirstIn(line).isDefined
+    } yield s"$p:$ln: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("oracle coverage: every catalog query has a DuckDB oracle except " +
+      "the three whose output a fitted quantizer or corpus-sized bits decide") {
+    val rowsOnly = graft.queries.Queries.all.keySet -- graft.queries.Queries.oracles.keySet
+    assert(rowsOnly ==
+      Set("q42_ivf_ann", "q51_embedding_neardup_lsh", "q84_semantic_neardup"),
+      rowsOnly.toSeq.sorted.mkString(", "))
+  }
+
   test("every graft.* conf key literal in src/main is registered in " +
       "graft.Budgets (the conf-key registry)") {
     // conf keys end in a lowercase-initial segment; FQCN string

@@ -17,11 +17,6 @@ class ShinglingSpec extends SparkSpec {
   private def hofSortedShingles(toks: org.apache.spark.sql.Column, n: Int) =
     sort_array(TextAnalytics.shinglesOf(toks, n))
 
-  private def hofMinHash(sh: org.apache.spark.sql.Column, k: Int) =
-    array((0 until k).map { i =>
-      array_min(transform(sh, s => xxhash64(lit(i), s)))
-    }: _*)
-
   // parity reference for the md5 kernel: one interpreted
   // md5 -> hex -> base-16 parse per (shingle, permutation)
   private def hofMd5MinHash(sh: org.apache.spark.sql.Column, k: Int) =
@@ -90,31 +85,6 @@ class ShinglingSpec extends SparkSpec {
     }
   }
 
-  test("minHashSignature matches the xxhash64 HOF formulation") {
-    val texts = Seq("a b c d e f g", "q w e r t y", "a a a", "single")
-    for (k <- Seq(1, 8, 32)) {
-      val df = texts.toDF("text")
-        .select(TextAnalytics.tokens(col("text")).as("toks"))
-        .select(Shingling.sortedShingles(col("toks"), 2).as("sh"))
-        .select(
-          Dedup.minHashSignature(col("sh"), k).as("native"),
-          hofMinHash(col("sh"), k).as("hof"))
-      df.collect().foreach { r =>
-        assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"k=$k row=$r")
-      }
-    }
-  }
-
-  test("minHashSignature on an empty shingle set is all nulls (HOF parity)") {
-    val df = Seq(Seq.empty[String]).toDF("sh")
-      .select(
-        Dedup.minHashSignature(col("sh"), 4).as("native"),
-        hofMinHash(col("sh"), 4).as("hof"))
-    val r = df.head()
-    assert(r.getSeq[Any](0) == Seq(null, null, null, null))
-    assert(r.getSeq[Any](0) == r.getSeq[Any](1))
-  }
-
   test("md5 minHashSignaturePortable matches the md5 HOF formulation") {
     // the last text has multi-byte UTF-8 shingles (2- and 3-byte chars)
     val texts = Seq("a b c d e f g", "q w e r t y", "a a a", "single",
@@ -125,7 +95,7 @@ class ShinglingSpec extends SparkSpec {
         .select(Shingling.sortedShingles(col("toks"), 2).as("sh"))
         .where(size(col("sh")) > 0)
         .select(
-          Dedup.minHashSignaturePortable(col("sh"), k).as("native"),
+          Dedup.minHashSignature(col("sh"), k).as("native"),
           hofMd5MinHash(col("sh"), k).as("hof"))
       val rows = df.collect()
       assert(rows.length == texts.size - 1)
@@ -138,7 +108,7 @@ class ShinglingSpec extends SparkSpec {
   test("md5 signature of an empty or all-null shingle set is all nulls (HOF parity)") {
     val df = Seq(Seq.empty[String], Seq[String](null, null)).toDF("sh")
       .select(
-        Dedup.minHashSignaturePortable(col("sh"), 4).as("native"),
+        Dedup.minHashSignature(col("sh"), 4).as("native"),
         hofMd5MinHash(col("sh"), 4).as("hof"))
     df.collect().foreach { r =>
       assert(r.getSeq[Any](0) == Seq(null, null, null, null))
@@ -224,10 +194,9 @@ class ShinglingSpec extends SparkSpec {
         lit("a"), col("id").cast("string"), lit("b c")).as("text"))
       .select(TextAnalytics.tokens(col("text")).as("toks"))
       .select(Shingling.sortedShingles(col("toks"), 2).as("sh"))
-      .select(Dedup.minHashSignature(col("sh"), 8).as("sig"),
-        Dedup.minHashSignaturePortable(col("sh"), 8).as("sig_md5"))
+      .select(Dedup.minHashSignature(col("sh"), 8).as("sig"))
       .queryExecution.executedPlan
-    // the Project carrying all four kernels must sit INSIDE a
+    // the Project carrying all three kernels must sit INSIDE a
     // WholeStageCodegen stage (printed as the `*(n)` prefix)
     def inCodegen(kernel: Class[_]) = plan.exists {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
@@ -238,7 +207,7 @@ class ShinglingSpec extends SparkSpec {
         }
       case _ => false
     }
-    for (kernel <- Seq(classOf[Shingling.MinHashSig], classOf[Shingling.Md5MinHashSig]))
-      assert(inCodegen(kernel), s"expected ${kernel.getSimpleName} inside codegen:\n$plan")
+    assert(inCodegen(classOf[Shingling.Md5MinHashSig]),
+      s"expected Md5MinHashSig inside codegen:\n$plan")
   }
 }

@@ -178,7 +178,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("srp bucket is deterministic across invocations") {
     val df = vecs.take(20).toDF("vec_id", "embedding")
-    val planes = Similarity.hyperplanes(dim, 6)
+    val planes = Similarity.hyperplanes(dim, 6, table = 0)
     def run() = df.select(col("vec_id"),
       Similarity.srpBucket(col("embedding").cast("array<double>"), planes))
       .as[(Long, Long)].collect().toMap
@@ -491,7 +491,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("portable hyperplanes: md5-derived, in [-1,1), engine-stable") {
-    val p = Similarity.portableHyperplanes(dim = 4, numPlanes = 2, table = 3)
+    val p = Similarity.hyperplanes(dim = 4, numPlanes = 2, table = 3)
     assert(p.length == 2 && p.forall(_.length == 4))
     assert(p.flatten.forall(c => c >= -1.0 && c < 1.0))
     // replay one component by hand: md5("3:1:2") first 15 hex chars
@@ -501,7 +501,7 @@ class SimilaritySpec extends SparkSpec {
       d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15), 16)
     assert(p(1)(2) == v.toDouble / 576460752303423488.0 - 1.0)
     // distinct tables give distinct planes
-    assert(Similarity.portableHyperplanes(4, 2, 4)(1)(2) != p(1)(2))
+    assert(Similarity.hyperplanes(4, 2, 4)(1)(2) != p(1)(2))
   }
 
   test("cosineTopKExcluding: own-group neighbors are skipped and the " +

@@ -59,4 +59,14 @@ class StreamGateSpec extends SparkSpec {
     assert(Queries.oracles("q61_components_stream") ==
       Queries.oracles("q53_dedup_components"))
   }
+
+  test("q26/q70/q73 are wired into the catalog with their twins' oracles") {
+    for ((q, twin) <- Seq(
+        "q26_minhash_lsh" -> "q26b_minhash_lsh_portable",
+        "q70_decontaminate_minhash" -> "q70b_minhash_portable",
+        "q73_decontaminate_stream" -> "q73b_decontaminate_stream_portable")) {
+      assert(Queries.all.contains(q) && Queries.all.contains(twin))
+      assert(Queries.oracles(q) == Queries.oracles(twin), q)
+    }
+  }
 }
