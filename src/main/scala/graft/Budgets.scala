@@ -32,18 +32,6 @@ package graft
   *   rank table `percentileRanks` pins (localCheckpoint) for the
   *   returned plan's lifetime; over-budget domains are refused by
   *   name with this key as the escape hatch. |
-  * | `graft.staging.mode` (`local`,
-  *   [[graft.core.StagingScope]]) | how one-shot staged intermediates
-  *   cut lineage: `local` (localCheckpoint — fastest, query-retry
-  *   fault semantics), `reliable` (Dataset.checkpoint into
-  *   `graft.staging.dir` — survives executor loss; the production
-  *   setting for multi-hour cluster runs), `off` (no cut — debugging).
-  *   Results are bit-identical under all three; only wall-clock and
-  *   fault semantics move. |
-  * | `graft.staging.dir` (temp dir,
-  *   [[graft.core.StagingScope]]) | checkpoint directory for
-  *   `reliable` staging mode — must be distributed storage on a
-  *   cluster. |
   * | `graft.heavyHitters.pinBytes` (1 GiB,
   *   [[graft.ops.HeavyHitters]]) | refusal bound on the auto-pin
   *   localCheckpoint `heavyHitters` takes when its input plan is
@@ -52,6 +40,15 @@ package graft
   *   only point the real footprint is knowable — and released before
   *   refusing, so a non-deterministic corpus-scale input can never
   *   silently pin corpus-scale executor storage. |
+  *
+  * All five are byte budgets. Three more knobs are environment
+  * variables, read once when [[graft.ops.Apss]] loads, for audit-scale
+  * tuning of its sequential shard passes (they move pass counts and
+  * scratch, never rows):
+  * `GRAFT_APSS_VERIFY_SHARD_PAIRS` (32M candidate pairs per verify
+  * pass), `GRAFT_APSS_CAND_SHARD_MEETINGS` (128M posting meetings per
+  * candidate pass) and `GRAFT_APSS_POSTING_SHARD_ROWS` (256M posting
+  * rows per grid pass).
   *
   * Non-conf knobs (constructor parameters, deliberately NOT ambient
   * config because they change SEMANTICS or plan shape per call site):
@@ -67,7 +64,5 @@ object Budgets {
     graft.ops.Decontaminate.BenchDelegateBytesKey,
     graft.functions.Bloom.BloomBytesKey,
     graft.ops.Quantiles.RankTableBytesKey,
-    graft.ops.HeavyHitters.PinBytesKey,
-    graft.core.StagingScope.ModeKey,
-    graft.core.StagingScope.DirKey)
+    graft.ops.HeavyHitters.PinBytesKey)
 }

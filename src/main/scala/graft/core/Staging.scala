@@ -29,7 +29,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * storage between stages, not executor block memory.
   *
   * Files live under the JVM temp dir, one root per Spark application,
-  * deleted by a shutdown hook (and best-effort on [[release]]).
+  * deleted by a shutdown hook (one frame early via [[drop]]).
   */
 object Staging {
   private val counter = new AtomicLong()
@@ -60,7 +60,7 @@ object Staging {
   /** Materialize `df` to scratch parquet and return a fresh scan of
     * it. The returned frame owns no lineage into the producer, so the
     * producer's shuffle files become reapable immediately; the parquet
-    * bytes are reclaimed at JVM exit (or via [[release]]).
+    * bytes are reclaimed at JVM exit (or via [[drop]]).
     *
     * Note the read-back widens every field to nullable (parquet scans
     * always do) — values are identical; callers relying on
@@ -87,14 +87,5 @@ object Staging {
   def drop(df: DataFrame): Unit = {
     val dir = synchronized(Option(dirs.remove(df)))
     dir.foreach(deleteTree)
-  }
-
-  /** Best-effort early reclaim of every scratch frame written so far
-    * in this application (the shutdown hook covers the normal path).
-    * Only call once no scratch-backed frame is still consumed.
-    */
-  def release(): Unit = synchronized {
-    hooked.foreach(deleteTree)
-    hooked = None
   }
 }

@@ -480,8 +480,8 @@ object Apss {
         // candidates — lazily they'd pin MEMORY_AND_DISK blocks until
         // driver GC + ContextCleaner, the starvation pattern
         // unpersistLocalCheckpoint exists to prevent
-        val out = graft.core.StagingScope.register(
-          verify(staged, left, right, threshold).localCheckpoint())
+        val out = graft.core.StagingScope.stage(
+          verify(staged, left, right, threshold), eager = true)
         org.apache.spark.sql.classic.GraftColumnBridge
           .unpersistLocalCheckpoint(staged)
         out
@@ -500,11 +500,10 @@ object Apss {
         val dimType = dimTypeOf(left)
         val parts = (0 until k).map { shard =>
           val cond = pmod(xxhash64(col("id_a")), lit(k)) === shard
-          graft.core.StagingScope.register(verifyShaped(
+          graft.core.StagingScope.stage(verifyShaped(
             staged.where(cond),
             left.where(pmod(xxhash64(col("id")), lit(k)) === shard),
-            rightShaped, dimType, threshold)
-            .localCheckpoint())
+            rightShaped, dimType, threshold), eager = true)
         }
         // every pass's output is materialized — the shared right-side
         // checkpoint and the candidate staging are dead weight now
@@ -758,7 +757,7 @@ object Apss {
               greatest(col("id_a"), col("id_b")).as("id_b"),
               col("sim"))
           else raw
-        val out = graft.core.StagingScope.register(oriented.localCheckpoint())
+        val out = graft.core.StagingScope.stage(oriented, eager = true)
         // the pass's shuffle dependencies are unreachable once its
         // output is checkpointed; a driver GC queues their cleanup so
         // the files are reaped before the next pass writes (otherwise

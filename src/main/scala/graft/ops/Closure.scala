@@ -24,7 +24,17 @@ object Closure {
     * (self-pairs excluded). Cycles would not terminate — callers supply
     * acyclic data, as in the reference's ontologies.
     */
-  def transitiveClosure(edges: DataFrame): DataFrame = {
+  def transitiveClosure(edges: DataFrame): DataFrame =
+    // the FINAL round's checkpoint serves the caller; registered so the
+    // harness's query-boundary drain frees it instead of driver GC
+    graft.core.StagingScope.register(closureTable(edges))
+
+  /** [[transitiveClosure]] without the drain registration: the final
+    * round's local checkpoint, fully materialized (every round is
+    * counted), whose blocks the caller owns. For session memos that
+    * must outlive the query that built them.
+    */
+  private[graft] def closureTable(edges: DataFrame): DataFrame = {
     var paths = edges
       .select(col("child").as("node"), col("parent").as("ancestor"))
       .distinct()
@@ -60,9 +70,7 @@ object Closure {
         prev = cnt
       }
     }
-    // the FINAL round's checkpoint serves the caller; registered so the
-    // harness's query-boundary drain frees it instead of driver GC
-    graft.core.StagingScope.register(paths)
+    paths
   }
 
   /** Closure-table rollup (reference: `num_genes` summed up taxonomy

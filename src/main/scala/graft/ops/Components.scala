@@ -132,8 +132,8 @@ object Components {
       unpersistLocalCheckpoint(edges)
       return local
     }
-    val allNodes = graft.core.StagingScope.register(
-      bidir(edges).select(col("u").as("id")).distinct().localCheckpoint())
+    val allNodes = graft.core.StagingScope.stage(
+      bidir(edges).select(col("u").as("id")).distinct(), eager = true)
     while (!stable) {
       // checkpoint the large-star intermediate too: small-star's
       // bidir unions + minNbr join would otherwise replay the

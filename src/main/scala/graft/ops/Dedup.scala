@@ -960,7 +960,7 @@ object Dedup {
       // MEMORY_AND_DISK vector rows until driver GC across every
       // audit pairsOf call, the exact starvation pattern the k<=1
       // verify branch was written to avoid
-      val out = graft.core.StagingScope.register(pairs.localCheckpoint())
+      val out = graft.core.StagingScope.stage(pairs, eager = true)
       org.apache.spark.sql.classic.GraftColumnBridge
         .unpersistLocalCheckpoint(assigned)
       out

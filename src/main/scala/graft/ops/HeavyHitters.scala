@@ -238,10 +238,9 @@ object HeavyHitters {
     val terms =
       if (terms0.queryExecution.analyzed.exists(
           _.expressions.exists(e => e.exists(!_.deterministic)))) {
-        // a correctness pin (the two passes must see the same rows), so
-        // it stays a direct eager localCheckpoint — but registered, so
-        // the harness's query-boundary drain releases it
-        val pinned = graft.core.StagingScope.register(terms0.localCheckpoint())
+        // a correctness pin (the two passes must see the same rows):
+        // eager, and released by the harness's query-boundary drain
+        val pinned = graft.core.StagingScope.stage(terms0, eager = true)
         val budget = terms0.sparkSession.conf.getOption(PinBytesKey)
           .map(_.toLong).getOrElse(1L << 30)
         val bytes = GraftColumnBridge.localCheckpointStorageBytes(pinned)

@@ -248,19 +248,22 @@ object Queries {
 
   /** The closure TABLE is materialized once and reused — that is the
     * point of the closure-table pattern (`SURVEY §2.4 A8`): queries
-    * against ancestors (q13 counts, q14 rollups) read the persisted
+    * against ancestors (q13 counts, q14 rollups) read the materialized
     * table instead of re-running the fixpoint. Session-scoped memo.
     */
   private val closureCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  private def partClosure(s: SparkSession, d: String): DataFrame = {
+  private[graft] def partClosure(s: SparkSession, d: String): DataFrame = {
     // Evict entries pinned to stopped sessions: their DataFrames are
     // unusable, and keeping them would leak both the map entry and the
-    // persisted blocks (which died with the session's executors anyway).
+    // checkpoint blocks (which died with the session's executors anyway).
     closureCache.keySet.removeIf { case (sess, _) => sess.sparkContext.isStopped }
+    // the memo is the fixpoint's final checkpoint itself, fully
+    // materialized and never registered: a query-boundary drain must
+    // not free blocks that later queries of the session still read
     closureCache.computeIfAbsent((s, d), { case (s, d) =>
-      Closure.transitiveClosure(partEdges(s, d)).persist()
+      Closure.closureTable(partEdges(s, d))
     })
   }
 

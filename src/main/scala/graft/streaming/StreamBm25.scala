@@ -68,8 +68,8 @@ object StreamBm25 {
     // registered so the harness's query-boundary drain frees them
     val built = Bm25.buildIndex(wide, "text", "doc_id")
     val index = Bm25.Index(
-      graft.core.StagingScope.register(built.tfDl.localCheckpoint()),
-      graft.core.StagingScope.register(built.idf.localCheckpoint()))
+      graft.core.StagingScope.stage(built.tfDl, eager = true),
+      graft.core.StagingScope.stage(built.idf, eager = true))
     // the EAGER tfDl/idf checkpoints above just materialized; the
     // build's internal staged tf/dl tables are dead lineage now —
     // release the inner two instead of holding four index-sized copies

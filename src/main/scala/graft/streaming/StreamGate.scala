@@ -255,10 +255,9 @@ object StreamGate {
       .unpersistLocalCheckpoint(train)
     // per-batch static side for the stream's lifetime — registered so
     // the harness's query-boundary drain frees it
-    val index = graft.core.StagingScope.register(DocStreams
+    val index = graft.core.StagingScope.stage(DocStreams
       .minHashIndex(bench, "text", "doc_id", shingleN = 2,
-        bands = 8, rowsPerBand = 4)
-      .localCheckpoint(false))
+        bands = 8, rowsPerBand = 4))
     // probe any staged slice for the schema (slice 0 may be empty and
     // therefore unstaged — slice membership is content-hashed)
     val schema = {

@@ -112,17 +112,33 @@ class DedupSpec extends SparkSpec {
   }
 
   test("portable minhash LSH runs no interpreted lambda: the md5 signature is the native kernel") {
-    // staging `off` keeps the signature inside this one executed plan
-    // instead of behind a checkpointed scan; an RDD source, because a
-    // local Seq's projections fold into a LocalTableScan at optimize time
-    spark.conf.set(graft.core.StagingScope.ModeKey, "off")
-    val plan = try {
+    // the signature is computed inside a staged cut, so the plans to
+    // inspect are those of the localCheckpoint actions as well as the
+    // terminal collect; an RDD source, because a local Seq's
+    // projections fold into a LocalTableScan at optimize time
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add((name, qe.executedPlan))
+      def onFailure(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
       val docs = spark.sparkContext.parallelize(corpus, 2).toDF("doc_id", "text")
       val res = Dedup.minHashLsh(docs, "text", "doc_id",
         shingleN = 2, bands = 8, rowsPerBand = 4, threshold = 0.5)
-      assert(res.collect().nonEmpty) // runs THIS plan, so AQE's is final
-      res.queryExecution.executedPlan
-    } finally spark.conf.unset(graft.core.StagingScope.ModeKey)
+      assert(res.collect().nonEmpty) // every plan has run, so AQE's are final
+      org.apache.spark.sql.classic.GraftColumnBridge
+        .awaitListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = seen.asScala.toSeq
+    assert(plans.exists(_._1 == "localCheckpoint"),
+      s"expected staged cuts, saw actions: ${plans.map(_._1).mkString(", ")}")
+    val plan = plans.map(_._2).mkString("\n")
     import org.apache.spark.sql.execution.{SparkPlan, adaptive, exchange}
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: adaptive.AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -130,7 +146,7 @@ class DedupSpec extends SparkSpec {
       case r: exchange.ReusedExchangeExec => nodes(r.child)
       case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
     }
-    val exprs = nodes(plan).flatMap(_.expressions)
+    val exprs = plans.flatMap(p => nodes(p._2)).flatMap(_.expressions)
     assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.Shingling.Md5MinHashSig])),
       s"expected the md5 kernel in the plan:\n$plan")
     val lambdas = exprs.flatMap(_.collect {

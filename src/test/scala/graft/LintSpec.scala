@@ -34,6 +34,19 @@ class LintSpec extends AnyFunSuite {
       t.startsWith("*") || t.startsWith("import ")
     }.toSeq
 
+  /** A call's argument text: from `at`, just past the open paren, up to
+    * the matching close paren.
+    */
+  private def callArg(code: String, at: Int): String = {
+    var depth = 1
+    var i = at
+    while (depth > 0 && i < code.length) {
+      if (code(i) == '(') depth += 1 else if (code(i) == ')') depth -= 1
+      i += 1
+    }
+    code.substring(at, i - 1)
+  }
+
   test("no production path calls .rdd on a Dataset — a partition-count " +
       "probe via .rdd compiles a SECOND Row-deserializing physical plan " +
       "(measured on the 1000x audit); use queryExecution.toRdd") {
@@ -153,6 +166,56 @@ class LintSpec extends AnyFunSuite {
     val stale = graft.Budgets.keys -- found
     assert(stale.isEmpty,
       s"Budgets.keys entries with no source site: ${stale.mkString(", ")}")
+  }
+
+  test("one staging mode: no graft.staging.* key in src/main, and the " +
+      "conf-key registry holds exactly the five byte budgets") {
+    val hits = for {
+      (p, src) <- mainSources
+      (ln, line) <- src.linesIterator.zipWithIndex.map { case (l, i) => (i + 1, l) }
+      if line.contains("graft.staging.")
+    } yield s"$p:$ln: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(graft.Budgets.keys.size == 5, graft.Budgets.keys.toSeq.sorted.mkString(", "))
+  }
+
+  test("one way to stage: no StagingScope.register around a " +
+      "localCheckpoint — a one-shot cut is StagingScope.stage") {
+    val call = "StagingScope.register("
+    val hits = for {
+      (p, src) <- mainSources
+      code = codeLines(src).map(_._2).mkString("\n")
+      at <- java.util.regex.Pattern.quote(call).r.findAllMatchIn(code).map(_.end).toSeq
+      arg = callArg(code, at)
+      if arg.contains("localCheckpoint(")
+    } yield s"$p: register(${arg.replaceAll("\\s+", " ").trim})"
+    assert(hits.isEmpty, s"${hits.size} sites:\n" + hits.mkString("\n"))
+  }
+
+  test("env-knob census: src/main reads exactly the eight SPARK_GRAFT_* " +
+      "knobs of Session, Bench and Verify and the three APSS shard " +
+      "overrides — a new knob is added on purpose, here") {
+    val read = """\b(?:sys\.env|System\.getenv)\b""".r
+    val named =
+      """\b(?:sys\.env(?:\.get|\.getOrElse|\.contains|\.apply)?|System\.getenv)\(\s*"(\w+)"""".r
+    val lines = for {
+      (p, src) <- mainSources
+      (ln, line) <- codeLines(src)
+      if read.findFirstIn(line).isDefined
+    } yield (s"$p:$ln: ${line.trim}", line)
+    val unnamed = lines.filter { case (_, l) =>
+      read.findAllMatchIn(l).size != named.findAllMatchIn(l).size }
+    assert(unnamed.isEmpty,
+      "env reads must name a literal variable:\n" + unnamed.map(_._1).mkString("\n"))
+    val names = lines.flatMap { case (_, l) =>
+      named.findAllMatchIn(l).map(_.group(1)) }.toSet
+    assert(names == Set(
+      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
+      "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_LOAD_WAITS",
+      "SPARK_GRAFT_VERIFY_SKIP_EXISTING", "SPARK_GRAFT_VERIFY_ONLY",
+      "SPARK_GRAFT_VERIFY_EXCEPT", "GRAFT_APSS_VERIFY_SHARD_PAIRS",
+      "GRAFT_APSS_CAND_SHARD_MEETINGS", "GRAFT_APSS_POSTING_SHARD_ROWS"),
+      names.toSeq.sorted.mkString(", "))
   }
 
   test("bench one-line contract: the embedded ab block can never carry " +

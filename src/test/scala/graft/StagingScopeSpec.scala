@@ -48,96 +48,33 @@ class StagingScopeSpec extends SparkSpec {
     assert(eventuallyFreed(ckpt))
   }
 
-  /** The context's checkpoint dir is fixed once set, so every reliable
-    * test in the shared session names the same one.
-    */
-  private lazy val reliableDir =
-    java.nio.file.Files.createTempDirectory("graft-reliable-").toString
-
-  test("reliable mode: stage survives via checkpoint files, results equal") {
-    spark.conf.set(StagingScope.ModeKey, "reliable")
-    spark.conf.set(StagingScope.DirKey, reliableDir)
-    try {
-      val df = (1L to 200L).toDF("id")
-        .groupBy(pmod(col("id"), lit(7)).as("g")).agg(count(lit(1)).as("n"))
-      val staged = StagingScope.stage(df)
-      assert(staged.collect().toSet == df.collect().toSet)
-      // reliable = RDD-checkpointed to the staging dir, not block-pinned
-      val lr = staged.queryExecution.analyzed
-        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      assert(lr.rdd.isCheckpointed && lr.rdd.getCheckpointFile.isDefined,
-        "reliable mode must take a RELIABLE (file-backed) checkpoint")
-      StagingScope.drain() // harmless on reliable checkpoints
-    } finally {
-      spark.conf.unset(StagingScope.ModeKey)
-      spark.conf.unset(StagingScope.DirKey)
-    }
-  }
-
-  test("off mode: stage is the identity (no cut, identical results)") {
-    spark.conf.set(StagingScope.ModeKey, "off")
-    try {
-      val df = (1L to 50L).toDF("id").withColumn("y", col("id") * 2)
-      val staged = StagingScope.stage(df)
-      assert(staged eq df, "off mode must not touch the plan")
-    } finally spark.conf.unset(StagingScope.ModeKey)
-  }
-
-  test("results are bit-identical across all three modes (an op-level " +
-      "pin: the mode moves wall-clock and fault semantics, never rows)") {
-    val docs = Seq(
-      "alpha beta gamma alpha beta", "beta gamma delta beta gamma",
-      "alpha beta alpha beta alpha", "delta epsilon delta epsilon")
-      .toDF("text")
-    def run(): Seq[org.apache.spark.sql.Row] =
-      graft.ops.Collocations.pmiTopK(docs, "text", minCount = 2, k = 5)
-        .collect().toSeq
-    val local = run()
-    spark.conf.set(StagingScope.ModeKey, "off")
-    val off = try run() finally spark.conf.unset(StagingScope.ModeKey)
-    spark.conf.set(StagingScope.ModeKey, "reliable")
-    spark.conf.set(StagingScope.DirKey, reliableDir)
-    val reliable = try run() finally {
-      spark.conf.unset(StagingScope.ModeKey)
-      spark.conf.unset(StagingScope.DirKey)
-    }
-    assert(off == local && reliable == local)
+  test("the partClosure session memo survives a query-boundary drain: " +
+      "a partly read memo still serves q14 after its build is drained") {
+    // a directory of its own, so the memo key is fresh in this session
+    val d = java.nio.file.Files.createTempDirectory("graft-memo")
+    java.nio.file.Files.createSymbolicLink(d.resolve("part.parquet"),
+      java.nio.file.Paths.get("/root/testdata/sf0.001/part.parquet"))
+    val dir = d.toString
+    // uncoalesced, so the memo has several partitions and `limit(1)`
+    // reads only the first
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try graft.queries.Queries.partClosure(spark, dir).limit(1).collect()
+    finally spark.conf.unset(coalesce)
     StagingScope.drain()
-  }
-
-  test("reliable mode refuses a staging dir that differs from the " +
-      "context's existing checkpoint dir, naming both") {
-    spark.conf.set(StagingScope.ModeKey, "reliable")
-    try {
-      spark.conf.set(StagingScope.DirKey, reliableDir)
-      StagingScope.stage(Seq(1).toDF("x")).collect()
-      val have = spark.sparkContext.getCheckpointDir.get
-      val other =
-        java.nio.file.Files.createTempDirectory("graft-elsewhere-").toString
-      spark.conf.set(StagingScope.DirKey, other)
-      val e = intercept[IllegalStateException] {
-        StagingScope.stage(Seq(2).toDF("x"))
-      }
-      assert(e.getMessage.contains(other) && e.getMessage.contains(have),
-        e.getMessage)
-      // unset, the existing dir is used as before
-      spark.conf.unset(StagingScope.DirKey)
-      assert(StagingScope.stage(Seq(3).toDF("x")).collect().map(_.getInt(0))
-        .toSeq == Seq(3))
-    } finally {
-      spark.conf.unset(StagingScope.ModeKey)
-      spark.conf.unset(StagingScope.DirKey)
-      StagingScope.drain()
-    }
-  }
-
-  test("unknown mode refuses by name") {
-    spark.conf.set(StagingScope.ModeKey, "sideways")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        StagingScope.stage(Seq(1).toDF("x"))
-      }
-      assert(e.getMessage.contains(StagingScope.ModeKey))
-    } finally spark.conf.unset(StagingScope.ModeKey)
+    val got = graft.queries.Queries.q14SubtreeRollup(spark, dir).collect().toSet
+    // q14 without the memo: the same closure and rollup, built afresh
+    val part = graft.core.Tables.part(spark, dir)
+    val closure = graft.ops.Closure.transitiveClosure(part
+      .filter(col("p_partkey") >= 1)
+      .select(col("p_partkey").as("child"),
+        floor(col("p_partkey") / 2).cast("long").as("parent")))
+    val facts = part.select(col("p_partkey").as("node"),
+      round(col("p_retailprice") * 100).cast("decimal(38,0)").as("p_cents"))
+    val want = graft.ops.Closure.subtreeSum(closure, facts, "p_cents", "subtree_cents")
+      .select(col("node"), (col("subtree_cents") / 100.0).as("subtree_value"))
+      .collect().toSet
+    StagingScope.drain()
+    assert(got.nonEmpty && got == want)
   }
 }
