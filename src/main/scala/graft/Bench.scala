@@ -200,15 +200,30 @@ object Bench {
       } else "null"
     } catch { case _: Throwable => "null" }
 
+  /** `SPARK_GRAFT_BENCH_PASSES` (unset: 3). Zero passes would record
+    * an empty sweep as a 0.0 total, so anything but a positive integer
+    * is refused by name.
+    */
+  private[graft] def passesOf(value: Option[String]): Int =
+    value.fold(3)(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$v'")))
+
+  /** The headline queries `SPARK_GRAFT_BENCH_ONLY` (comma-separated;
+    * unset: all) selects, in headline order. A developer knob for
+    * iterating on one operator; a name outside the headline is refused
+    * ([[Verify.queryNames]]), so the sweep is never silently empty.
+    */
+  private[graft] def sweepOf(only: Option[String]): Seq[String] =
+    only.fold(headline) { v =>
+      val names = Verify.queryNames("SPARK_GRAFT_BENCH_ONLY", v, headline.toSet)
+      headline.filter(names)
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // developer knob: comma-separated query names to restrict the sweep
-    // (iterating on one operator shouldn't cost a full 6-minute run);
-    // the driver never sets it, so recorded benches stay full-sweep
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val sweep = only.fold(headline)(f => headline.filter(f))
+    val passes = passesOf(sys.env.get("SPARK_GRAFT_BENCH_PASSES"))
+    val sweep = sweepOf(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = graft.core.Session.start()
     // LOAD GUARD: a busy machine inflates every pass uniformly and the
     // per-query median can't reject it (rounds 4 and 6 both shipped

@@ -41,14 +41,7 @@ package graft
   *   refusing, so a non-deterministic corpus-scale input can never
   *   silently pin corpus-scale executor storage. |
   *
-  * All five are byte budgets. Three more knobs are environment
-  * variables, read once when [[graft.ops.Apss]] loads, for audit-scale
-  * tuning of its sequential shard passes (they move pass counts and
-  * scratch, never rows):
-  * `GRAFT_APSS_VERIFY_SHARD_PAIRS` (32M candidate pairs per verify
-  * pass), `GRAFT_APSS_CAND_SHARD_MEETINGS` (128M posting meetings per
-  * candidate pass) and `GRAFT_APSS_POSTING_SHARD_ROWS` (256M posting
-  * rows per grid pass).
+  * All five are byte budgets.
   *
   * Non-conf knobs (constructor parameters, deliberately NOT ambient
   * config because they change SEMANTICS or plan shape per call site):

@@ -3,10 +3,26 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** A comma-separated query-name knob (`SPARK_GRAFT_VERIFY_ONLY`,
+    * `SPARK_GRAFT_VERIFY_EXCEPT`, `SPARK_GRAFT_BENCH_ONLY`) as a name
+    * set. A list that names nothing, or names a query outside `known`,
+    * is refused with the knob and its value: a typo must not silently
+    * shrink or empty the run.
+    */
+  private[graft] def queryNames(
+      knob: String, value: String, known: Set[String]): Set[String] = {
+    val names = value.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- known
+    if (names.isEmpty || unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"$knob='$value' must list known query names" +
+          (if (unknown.isEmpty) "" else s"; unknown: ${unknown.toSeq.sorted.mkString(", ")}"))
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = graft.core.Session.start()
-    new java.io.File(outDir).mkdirs()
     // developer knob for large-SF audit reruns: skip queries whose
     // output already committed (the driver never sets it, so gate runs
     // always recompute everything)
@@ -14,7 +30,7 @@ object Verify {
     // developer knob: restrict to a comma-separated query subset (the
     // driver never sets it, so gate runs always cover the catalog)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(queryNames("SPARK_GRAFT_VERIFY_ONLY", _, SparkEntry.queries.keySet))
     // developer knob for the large-SF evidence sweeps: run the WHOLE
     // catalog EXCEPT a named exclusion list — "catalog minus named
     // exclusions" is structurally complete (a new query runs by
@@ -24,14 +40,12 @@ object Verify {
     // them; names not in the catalog fail fast (a stale exclusion is
     // a typo, not a request).
     val except = sys.env.get("SPARK_GRAFT_VERIFY_EXCEPT")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(queryNames("SPARK_GRAFT_VERIFY_EXCEPT", _, SparkEntry.queries.keySet))
       .getOrElse(Set.empty[String])
-    val staleExcept = except -- SparkEntry.queries.keySet
-    if (staleExcept.nonEmpty)
-      sys.error(s"SPARK_GRAFT_VERIFY_EXCEPT names not in the catalog: " +
-        staleExcept.mkString(", "))
     except.toSeq.sorted.foreach(n =>
       System.err.println(s"[verify] $n EXCLUDED by SPARK_GRAFT_VERIFY_EXCEPT"))
+    val spark = graft.core.Session.start()
+    new java.io.File(outDir).mkdirs()
     var ran, skipped, failed = 0
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -47,8 +61,8 @@ object Verify {
         skipped += 1
         System.err.println(s"[verify] $name skipped (exists)")
       } else try {
-        fn(spark, sfDir).repartition(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        graft.sinks.Sinks.writeTable(fn(spark, sfDir).repartition(1),
+          s"$outDir/$name")
         ran += 1
         System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>

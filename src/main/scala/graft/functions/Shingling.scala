@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{concat, hex, lit, lpad, xxhash64}
+import org.apache.spark.sql.functions.xxhash64
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -367,24 +367,14 @@ object Shingling {
   def shingleStats(toks: Column, n: Int): Column =
     GraftColumnBridge.column(ShingleStats(GraftColumnBridge.expression(toks), n))
 
-  /** Join/aggregation KEY for a gram string. Default: `xxhash64` —
-    * 8-byte shuffle keys, the move that made the q63/q83 gram paths
-    * fit one box's disk at 100×. Birthday bound over 2⁶⁴: ~2.7%
-    * any-collision odds at 10⁹ distinct grams, near-certain at the
-    * 10¹¹+ grams a 100-TB corpus carries — and a collision silently
-    * merges two gram identities (false TF-IDF dims, false excision
-    * spans). `wide = true` switches to a 128-bit key (two independent
-    * xxhash64 lanes as 32 hex chars: any-collision ~3×10⁻¹⁷ at 10¹¹
-    * grams) for the decades where the EXACTNESS claim must hold —
-    * ~4× the key bytes through every gram-keyed shuffle, so flip it
-    * for exactness audits / contamination screens, not routine dedup.
-    * Same-width keys are injective over the gram equality relation on
-    * both widths, so results change only via collisions — never via
-    * the keying itself (GramKeySpec pins 64- vs 128-bit equality).
+  /** Join/aggregation KEY for a gram string: `xxhash64` — 8-byte
+    * shuffle keys, the move that made the q63/q83 gram paths fit one
+    * box's disk at 100×. Birthday bound over 2⁶⁴: ~2.7% any-collision
+    * odds at 10⁹ distinct grams, near-certain at 10¹¹+ — and a
+    * collision silently merges two gram identities (false TF-IDF dims,
+    * false excision spans). The key is injective over gram equality
+    * otherwise, so results change only via collisions; none occur on
+    * the gated corpora.
     */
-  def gramKey(g: Column, wide: Boolean): Column =
-    if (!wide) xxhash64(g)
-    else concat(
-      lpad(hex(xxhash64(g)), 16, "0"),
-      lpad(hex(xxhash64(g, lit(1L))), 16, "0"))
+  def gramKey(g: Column): Column = xxhash64(g)
 }

@@ -399,19 +399,16 @@ object Apss {
     * vectors (~KB each) to every candidate pair, so one pass's scratch
     * is candidates × ~2·vector-size bytes — at the 1000× audit the q63
     * stream (~260M pairs) outgrows one box in a single pass even
-    * though each shard alone is comfortable. Overridable for audit
-    * tuning via GRAFT_APSS_VERIFY_SHARD_PAIRS.
+    * though each shard alone is comfortable. Per call, [[cosinePairs]]'
+    * `verifyShardPairs` sets it.
     */
-  val VerifyPairsPerShard: Long =
-    sys.env.get("GRAFT_APSS_VERIFY_SHARD_PAIRS").map(_.toLong)
-      .getOrElse(32L * 1000 * 1000)
+  val VerifyPairsPerShard: Long = 32L * 1000 * 1000
 
   /** Per-dim-entry scratch bytes the verify's vector attach pays, by
     * key width: 8 for the numeric dims (int feature ids, long hashed
-    * grams — the calibration width), 32 for the 128-bit hex string key
-    * ([[graft.functions.Shingling.gramKey]] wide=true: a 32-char
-    * UTF8String payload; the 100× audit `tools/check_sf10_r12.txt`
-    * measured ~3× total verify bytes per pair under it, dominated by
+    * grams — the calibration width), 32 for string dims (raw term
+    * vocabulary; a 32-char UTF8String key measured ~3× total verify
+    * bytes per pair at 100×, `tools/check_sf10_r12.txt`, dominated by
     * exactly this term). A future dim type slots in by declaring its
     * width here — the budget arithmetic below is width-agnostic.
     */
@@ -426,17 +423,16 @@ object Apss {
     * bound it really enforces is BYTES of vector-attach scratch per
     * pass. Convert the pair bound to its byte budget (pairs × the
     * 8-byte calibration width) and divide by the ACTUAL key width — so
-    * the 128-bit string key lands at ÷4 of the numeric bound (the
-    * configuration that died by disk in r12 under defaults shards
-    * automatically; `tools/check_sf10_r13.txt`), and any future dim
-    * width scales by ITS declared bytes instead of growing another
-    * case arm. Explicit overrides (env or parameter) are scaled too,
-    * because the override is still a byte budget expressed in
-    * 8-byte-dim pairs.
+    * a string key lands at ÷4 of the numeric bound (the configuration
+    * that died by disk in r12 under defaults shards automatically;
+    * `tools/check_sf10_r13.txt`), and any future dim width scales by
+    * ITS declared bytes instead of growing another case arm. A
+    * per-call `verifyShardPairs` is scaled too, because it is still a
+    * byte budget expressed in 8-byte-dim pairs.
     */
   private[graft] def widthScaledShardPairs(
       pairs: Long, dimType: org.apache.spark.sql.types.DataType): Long =
-    // BigInt: a Long.MaxValue-ish env override must saturate, not wrap
+    // BigInt: a Long.MaxValue-ish parameter must saturate, not wrap
     math.max(1L,
       (BigInt(pairs) * 8 / dimKeyBytes(dimType))
         .min(BigInt(Long.MaxValue)).toLong)
@@ -523,11 +519,10 @@ object Apss {
     * bounds) is what fills the disk first when the meeting stream is
     * 10× bigger than the verify survivors — the 1000× audit's q63
     * died exactly there (~0.8 B meetings spilling against the staged
-    * corpus index). Overridable via GRAFT_APSS_CAND_SHARD_MEETINGS.
+    * corpus index). Per call, [[cosinePairs]]' `candShardMeetings`
+    * sets it.
     */
-  val CandMeetingsPerShard: Long =
-    sys.env.get("GRAFT_APSS_CAND_SHARD_MEETINGS").map(_.toLong)
-      .getOrElse(128L * 1000 * 1000)
+  val CandMeetingsPerShard: Long = 128L * 1000 * 1000
 
   /** Posting rows PER PASS (both grid sides together): k is sized so
     * each pass's dim-shuffle moves at most this many posting rows —
@@ -537,12 +532,9 @@ object Apss {
     * shuffle plus ONE pass of reaping lag is exactly what must fit in
     * one box's scratch (a k=3 grid at ~16 GB/pass died on its last
     * passes; a build-side-only split is worse still — it re-shuffles
-    * the FULL probe postings every pass). Overridable via
-    * GRAFT_APSS_POSTING_SHARD_ROWS.
+    * the FULL probe postings every pass).
     */
-  val PostingRowsPerShard: Long =
-    sys.env.get("GRAFT_APSS_POSTING_SHARD_ROWS").map(_.toLong)
-      .getOrElse(256L * 1000 * 1000)
+  val PostingRowsPerShard: Long = 256L * 1000 * 1000
 
   /** Byte bound for broadcasting the candidate join's (dim, g)
     * salt-group table ([[pairsAuto]]'s fused `meetDims`): within it the
@@ -770,49 +762,29 @@ object Apss {
     }
   }
 
-  /** The closed-corpus per-vector index, STAGED, plus its row count.
-    *
-    * `scratch = false` (every catalog-scale query): a lazy
-    * localCheckpoint — blocks free when the plan is garbage-collected,
-    * no files written.
-    *
-    * `scratch = true` (the audit decade, caller-flagged): the index
-    * materializes through [[graft.core.Staging.scratchParquet]]
-    * instead. The index build runs several full-corpus exchanges
-    * (bounds aggregation, explode–join–regroup), and with a
-    * checkpoint those shuffle files stay pinned on disk for as long
-    * as ANY reference still reaches their dependencies — which
-    * includes the caller's own frame bindings for the whole pairs
-    * computation. At the 1000× audit those dead files (~30 GB)
-    * out-spilled the box twice AFTER the q63-level staging moved to
-    * parquet; writing the index itself to scratch parquet severs the
-    * chain mechanically (this method's frame pops, nothing reaches
-    * the producer, the next GC tick reaps). The parquet scan is
-    * re-read per consumer — k² slim scans against a ~4× smaller file,
-    * the right trade exactly when the grid is running.
+  /** The closed-corpus per-vector index, STAGED (a lazy
+    * localCheckpoint through [[graft.core.StagingScope.stage]]: blocks
+    * free at the query-boundary drain, no files written), plus its row
+    * count.
     *
     * A method, not an inline block: JVM frames may keep block-local
-    * slots alive to method end, and the whole point is that every
-    * producer reference is provably unreachable on return.
+    * slots alive to method end, and the inner staging released below
+    * must be unreachable on return.
     */
   private def perVecStaged(
       vecs: DataFrame,
       idCol: String,
       termsCol: String,
       half: Double,
-      maxBroadcastDims: Int,
-      scratch: Boolean): (DataFrame, Long) = {
+      maxBroadcastDims: Int): (DataFrame, Long) = {
     val (pv, innerStaged) =
       perVecClosedOf(vecs, idCol, termsCol, half, maxBroadcastDims)
-    val staged =
-      if (scratch) graft.core.Staging.scratchParquet(pv)
-      else graft.core.StagingScope.stage(pv)
-    // the count materializes the checkpoint (the parquet write already
-    // did, but the count there is one cheap metadata-ish scan); the
-    // keyed path's inner staging is dead lineage from here — release
-    // its corpus-sized pinned blocks now rather than waiting for
-    // driver GC (repeated cosinePairs calls in one session would
-    // otherwise accumulate non-evictable blocks)
+    val staged = graft.core.StagingScope.stage(pv)
+    // the count materializes the checkpoint; the keyed path's inner
+    // staging is dead lineage from here — release its corpus-sized
+    // pinned blocks now rather than waiting for driver GC (repeated
+    // cosinePairs calls in one session would otherwise accumulate
+    // non-evictable blocks)
     val nV = staged.count()
     innerStaged.foreach { st =>
       org.apache.spark.sql.classic.GraftColumnBridge
@@ -855,11 +827,10 @@ object Apss {
       maxBroadcastDims: Int = DefaultMaxBroadcastDims,
       maxCandidates: Long = SimilarityGuard.Auto,
       verifyShardPairs: Long = VerifyPairsPerShard,
-      candShardMeetings: Long = CandMeetingsPerShard,
-      scratchStage: Boolean = false): DataFrame = {
+      candShardMeetings: Long = CandMeetingsPerShard): DataFrame = {
     require(threshold > 0.0, "prefix filtering needs a positive threshold")
     val (perVec, nV) = perVecStaged(
-      vecs, idCol, termsCol, threshold / 2, maxBroadcastDims, scratchStage)
+      vecs, idCol, termsCol, threshold / 2, maxBroadcastDims)
     val posted = postingsOf(perVec)
     pairsAuto(posted, posted, perVec, perVec, ordered = true,
       dimCap = 4096, threshold, nV, maxCandidates,

@@ -116,7 +116,7 @@ object Decontaminate {
     * selectivity, never results).
     *
     * REGIME — measured, and the op ROUTES ITSELF
-    * (`tools/check_sf10_r14.txt` SketchAudit): when the benchmark
+    * (100× timings in `tools/check_sf10_r14.txt`): when the benchmark
     * gram payload fits a broadcast ([[BenchDelegateBytesKey]], default
     * 32 MiB), the PLAIN screen is already optimal — Catalyst
     * broadcasts the bench side and the training grams never cross an
@@ -300,16 +300,14 @@ object Decontaminate {
       docs: DataFrame,
       textCol: String,
       idCol: String,
-      n: Int,
-      wideGramKeys: Boolean = false): DataFrame = {
-    // Grams are keyed by xxhash64 — the stats aggregation and the
-    // positions re-join then move 8-byte longs instead of ~30-byte
-    // UTF-8 grams. A collision merges two grams' stats and can create
-    // FALSE excision spans; the birthday bound over 2⁶⁴ puts
-    // any-collision odds at ~2.7% for a 10⁹-gram vocabulary (~2e-5
-    // only holds near 3×10⁷ grams) — acceptable for dedup screening,
-    // and `wideGramKeys` switches to a 128-bit key when the exactness
-    // claim must hold at the 10¹¹+-gram decade (see the q63 note).
+      n: Int): DataFrame = {
+    // Grams are keyed by xxhash64 ([[Shingling.gramKey]]) — the stats
+    // aggregation and the positions re-join then move 8-byte longs
+    // instead of ~30-byte UTF-8 grams. A collision merges two grams'
+    // stats and can create FALSE excision spans; the birthday bound
+    // over 2⁶⁴ puts any-collision odds at ~2.7% for a 10⁹-gram
+    // vocabulary (~2e-5 only holds near 3×10⁷ grams) — acceptable for
+    // dedup screening.
     //
     // DELIBERATELY RECOMPUTED, NOT STAGED: this table has one row per
     // corpus token position, and a localCheckpoint of it is a
@@ -323,7 +321,7 @@ object Decontaminate {
         posexplode(Shingling.orderedShingles(
           TextAnalytics.tokens(col(textCol)), n)).as(Seq("pos", "g")))
       .select(col("id"), col("pos"),
-        Shingling.gramKey(col("g"), wideGramKeys).as("gram"))
+        Shingling.gramKey(col("g")).as("gram"))
 
     // one aggregation, keyed by gram: the owning (minimum) doc id and
     // whether a second distinct doc carries the gram. min+max distinct

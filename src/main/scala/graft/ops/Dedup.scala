@@ -881,42 +881,19 @@ object Dedup {
         Similarity.ivfSeededIndexFor(corpus, idCol, vecCol, seedQuantizer,
           nCoarseProbe)
       else Similarity.ivfIndexFor(corpus, idCol, vecCol, k, seed, nCoarseProbe)
-    semanticPairsFromIndex(index, threshold, n, numBlocks, nProbe, maxCandidates)
-  }
-
-  /** [[semanticNearDup]]'s pair pipeline off an ALREADY-BUILT index —
-    * multi-probe assignment, Σ|cell|²/2 pre-flight guard, skew-blocked
-    * triangle join, exact-cosine verify, canonical pair dedup. The seam
-    * exists so audits can drive the SAME machinery with a differently-
-    * assigned index (e.g. the exact-argmin baseline the hierarchy-
-    * routing recall audit compares against); `nDocs` feeds the guard's
-    * auto cap.
-    */
-  private[graft] def semanticPairsFromIndex(
-      index: Similarity.IvfIndex,
-      threshold: Double,
-      nDocs: => Long,
-      numBlocks: Int = 8,
-      nProbe: Int = 2,
-      maxCandidates: Long = SimilarityGuard.Auto,
-      stageMulti: Boolean = false): DataFrame = {
     // The multi-probe assignment feeds THREE plan consumers (the guard's
     // Σ|cell|² aggregate and both triangle sides), so its per-row kernel
-    // re-evaluates 3x. Production leaves that lazy — the routed kernel
-    // is O(L·k^(1/L)·dim)/row, noise next to the pair join. stageMulti
-    // localCheckpoints it instead (nProbe·n rows with vectors): the
-    // audit's EXACT-argmin baseline pays O(k·dim)/row per evaluation,
-    // where 3x recompute turns minutes into hours at 2M×70k.
-    val multi0 = index
+    // re-evaluates 3x — left lazy on purpose: the routed kernel is
+    // O(L·k^(1/L)·dim)/row, noise next to the pair join.
+    val assigned = index
       .multiAssigned(nProbe)
       .select(col("cell"), col("neighbor_id").as("id"), col("cv").as("v"))
-    val assigned = if (stageMulti) multi0.localCheckpoint() else multi0
 
     val predicted = SimilarityGuard.selfJoinVolume(
       assigned.select("cell", "id"), Seq("cell"))
     SimilarityGuard.check(
       predicted,
-      SimilarityGuard.resolveCap(maxCandidates, nDocs),
+      SimilarityGuard.resolveCap(maxCandidates, n),
       site = "Dedup.semanticNearDup",
       reroute = "Re-route to embeddingNearDupLsh (SRP buckets hold " +
         "occupancy constant regardless of embedding-space collapse)")
@@ -926,7 +903,7 @@ object Dedup {
     // verify stage below would burn ~all its compute on sub-threshold
     // pairs. Silent on clustered corpora (survival well above the bar).
     SimilarityGuard.clusterednessProbe(
-      assigned, threshold, nDocs, "Dedup.semanticNearDup")
+      assigned, threshold, n, "Dedup.semanticNearDup")
 
     // triangle grid WITHIN each cell (cf. embeddingNearDupExact): the
     // (ci, cj) sub-keys spread a hot cell's pairs across tasks
@@ -938,7 +915,7 @@ object Dedup {
     val right = v.select(col("cell"),
       explode(sequence(lit(0), col("blk"))).as("ci"),
       col("blk").as("cj"), col("id").as("id_r"), col("v").as("vr"))
-    val pairs = SimilarityGuard.observed(
+    SimilarityGuard.observed(
       left.join(right, Seq("cell", "ci", "cj"))
         .where(col("ci") < col("cj") || col("id_l") < col("id_r")),
       "Dedup.semanticNearDup", predicted)
@@ -952,18 +929,5 @@ object Dedup {
       // once per cell — dedup on the canonical key. Output-sized (only
       // verified >= threshold pairs), unlike the candidate stream.
       .dropDuplicates("id_a", "id_b")
-    if (!stageMulti) pairs
-    else {
-      // mirror Apss.verifyAuto's lifecycle: materialize the
-      // (output-sized) pair set eagerly, then free the staged
-      // multi-assignment — left lazy it would pin nProbe·n
-      // MEMORY_AND_DISK vector rows until driver GC across every
-      // audit pairsOf call, the exact starvation pattern the k<=1
-      // verify branch was written to avoid
-      val out = graft.core.StagingScope.stage(pairs, eager = true)
-      org.apache.spark.sql.classic.GraftColumnBridge
-        .unpersistLocalCheckpoint(assigned)
-      out
-    }
   }
 }

@@ -266,9 +266,8 @@ object Similarity {
     * time so the decision costs no job.
     *
     * Approximation note — MEASURED, not argued
-    * (`tools/check_sf100_r13.txt`, via graft.tools.HierarchyRecallAudit
-    * at L=3 / k=70000 / 2M vectors vs exact argmin over the same
-    * centroids): a vector's true nearest FINE centroid can sit in a
+    * (`tools/check_sf100_r13.txt`, at L=3 / k=70000 / 2M vectors vs
+    * exact argmin over the same centroids): a vector's true nearest FINE centroid can sit in a
     * group some level's probe skipped (the IMI trade); `nCoarseProbe`
     * (default 4) bounds it per level. On an UNCLUSTERED corpus the
     * miss does NOT cancel for pair recall: argmin margins are tiny in

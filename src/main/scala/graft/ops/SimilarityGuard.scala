@@ -246,12 +246,13 @@ object SimilarityGuard {
 
   /** Within-cell sampled pair survival below which the corpus is
     * called boundary-dominated. Calibrated against the r13 measurement
-    * matrix: the clustered audit corpus (GenClustered: blobs of 50 at
-    * within-blob cosine ~0.997) samples survival ~0.1-0.2 (same-blob
-    * pairs are a solid minority of within-cell pairs), while unclustered
-    * bench embeddings sample ~0 (random cosine clears a 0.8 threshold
-    * essentially never) — an order of magnitude of separation on each
-    * side of 0.02.
+    * matrix: a clustered corpus (blobs of 50 at within-blob cosine
+    * ~0.997) samples survival ~0.1-0.4 (same-blob pairs are a solid
+    * minority of within-cell pairs), while unclustered bench embeddings
+    * sample ~0 (random cosine clears a 0.8 threshold essentially never)
+    * — an order of magnitude of separation on each side of 0.02. The
+    * 100× readings (0.41 clustered, 0.0000 unclustered) are in
+    * `tools/check_sf10_r14.txt`.
     */
   val MinClusteredSurvival: Double = 0.02
 
@@ -273,12 +274,6 @@ object SimilarityGuard {
     * before a run, assert after); production reads the WARN log.
     */
   @volatile private[graft] var lastClusterednessWarning: Option[String] = None
-
-  /** Last survival [[clusterednessProbe]] measured (None when the pair
-    * floor wasn't met) — read by specs and the audit tooling; the
-    * production surface is the INFO/WARN log.
-    */
-  @volatile private[graft] var lastClusterednessSurvival: Option[Double] = None
 
   /** Measure within-cell pair survival on a bounded deterministic
     * sample of `assigned` (columns `cell`, `id`, `v`) and WARN when the
@@ -312,8 +307,6 @@ object SimilarityGuard {
       .head()
     val pairs = row.getLong(0)
     val survival = row.getDouble(1)
-    lastClusterednessSurvival =
-      if (pairs < ClusterednessMinPairs) None else Some(survival)
     if (pairs < ClusterednessMinPairs) None
     else {
       log.info(f"$site: sampled within-cell pair survival $survival%.4f " +

@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, TimestampType}
   * non-null; key equality is exact (null keys group like SMJ's
   * natural ordering).
   *
-  * Measured regime (AsofScaleBench, NOTES_r7.md): this node wins
+  * Measured regime (NOTES_r7.md): this node wins
   * steady-state from ~2 M left rows up (0.85 vs 1.31 s at 2 M×400 k,
   * 1.94 vs 2.14 s at 20 M×4 M) and the gap WIDENS with right-payload
   * width (1.98 vs 3.27 s at 8 payload columns — union+window pays one

@@ -967,69 +967,32 @@ object Queries {
     * skewed regime APSS declares. Real prose is Zipfian at 2-grams
     * already; the widening stands in for that skew here.
     */
-  val q63ApssTfidf: Q = (s, d) => apssTfidf(s, d, wideGramKeys = false)
-
-  /** q63's body with the gram-key width as a knob ([[graft.functions
-    * .Shingling.gramKey]]): `wideGramKeys = false` is the production
-    * 64-bit path; `true` switches every dim to the 128-bit key for
-    * exactness audits at the 10¹¹+-gram decade. GramKeySpec pins both
-    * widths result-equal on the test corpus (dims are opaque labels —
-    * only a collision, not the keying, can change the answer).
-    */
-  private[graft] def apssTfidf(
-      s: SparkSession, d: String, wideGramKeys: Boolean): DataFrame = {
+  val q63ApssTfidf: Q = (s, d) => {
     // Shingle STRINGS are hashed to 64-bit dims BEFORE the staged
     // checkpoint (the q22 gram-key move): the checkpoint and every
     // posting-build / candidate shuffle then carry an 8-byte long per
     // gram instead of a ~30-byte UTF-8 string — the difference between
     // the TF-IDF build fitting one box's disk at 100× and out-spilling
-    // it. Collision note: two distinct shingles hashing equal would
-    // merge their df counts and falsely match in the verify walk; at
-    // 10⁹ distinct grams the any-collision odds are ~2.7% (birthday
-    // bound over 2⁶⁴) and a single collision perturbs one dim of the
-    // affected vectors — acceptable for a near-dup screen, absent
-    // entirely on the gated corpora, and eliminable at the top decade
-    // with wideGramKeys (128-bit dims, ~4× key bytes).
+    // it. Collisions: see [[graft.functions.Shingling.gramKey]].
     val sh = Tables.documents(s, d)
       .select(col("doc_id"),
         transform(
           graft.functions.Shingling.sortedShingles(
             TextAnalytics.tokens(col("text")), 3),
-          g => graft.functions.Shingling.gramKey(g, wideGramKeys)).as("sh"))
+          g => graft.functions.Shingling.gramKey(g)).as("sh"))
       .where(size(col("sh")) > 0)
       // feeds the N count, the df table, and the terms regroup
       .transform(graft.core.StagingScope.stage(_))
     val n = sh.count() // corpus size for idf — one count job at any scale
     val e = sh.select(col("doc_id"), explode(col("sh")).as("dim"))
     val dfreq = e.groupBy("dim").agg(count(lit(1)).as("df"))
-    val termsRaw = e.join(dfreq, "dim")
+    val terms = e.join(dfreq, "dim")
       .groupBy("doc_id")
       .agg(collect_list(struct(
         col("dim"),
         log(lit(n.toDouble) / col("df")).as("w"))).as("terms"))
-    // Audit decade: stage the TF-IDF vectors through scratch parquet
-    // ([[graft.core.Staging]]) so the gram-explode / df / regroup
-    // shuffles — the biggest files this query ever writes — become
-    // reapable the moment the vectors exist, instead of pinning the
-    // disk for the whole pairs computation (the 1000× audit died on
-    // exactly those dead files three times). Below the threshold the
-    // plan is unchanged — Apss's own materialize-once staging already
-    // covers the gate scales.
-    val audit = n >= 1000000
-    val terms =
-      if (audit) graft.core.Staging.scratchParquet(termsRaw) else termsRaw
-    // scratchStage routes Apss's own per-vector index through the same
-    // seam at the audit decade — the index build's exchanges are the
-    // other ~30 GB of producer shuffle files that otherwise stay
-    // pinned while the grid passes need the disk
-    val pairs = Apss.cosinePairs(terms, "doc_id", "terms",
-      threshold = 0.6, maxBroadcastDims = 0, scratchStage = audit)
-    // the per-vector index (staged inside cosinePairs) is the ONLY
-    // leaf the pairs plan reads — the staged terms parquet is
-    // superseded the moment cosinePairs returns, so reclaim its ~5 GB
-    // before the grid passes need the disk
-    if (audit) graft.core.Staging.drop(terms)
-    pairs
+    Apss.cosinePairs(terms, "doc_id", "terms",
+      threshold = 0.6, maxBroadcastDims = 0)
   }
 
   /** Benchmark decontamination ([[graft.ops.Decontaminate]]): the

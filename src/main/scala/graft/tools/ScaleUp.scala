@@ -35,7 +35,7 @@ object ScaleUp {
     def write(df: DataFrame, t: String): Unit = {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val stage = Files.createTempDirectory("graft_scaleup_")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.resolve("o").toString)
+      graft.sinks.Sinks.writeTable(df.coalesce(1), stage.resolve("o").toString)
       val part = {
         import scala.jdk.CollectionConverters._
         scala.util.Using.resource(Files.list(stage.resolve("o"))) { l =>

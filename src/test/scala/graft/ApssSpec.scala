@@ -78,17 +78,6 @@ class ApssSpec extends SparkSpec {
       s"missed=${one diff sharded} extra=${sharded diff one}")
   }
 
-  test("scratch-parquet index staging gives identical pairs (audit seam)") {
-    val corpus = sparseCorpus(19, n = 120, dims = 30, nnz = 8)
-    val df = toDf(corpus)
-    val ck = Apss.cosinePairs(df, "id", "terms", 0.4)
-      .as[(Long, Long, Double)].collect().toSet
-    val pq = Apss.cosinePairs(df, "id", "terms", 0.4, scratchStage = true)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(ck.nonEmpty && pq == ck,
-      s"missed=${ck diff pq} extra=${pq diff ck}")
-  }
-
   test("cosinePairs sims match local computation to 4 decimals") {
     val corpus = sparseCorpus(7, n = 80, dims = 20, nnz = 6)
     val maps = corpus.map { case (i, ts) => i -> ts.toMap }.toMap
@@ -293,8 +282,8 @@ class ApssSpec extends SparkSpec {
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     // the knob is a byte budget expressed in 8-byte-dim PAIRS: string
     // dims attach ~3x the bytes per pair (measured, check_sf10_r12),
-    // so the same setting must hold ~4x fewer pairs — flipping the
-    // width flag alone can never reinstate the one-pass death
+    // so the same setting must hold ~4x fewer pairs — a string-dim
+    // corpus can never reinstate the one-pass death
     assert(Apss.widthScaledShardPairs(32000000L, LongType) == 32000000L)
     assert(Apss.widthScaledShardPairs(32000000L, IntegerType) == 32000000L)
     assert(Apss.widthScaledShardPairs(32000000L, StringType) == 8000000L)

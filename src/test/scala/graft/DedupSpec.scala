@@ -341,9 +341,9 @@ class DedupSpec extends SparkSpec {
     import graft.ops.SimilarityGuard
     val dim = 16
     val rnd = new scala.util.Random(41)
-    // clustered regime (GenClustered in miniature): 50 tight blobs of
-    // 40, members at center + 0.05 noise — within-blob cosine ~0.999,
-    // cross-blob ~0; the corpus shape SemDeDup assumes
+    // clustered regime (the 100× clustered corpus in miniature): 50
+    // tight blobs of 40, members at center + 0.05 noise — within-blob
+    // cosine ~0.999, cross-blob ~0; the corpus shape SemDeDup assumes
     val centers = Array.fill(50, dim)(rnd.nextDouble() * 2 - 1)
     val clustered = (0L until 2000L).map { i =>
       val c = centers((i / 40).toInt)

@@ -192,9 +192,47 @@ class LintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"${hits.size} sites:\n" + hits.mkString("\n"))
   }
 
+  test("one way to stage, on disk: src/main writes parquet only in " +
+      "sinks/Sinks and in streaming/StreamGate's gate directories") {
+    // a write chain: `.write`/`.writeStream` plus its continuation
+    // lines (those starting with `.`)
+    val write = """\.write(?:Stream)?\b""".r
+    val allow = Set("Sinks.scala", "StreamGate.scala")
+    val hits = for {
+      (p, src) <- mainSources
+      lines = codeLines(src)
+      ((ln, line), i) <- lines.zipWithIndex
+      m <- write.findAllMatchIn(line)
+      chain = (line.substring(m.start) +: lines.drop(i + 1).map(_._2)
+        .takeWhile(_.trim.startsWith("."))).mkString(" ")
+      if chain.contains("parquet")
+      if !allow.contains(p.getFileName.toString)
+    } yield s"$p:$ln: ${line.trim}"
+    assert(hits.isEmpty, "write parquet through graft.sinks.Sinks:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("mains census: the src/main objects that define `def main` are " +
+      "exactly Bench, Verify, tools.PlanAudit and tools.ScaleUp") {
+    val obj = """\bobject\s+(\w+)""".r
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val entry = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val mains = for {
+      (_, src) <- mainSources
+      code = codeLines(src).map(_._2).mkString("\n")
+      at <- entry.findAllMatchIn(code).map(_.start).toSeq
+      // the enclosing object is the last one opened before the entry
+      name = obj.findAllMatchIn(code.substring(0, at)).toSeq.lastOption
+        .fold("?")(_.group(1))
+    } yield pkg.findFirstMatchIn(code).fold("")(_.group(1) + ".") + name
+    assert(mains.sorted == Seq("graft.Bench", "graft.Verify",
+      "graft.tools.PlanAudit", "graft.tools.ScaleUp"),
+      mains.sorted.mkString(", "))
+  }
+
   test("env-knob census: src/main reads exactly the eight SPARK_GRAFT_* " +
-      "knobs of Session, Bench and Verify and the three APSS shard " +
-      "overrides — a new knob is added on purpose, here") {
+      "knobs of Session, Bench and Verify — a new knob is added on " +
+      "purpose, here") {
     val read = """\b(?:sys\.env|System\.getenv)\b""".r
     val named =
       """\b(?:sys\.env(?:\.get|\.getOrElse|\.contains|\.apply)?|System\.getenv)\(\s*"(\w+)"""".r
@@ -213,8 +251,7 @@ class LintSpec extends AnyFunSuite {
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
       "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_LOAD_WAITS",
       "SPARK_GRAFT_VERIFY_SKIP_EXISTING", "SPARK_GRAFT_VERIFY_ONLY",
-      "SPARK_GRAFT_VERIFY_EXCEPT", "GRAFT_APSS_VERIFY_SHARD_PAIRS",
-      "GRAFT_APSS_CAND_SHARD_MEETINGS", "GRAFT_APSS_POSTING_SHARD_ROWS"),
+      "SPARK_GRAFT_VERIFY_EXCEPT"),
       names.toSeq.sorted.mkString(", "))
   }
 
