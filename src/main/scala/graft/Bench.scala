@@ -209,6 +209,16 @@ object Bench {
       throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$v'")))
 
+  /** `SPARK_GRAFT_BENCH_LOAD_WAITS` (unset: 10): how many 60 s waits
+    * the load guard allows for the machine to drain. Zero is allowed
+    * (refuse at once on a busy machine); anything but a non-negative
+    * integer is refused by name.
+    */
+  private[graft] def loadWaitsOf(value: Option[String]): Int =
+    value.fold(10)(v => v.trim.toIntOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_LOAD_WAITS must be a non-negative integer, got '$v'")))
+
   /** The headline queries `SPARK_GRAFT_BENCH_ONLY` (comma-separated;
     * unset: all) selects, in headline order. A developer knob for
     * iterating on one operator; a name outside the headline is refused
@@ -224,6 +234,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = passesOf(sys.env.get("SPARK_GRAFT_BENCH_PASSES"))
     val sweep = sweepOf(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val maxWaits = loadWaitsOf(sys.env.get("SPARK_GRAFT_BENCH_LOAD_WAITS"))
     val spark = graft.core.Session.start()
     // LOAD GUARD: a busy machine inflates every pass uniformly and the
     // per-query median can't reject it (rounds 4 and 6 both shipped
@@ -232,10 +243,6 @@ object Bench {
     // while the 1-minute load is above threshold; if it never drains,
     // exit non-zero WITHOUT printing the result JSON so a contaminated
     // sweep can never become BENCH_rN.json.
-    // a malformed env var falls back to the default rather than
-    // aborting the sweep with a NumberFormatException
-    val maxWaits = sys.env.get("SPARK_GRAFT_BENCH_LOAD_WAITS")
-      .flatMap(_.toIntOption).getOrElse(10)
     var waits = 0
     // read loadavg ONCE per iteration so the value logged is the value
     // the condition actually tested

@@ -23,10 +23,6 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // developer knob for large-SF audit reruns: skip queries whose
-    // output already committed (the driver never sets it, so gate runs
-    // always recompute everything)
-    val skipExisting = sys.env.get("SPARK_GRAFT_VERIFY_SKIP_EXISTING").contains("1")
     // developer knob: restrict to a comma-separated query subset (the
     // driver never sets it, so gate runs always cover the catalog)
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
@@ -46,7 +42,7 @@ object Verify {
       System.err.println(s"[verify] $n EXCLUDED by SPARK_GRAFT_VERIFY_EXCEPT"))
     val spark = graft.core.Session.start()
     new java.io.File(outDir).mkdirs()
-    var ran, skipped, failed = 0
+    var ran, failed = 0
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .filter { case (name, _) => !except.contains(name) }
@@ -57,10 +53,7 @@ object Verify {
       // at audit scales that serializes minutes of parallel work.
       // The extra exchange moves only the (small) result rows.
       val t0 = System.nanoTime()
-      if (skipExisting && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))) {
-        skipped += 1
-        System.err.println(s"[verify] $name skipped (exists)")
-      } else try {
+      try {
         graft.sinks.Sinks.writeTable(fn(spark, sfDir).repartition(1),
           s"$outDir/$name")
         ran += 1
@@ -74,10 +67,10 @@ object Verify {
       graft.core.StagingScope.drain()
     }
     // completeness footer: the evidence file must account for every
-    // catalog entry — run + skipped-existing + excluded-by-name must
-    // sum to the catalog (when no ONLY restriction is active)
+    // catalog entry — run + failed + excluded-by-name must sum to the
+    // catalog (when no ONLY restriction is active)
     System.err.println(s"[verify] catalog=${SparkEntry.queries.size} " +
-      s"ran=$ran skipped_existing=$skipped failed=$failed " +
+      s"ran=$ran failed=$failed " +
       s"excluded=${except.size}" +
       (if (only.isDefined) " (ONLY restriction active)" else ""))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

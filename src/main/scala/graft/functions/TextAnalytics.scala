@@ -145,32 +145,6 @@ object TextAnalytics {
           i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
         .otherwise(array()))
 
-  /** Convenience form over raw text — ONLY for one-shot/small inputs;
-    * pipelines must materialize `tokens` first (see [[shinglesOf]]).
-    */
-  def shingles(text: Column, n: Int): Column = shinglesOf(tokens(text), n)
-
-  /** Winnowing fingerprint (the rolling-hash document fingerprint of
-    * MOSS): hash every k-gram shingle, slide a window of `w` hashes,
-    * keep each window's minimum — guaranteeing any shared substring of
-    * length >= k+w-1 between two documents yields a shared fingerprint.
-    * `hashesCol` must be a MATERIALIZED array of shingle hashes (see
-    * [[shingleHashes]] and the [[shinglesOf]] materialization rule).
-    */
-  def winnow(hashesCol: Column, w: Int): Column = {
-    require(w >= 1)
-    array_distinct(
-      when(size(hashesCol) >= w,
-        transform(
-          sequence(lit(0), size(hashesCol) - w),
-          i => array_min(slice(hashesCol, i + 1, lit(w)))))
-        .otherwise(when(size(hashesCol) > 0, array(array_min(hashesCol)))
-          .otherwise(array().cast("array<bigint>"))))
-  }
-
-  /** xxhash64 of every k-gram shingle, in positional order (input to
-    * [[winnow]]); `toksCol` must be a materialized token array.
-    */
   /** GPT-2-style pre-tokenizer pattern (the "BPE-ish regex"): common
     * English contractions, optionally-space-prefixed letter runs, digit
     * runs, punctuation runs, residual whitespace. ASCII classes only so
@@ -186,13 +160,6 @@ object TextAnalytics {
     */
   def bpePieces(text: Column): Column =
     regexp_extract_all(text, lit(BpePattern), lit(0))
-
-  def shingleHashes(toksCol: Column, k: Int): Column =
-    when(size(toksCol) >= k,
-      transform(
-        sequence(lit(0), size(toksCol) - k),
-        i => xxhash64(concat_ws(" ", slice(toksCol, i + 1, lit(k))))))
-      .otherwise(array().cast("array<bigint>"))
 
   /** Gopher-style REPETITION quality signals over a MATERIALIZED token
     * array (after Rae et al. 2021 table A1, restated over token

@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   *
   * `bound(d)` is the corpus-wide max |weight| for a closed self-join
   * ([[cosinePairs]]), or the universal unit-vector bound 1.0 for an
-  * OPEN-WORLD index ([[buildIndex]] with `openWorld = true`) that must
-  * stay exact against query vectors it has never seen — the
-  * incremental-dedup shape: index the corpus once, probe every new
-  * batch against it.
+  * OPEN-WORLD cross-set probe ([[probePairs]]) that must stay exact
+  * against query vectors the corpus side has never seen — the
+  * incremental-dedup shape: probe every new batch against the
+  * corpus.
   *
   * Candidates are the posted-dim equi-join — every shuffle is keyed by
   * dim then by id, nothing quadratic materializes — verified by the
@@ -236,13 +236,12 @@ object Apss {
   }
 
   /** Candidate pairs from two posting lists meeting on shared dims,
-    * with the [[Dedup.simHashPairs]] SKEW GUARD: a hot dim (posted by
-    * many vectors) would make one join task quadratic, so dims whose
-    * BUILD-side posting list exceeds `dimCap` split into g salt
-    * groups — the probe side keeps its own salt, the build side fans
-    * out to all g, every pair still meets and the worst task shrinks
-    * g-fold. Output is distinct (id_a, id_b); `ordered` adds the
-    * id_a < id_b self-join constraint. Pure plan construction — the
+    * split by [[SkewJoin.crossJoin]]: a hot dim (posted by many
+    * vectors) would make one join task quadratic, so dims whose
+    * BUILD-side posting list exceeds `dimCap` split into salt groups,
+    * every pair still meets and the worst task shrinks. Output is
+    * distinct (id_a, id_b); `ordered` adds the id_a < id_b self-join
+    * constraint. Pure plan construction — the
     * pre-flight guard and the predicted posting-meeting volume (which
     * also feeds the `observed` telemetry here) live in [[pairsAuto]],
     * so sharded passes don't re-aggregate the dfs per pass.
@@ -263,18 +262,8 @@ object Apss {
     // instead of twice and both join inputs shrink before the exchange.
     // Grid cells pass None: their per-cell build slice needs its own
     // counts for the salt sizing.
-    val groups = meetDims.getOrElse(buildSide.groupBy("dim")
-      .agg(ceil(count(lit(1)) / lit(dimCap)).cast("int").as("g")))
-    val a = probeSide.join(groups, Seq("dim"))
-      .select(col("dim"),
-        pmod(xxhash64(col("id")), col("g")).cast("int").as("salt"),
-        col("id").as("id_a"), col("rem").as("rem_a"), col("wn").as("wn_a"),
-        col("dropped").as("da"))
-    val bSalted = buildSide.join(groups, Seq("dim"))
-      .select(col("dim"),
-        explode(sequence(lit(0), col("g") - 1)).as("salt"),
-        col("id").as("id_b"), col("rem").as("rem_b"), col("wn").as("wn_b"),
-        col("dropped").as("db"))
+    val groups = meetDims.getOrElse(
+      SkewJoin.saltGroups(buildSide, Seq("dim"), dimCap))
     // JOIN STRATEGY, picked deliberately (guide §3.1) when the caller
     // measured the sides (one-pass path). A checkpoint-backed posting
     // scan carries no usable size statistics, so left to the planner
@@ -288,10 +277,10 @@ object Apss {
     // and the dimCap salt bounds the per-dim build lists). Grid cells
     // (meetDims == None) keep planner choice — their per-cell sizes
     // are unmeasured and sort-merge's spill grace is the safe default.
-    val b =
-      if (broadcastBuild) broadcast(bSalted)
-      else if (meetDims.isDefined) bSalted.hint("shuffle_hash")
-      else bSalted
+    val strategy: DataFrame => DataFrame =
+      if (broadcastBuild) broadcast(_)
+      else if (meetDims.isDefined) _.hint("shuffle_hash")
+      else identity
     // TWO aggregated prunes, both provably exact:
     //
     // RESIDUAL BOUND (Bayardo's remscore, symmetric): the shared
@@ -318,7 +307,12 @@ object Apss {
     // The 1e-9 slack keeps float round-off from pruning a knife-edge
     // qualifying pair.
     val cand = SimilarityGuard.observed(
-      a.join(b, Seq("dim", "salt"))
+      SkewJoin.crossJoin(probeSide, buildSide, groups, Seq("dim"),
+        Seq(col("id").as("id_a"), col("rem").as("rem_a"),
+          col("wn").as("wn_a"), col("dropped").as("da")),
+        Seq(col("id").as("id_b"), col("rem").as("rem_b"),
+          col("wn").as("wn_b"), col("dropped").as("db")),
+        strategy)
         .where(if (ordered) col("id_a") < col("id_b") else lit(true)),
       "Apss.candidatesOf", predicted)
       .groupBy("id_a", "id_b")
@@ -670,14 +664,14 @@ object Apss {
         else col("df").cast("double") * col("dfp")), lit(0.0)),
       count(lit(1)),
       coalesce(sum(when(meetCapable,
-        col("df").cast("double") * ceil(col("df") / lit(dimCap))))
+        col("df").cast("double") * SkewJoin.saltCount(col("df"), dimCap)))
         , lit(0.0))).head()
     val predicted = SimilarityGuard.volumeOf(volRow, 0)
     val nDims = volRow.getLong(1)
     val saltedBuildRows = SimilarityGuard.volumeOf(volRow, 2)
     val meetDims0 = dimDf
       .where(if (ordered) col("df") >= 2 else lit(true))
-      .select(col("dim"), ceil(col("df") / lit(dimCap)).cast("int").as("g"))
+      .select(col("dim"), SkewJoin.saltGroup(col("df"), dimCap))
     // a checkpoint root carries no size statistics, so without the hint
     // the planner sort-merges the posting⋈groups attach — a full
     // posting exchange by dim where the pre-fusion plan's AQE broadcast
@@ -809,10 +803,7 @@ object Apss {
     * localCheckpoint — without it the scan + normalize + greedy-decide
     * lineage replays per consumer, which at catalog scale is ~2.5× the
     * query's whole runtime in redundant stages. Storage is
-    * corpus-proportional (exactly what [[buildIndex]].persist costs);
-    * blocks free when the plan is garbage-collected. For
-    * build-once/probe-many with explicit lifetime control use
-    * [[buildIndex]]/[[ApssIndex.release]].
+    * corpus-proportional; blocks free at the query-boundary drain.
     *
     * `maxBroadcastDims` bounds the vocabulary size above which the
     * per-dim bounds attach by keyed join instead of one broadcast map
@@ -842,10 +833,9 @@ object Apss {
     * with cosine ≥ threshold, both sides indexed on the fly under the
     * open-world unit bound (which is what keeps each side's drops sound
     * against vectors the other side never saw — the [[cosinePairs]]
-    * closed-corpus bounds would be unsound across sets). Declarative
-    * form of [[ApssIndex.probe]] for callers that don't need the
-    * build-once/probe-many lifecycle; identical ids pair like any other
-    * rows (filter `query_id =!= corpus_id` if the sets overlap).
+    * closed-corpus bounds would be unsound across sets). Identical ids
+    * pair like any other rows (filter `query_id =!= corpus_id` if the
+    * sets overlap).
     */
   def probePairs(
       corpus: DataFrame,
@@ -863,85 +853,6 @@ object Apss {
       dimCap = 4096, threshold, q.count(), maxCandidates)
       .withColumnRenamed("id_a", "query_id")
       .withColumnRenamed("id_b", "corpus_id")
-  }
-
-  /** A built sparse-cosine index: the per-vector (map, postings) table,
-    * persisted — build once, pair/probe many, [[release]] when done
-    * (the [[Similarity.ivfBuild]] lifecycle).
-    *
-    * `openWorld = true` posts against the universal bound 1.0 instead
-    * of the corpus max-weights: postings grow slightly, but the t/2
-    * guarantee then holds against ANY future unit-normalized query
-    * set, making [[ApssIndex.probe]] exact for vectors the build never
-    * saw. A closed index (`openWorld = false`) is only exact for
-    * [[ApssIndex.selfPairs]].
-    */
-  def buildIndex(
-      vecs: DataFrame,
-      idCol: String,
-      termsCol: String,
-      threshold: Double,
-      openWorld: Boolean = false,
-      maxBroadcastDims: Int = DefaultMaxBroadcastDims): ApssIndex = {
-    require(threshold > 0.0, "prefix filtering needs a positive threshold")
-    val (perVec, innerStaged) =
-      if (openWorld)
-        (perVecOf(vecs, idCol, termsCol, threshold / 2, mw = None), None)
-      else perVecClosedOf(vecs, idCol, termsCol, threshold / 2, maxBroadcastDims)
-    val persisted = perVec.persist()
-    // the keyed path staged the normalized corpus; materialize the
-    // index now (build-once/probe-many — an eager build is the
-    // expected lifecycle) so the inner staging can release immediately
-    innerStaged.foreach { st =>
-      persisted.count()
-      org.apache.spark.sql.classic.GraftColumnBridge.unpersistLocalCheckpoint(st)
-    }
-    ApssIndex(threshold, openWorld, persisted)
-  }
-
-  final case class ApssIndex(
-      threshold: Double,
-      openWorld: Boolean,
-      perVec: DataFrame) {
-
-
-
-    /** Exact (id_a < id_b, sim) pairs within the indexed corpus —
-      * [[cosinePairs]] semantics off the persisted index.
-      */
-    def selfPairs(
-        maxCandidates: Long = SimilarityGuard.Auto): DataFrame = {
-      val posted = postingsOf(perVec)
-      pairsAuto(posted, posted, perVec, perVec, ordered = true,
-        dimCap = 4096, threshold, perVec.count(), maxCandidates)
-    }
-
-    /** Exact cross-set pairs: every (query_id, corpus_id, sim) with
-      * cosine ≥ threshold. Requires an open-world index — the
-      * unit-vector bound is what keeps corpus-side drops sound against
-      * queries the build never saw. The query side is indexed on the
-      * fly with the same rule; candidates meet on shared posted dims.
-      * Identical ids on both sides pair like any other rows (callers
-      * filter if the sets overlap).
-      */
-    def probe(
-        queries: DataFrame,
-        idCol: String,
-        termsCol: String,
-        maxCandidates: Long = SimilarityGuard.Auto): DataFrame = {
-      require(openWorld,
-        "probe needs an open-world index: buildIndex(..., openWorld = true)")
-      // query-side index feeds both the candidate join and the verify —
-      // materialize once (same reasoning as cosinePairs)
-      val q = graft.core.StagingScope.stage(
-        perVecOf(queries, idCol, termsCol, threshold / 2, mw = None))
-      pairsAuto(postingsOf(q), postingsOf(perVec), q, perVec,
-        ordered = false, dimCap = 4096, threshold, q.count(), maxCandidates)
-        .withColumnRenamed("id_a", "query_id")
-        .withColumnRenamed("id_b", "corpus_id")
-    }
-
-    def release(): Unit = { perVec.unpersist(); () }
   }
 
   /** Deterministic top-`m`-by-magnitude sparsification of a dense

@@ -569,9 +569,9 @@ object Decontaminate {
     * twin): join the two NARROW posting tables per gram, count shared
     * grams per (train, bench) pair, jaccard = ov / (szT + szB − ov) —
     * the identical double division the sorted-merge kernel performs.
-    * Hot grams salt-split by the TRAIN-side df (the big side): train
-    * rows keep their own salt, bench rows fan out to all g =
-    * ceil(df_train/cap) salts, so every (train, bench) pair still
+    * Hot grams salt-split by the TRAIN-side df, the big side
+    * ([[SkewJoin.crossJoin]]): train rows keep their own salt, bench
+    * rows fan out to all of them, so every (train, bench) pair still
     * meets exactly once per shared gram; bench grams absent from the
     * training corpus drop in the df join (they cannot contribute
     * overlap). The benchmark side is small by design — a benchmark
@@ -582,17 +582,11 @@ object Decontaminate {
       postsB: DataFrame,
       threshold: Double,
       bucketCap: Int = 4096): DataFrame = {
-    val groups = postsT.groupBy("tok")
-      .agg(ceil(count(lit(1)) / lit(bucketCap)).cast("int").as("g"))
-    val t = postsT.join(groups, Seq("tok"))
-      .select(col("tok"),
-        pmod(xxhash64(col("id")), col("g")).cast("int").as("salt"),
-        col("id"), col("sz"))
-    val b = postsB.join(groups, Seq("tok"))
-      .select(col("tok"),
-        explode(sequence(lit(0), col("g") - 1)).as("salt"),
-        col("id").as("bench_id"), col("sz").as("sz_b"))
-    t.join(b, Seq("tok", "salt"))
+    SkewJoin
+      .crossJoin(postsT, postsB,
+        SkewJoin.saltGroups(postsT, Seq("tok"), bucketCap), Seq("tok"),
+        Seq(col("id"), col("sz")),
+        Seq(col("id").as("bench_id"), col("sz").as("sz_b")))
       .groupBy("id", "bench_id", "sz", "sz_b")
       .agg(count(lit(1)).as("ov"))
       .withColumn("jaccard",
@@ -651,25 +645,17 @@ object Decontaminate {
     def buckets(sh: DataFrame) = sh
       .select(col("id"), Dedup.minHashSignature(col("sh"), numHashes).as("sig"))
       .select(col("id"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
-    // SKEW GUARD ([[graft.ops.Dedup.simHashPairs]] pattern, cross-set
-    // form): a hot bucket on the TRAIN side — boilerplate mass-
-    // duplicated across the corpus — concentrates dfT×dfB pair work in
-    // one task. Split train buckets over `bucketCap` rows into g salt
-    // groups (train keeps its own salt, the small bench side fans out
-    // to all g): per-task work drops to (dfT/g)·dfB, the pair set is
-    // unchanged.
+    // SKEW GUARD ([[SkewJoin.crossJoin]]): a hot bucket on the TRAIN
+    // side — boilerplate mass-duplicated across the corpus —
+    // concentrates dfT×dfB pair work in one task. Train buckets over
+    // `bucketCap` rows split into g salt groups (train keeps its own
+    // salt, the small bench side fans out to all g): per-task work
+    // drops to (dfT/g)·dfB, the pair set is unchanged.
     val bT = graft.core.StagingScope.stage(buckets(shT))
-    val groups = bT.groupBy("bb")
-      .agg(ceil(count(lit(1)) / lit(bucketCap)).cast("int").as("g"))
-    val candidates = bT.join(groups, Seq("bb"))
-      .select(col("bb"),
-        pmod(xxhash64(col("id")), col("g")).cast("int").as("salt"), col("id"))
-      .join(
-        buckets(shB).join(groups, Seq("bb"))
-          .select(col("bb"),
-            explode(sequence(lit(0), col("g") - 1)).as("salt"),
-            col("id").as("bench_id")),
-        Seq("bb", "salt"))
+    val candidates = SkewJoin
+      .crossJoin(bT, buckets(shB),
+        SkewJoin.saltGroups(bT, Seq("bb"), bucketCap), Seq("bb"),
+        Seq(col("id")), Seq(col("id").as("bench_id")))
       .select("id", "bench_id")
       .distinct()
     candidates

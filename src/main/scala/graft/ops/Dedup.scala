@@ -141,24 +141,14 @@ object Dedup {
       // bucket rows are narrow (bucket key + id), so this is cheap
       .transform(graft.core.StagingScope.stage(_))
 
-    // SKEW GUARD (the [[simHashPairs]] pattern): a hot bucket — e.g.
+    // SKEW GUARD ([[SkewJoin.selfJoin]]): a hot bucket — e.g.
     // mass-duplicated boilerplate hashing every band identically —
-    // makes one join task quadratic. Buckets over `bucketCap` rows
-    // split into g = ceil(n/cap) salt groups: probe keeps its own
-    // salt, build fans out to all g, every pair still meets exactly
-    // once per shared bucket. Pure work redistribution — the pair set
-    // is unchanged (spec-pinned by the cap-forcing invariance test).
-    val groups = buckets.groupBy("bb")
-      .agg(ceil(count(lit(1)) / lit(bucketCap)).cast("int").as("g"))
-    val sized = buckets.join(groups, Seq("bb"))
-    val a = sized.select(col("bb"),
-      pmod(xxhash64(col("id")), col("g")).cast("int").as("salt"),
-      col("id").as("id_a"))
-    val b = sized.select(col("bb"),
-      explode(sequence(lit(0), col("g") - 1)).as("salt"),
-      col("id").as("id_b"))
-    val candidates = a
-      .join(b, Seq("bb", "salt"))
+    // would make one join task quadratic; buckets over `bucketCap` rows
+    // split by salt, the pair set unchanged (spec-pinned by the
+    // cap-forcing invariance test).
+    val candidates = SkewJoin
+      .selfJoin(buckets, Seq("bb"), bucketCap,
+        Seq(col("id").as("id_a")), Seq(col("id").as("id_b")))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
@@ -413,13 +403,10 @@ object Dedup {
     * (~tens of bytes each) instead of candidates × document-length
     * array elements — the winning regime for df-heavy corpora whose
     * candidate sets are large but gram volume linear (the 100× audit
-    * shape). Per-gram salting (the [[simHashPairs]] bucket-guard
-    * idiom) keeps a single hot gram from becoming one quadratic task:
-    * the probe side keeps its own salt, the build side fans out to all
-    * g = ceil(df/cap) salts, so every pair still meets exactly once
-    * per shared gram.
-    */
-  /** Test hook: the count verify over a docs frame with a forced salt
+    * shape). Per-gram salting ([[SkewJoin.selfJoin]]) keeps a single
+    * hot gram from becoming one quadratic task.
+    *
+    * Test hook: the count verify over a docs frame with a forced salt
     * cap — pins pair-set invariance under hot-gram splitting.
     */
   private[graft] def gramCountSelfVerifyForTest(
@@ -444,16 +431,10 @@ object Dedup {
       posts: DataFrame,
       threshold: Double,
       bucketCap: Int = 4096): DataFrame = {
-    val groups = posts.groupBy("block", "tok")
-      .agg(ceil(count(lit(1)) / lit(bucketCap)).cast("int").as("g"))
-    val sized = posts.join(groups, Seq("block", "tok"))
-    val aSide = sized.select(col("block"), col("tok"),
-      pmod(xxhash64(col("id")), col("g")).cast("int").as("salt"),
-      col("id").as("id_a"), col("sz").as("sz_a"))
-    val bSide = sized.select(col("block"), col("tok"),
-      explode(sequence(lit(0), col("g") - 1)).as("salt"),
-      col("id").as("id_b"), col("sz").as("sz_b"))
-    aSide.join(bSide, Seq("block", "tok", "salt"))
+    SkewJoin
+      .selfJoin(posts, Seq("block", "tok"), bucketCap,
+        Seq(col("id").as("id_a"), col("sz").as("sz_a")),
+        Seq(col("id").as("id_b"), col("sz").as("sz_b")))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("ov"))
@@ -599,13 +580,10 @@ object Dedup {
     * near-identical docs differing in <= 3 bits must agree on at least
     * one of the 4 chunks), then verify with exact Hamming distance.
     *
-    * SKEW GUARD: a popular chunk value (e.g. 0 across short docs) makes
-    * one bucket's pair space quadratic IN ONE TASK. Buckets larger than
-    * `bucketCap` are split into g = ceil(n/cap) salt groups: the probe
-    * side keeps its own salt, the build side fans out to all g salts, so
-    * every (a, b) pair still meets exactly once (at a's salt) while the
-    * worst single task shrinks g-fold. Results are identical to the
-    * unsalted join — this redistributes work, it never drops candidates.
+    * SKEW GUARD ([[SkewJoin.selfJoin]]): a popular chunk value (e.g. 0
+    * across short docs) would make one bucket's pair space quadratic IN
+    * ONE TASK; buckets larger than `bucketCap` split by salt, the
+    * candidates unchanged.
     */
   def simHashPairs(
       fps: DataFrame,
@@ -622,18 +600,10 @@ object Dedup {
       // sizing and both join sides) — the un-staged form replayed the
       // upstream fingerprint kernel per consumer
       .transform(graft.core.StagingScope.stage(_))
-    val groups = chunks.groupBy("ck").agg(
-      ceil(count(lit(1)) / lit(bucketCap)).cast("int").as("g"))
-    val sized = chunks.join(groups, Seq("ck"))
-    val a = sized.select(
-      col("ck"),
-      pmod(xxhash64(col("id")), col("g")).cast("int").as("salt"),
-      col("id").as("id_a"), col("simhash").as("fp_a"))
-    val b = sized.select(
-      col("ck"),
-      explode(sequence(lit(0), col("g") - 1)).as("salt"),
-      col("id").as("id_b"), col("simhash").as("fp_b"))
-    a.join(b, Seq("ck", "salt"))
+    SkewJoin
+      .selfJoin(chunks, Seq("ck"), bucketCap,
+        Seq(col("id").as("id_a"), col("simhash").as("fp_a")),
+        Seq(col("id").as("id_b"), col("simhash").as("fp_b")))
       .where(col("id_a") < col("id_b"))
       .dropDuplicates("id_a", "id_b")
       .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
@@ -644,19 +614,15 @@ object Dedup {
   /** Embedding-cosine near-duplicate pairs, EXACT: every unordered pair
     * with cosine ≥ threshold, scored by the fused native kernel.
     *
-    * Plan: a GRID-BLOCKED self-join (the triangle variant of
-    * 1-Bucket-Theta, Okcan & Riedewald, SIGMOD 2011). Each vector hashes
-    * to one of `numBlocks` blocks; the cell grid is the upper triangle
-    * {(i,j) : i ≤ j}. A vector in block b enters cell (b, j) on the left
-    * for every j ≥ b and cell (i, b) on the right for every i ≤ b, so an
-    * unordered pair with blocks (p, q) meets in EXACTLY the cell
-    * (min(p,q), max(p,q)) — once off-diagonal, in both orientations on
-    * the diagonal (deduped by the id ordering below). The join is a pure
-    * equi-join on the cell key: KEYED shuffles only, no broadcast, and
-    * per-task state is two block slices of O(n/numBlocks) rows — nothing
-    * ever needs the whole corpus on one executor (the previous
-    * formulation broadcast the entire table through a
-    * BroadcastNestedLoopJoin, which dies at 100× scale).
+    * Plan: a GRID-BLOCKED self-join ([[SkewJoin.gridSelfJoin]], the
+    * triangle variant of 1-Bucket-Theta, Okcan & Riedewald, SIGMOD
+    * 2011): each vector hashes to one of `numBlocks` blocks and every
+    * unordered pair meets in exactly one upper-triangle cell. The join
+    * is a pure equi-join on the cell key: KEYED shuffles only, no
+    * broadcast, and per-task state is two block slices of
+    * O(n/numBlocks) rows — nothing ever needs the whole corpus on one
+    * executor (the previous formulation broadcast the entire table
+    * through a BroadcastNestedLoopJoin, which dies at 100× scale).
     *
     * Exact all-pairs over DENSE vectors is inherently Θ(n²·dim) compute;
     * this plan spreads it evenly over numBlocks·(numBlocks+1)/2 cells at
@@ -678,18 +644,10 @@ object Dedup {
     // once (vector-table-sized — the join shuffles it anyway)
     val v = graft.core.StagingScope.stage(corpus.select(
       col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"),
-      pmod(xxhash64(col(idCol)), lit(numBlocks)).cast("int").as("blk")))
-    val left = v.select(
-      explode(sequence(col("blk"), lit(numBlocks - 1))).as("cj"),
-      col("blk").as("ci"), col("id").as("id_l"), col("v").as("vl"))
-    val right = v.select(
-      explode(sequence(lit(0), col("blk"))).as("ci"),
-      col("blk").as("cj"), col("id").as("id_r"), col("v").as("vr"))
-    left.join(right, Seq("ci", "cj"))
-      // off-diagonal cells see each pair once (any orientation); the
-      // diagonal sees both orientations plus self-pairs — keep exactly
-      // the id_l < id_r copy there
-      .where(col("ci") < col("cj") || col("id_l") < col("id_r"))
+      SkewJoin.gridBlock(col(idCol), numBlocks).as("blk")))
+    SkewJoin
+      .gridSelfJoin(v, Nil, numBlocks,
+        Seq(col("v").as("vl")), Seq(col("v").as("vr")))
       .withColumn("sim", Similarity.cosine(col("vl"), col("vr")))
       .where(col("sim") >= threshold)
       .select(
@@ -908,16 +866,10 @@ object Dedup {
     // triangle grid WITHIN each cell (cf. embeddingNearDupExact): the
     // (ci, cj) sub-keys spread a hot cell's pairs across tasks
     val v = assigned.withColumn("blk",
-      pmod(xxhash64(col("id")), lit(numBlocks)).cast("int"))
-    val left = v.select(col("cell"),
-      explode(sequence(col("blk"), lit(numBlocks - 1))).as("cj"),
-      col("blk").as("ci"), col("id").as("id_l"), col("v").as("vl"))
-    val right = v.select(col("cell"),
-      explode(sequence(lit(0), col("blk"))).as("ci"),
-      col("blk").as("cj"), col("id").as("id_r"), col("v").as("vr"))
+      SkewJoin.gridBlock(col("id"), numBlocks))
     SimilarityGuard.observed(
-      left.join(right, Seq("cell", "ci", "cj"))
-        .where(col("ci") < col("cj") || col("id_l") < col("id_r")),
+      SkewJoin.gridSelfJoin(v, Seq("cell"), numBlocks,
+        Seq(col("v").as("vl")), Seq(col("v").as("vr"))),
       "Dedup.semanticNearDup", predicted)
       .withColumn("sim", Similarity.cosine(col("vl"), col("vr")))
       .where(col("sim") >= threshold)

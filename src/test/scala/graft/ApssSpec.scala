@@ -113,20 +113,6 @@ class ApssSpec extends SparkSpec {
     assert(posted < full, s"no pruning: $posted postings of $full terms")
   }
 
-  test("buildIndex/selfPairs equals cosinePairs; open-world postings are a superset") {
-    val corpus = sparseCorpus(31, n = 100, dims = 25, nnz = 7)
-    val df = toDf(corpus)
-    val want = Apss.cosinePairs(df, "id", "terms", 0.4)
-      .as[(Long, Long, Double)].collect().toSet
-    for (open <- Seq(false, true)) {
-      val idx = Apss.buildIndex(df, "id", "terms", 0.4, openWorld = open)
-      try {
-        val got = idx.selfPairs().as[(Long, Long, Double)].collect().toSet
-        assert(got == want, s"openWorld=$open")
-      } finally idx.release()
-    }
-  }
-
   test("open-world probe is EXACT for query vectors the build never saw") {
     val corpus = sparseCorpus(41, n = 120, dims = 25, nnz = 7)
     val queries = sparseCorpus(42, n = 40, dims = 25, nnz = 7)
@@ -137,20 +123,9 @@ class ApssSpec extends SparkSpec {
       q <- qm.keys; c <- cm.keys
       s = cosLocal(qm(q), cm(c)) if s >= 0.5
     } yield (q, c)).toSet
-    val idx = Apss.buildIndex(toDf(corpus), "id", "terms", 0.5, openWorld = true)
-    try {
-      val got = idx.probe(toDf(queries), "id", "terms")
-        .select("query_id", "corpus_id").as[(Long, Long)].collect().toSet
-      assert(got == want, s"missed=${want diff got} extra=${got diff want}")
-    } finally idx.release()
-    // a CLOSED index refuses to probe — its corpus-maxw drops are not
-    // sound against unseen queries
-    val closed = Apss.buildIndex(toDf(corpus), "id", "terms", 0.5)
-    try {
-      assertThrows[IllegalArgumentException] {
-        closed.probe(toDf(queries), "id", "terms")
-      }
-    } finally closed.release()
+    val got = Apss.probePairs(toDf(corpus), toDf(queries), "id", "terms", 0.5)
+      .select("query_id", "corpus_id").as[(Long, Long)].collect().toSet
+    assert(got == want, s"missed=${want diff got} extra=${got diff want}")
   }
 
   test("keyed and broadcast bound attach produce identical pairs") {
@@ -163,13 +138,6 @@ class ApssSpec extends SparkSpec {
         maxBroadcastDims = 0).as[(Long, Long, Double)].collect().toSet
       assert(viaJoin == viaMap, s"t=$t")
     }
-    // closed buildIndex under the forced keyed attach agrees too
-    val idx = Apss.buildIndex(df, "id", "terms", 0.4, maxBroadcastDims = 0)
-    try {
-      val want = Apss.cosinePairs(df, "id", "terms", 0.4)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(idx.selfPairs().as[(Long, Long, Double)].collect().toSet == want)
-    } finally idx.release()
   }
 
   test("LONG dims (hashed gram keys, the q63 shape): broadcast and keyed " +
@@ -225,6 +193,8 @@ class ApssSpec extends SparkSpec {
   }
 
   test("one-shot probePairs equals buildIndex(openWorld).probe and brute force") {
+    // the reusable open-world index is gone; probePairs is its one-shot
+    // form and must still match brute force on a second seed/threshold
     val corpus = sparseCorpus(71, n = 100, dims = 25, nnz = 7)
     val queries = sparseCorpus(72, n = 30, dims = 25, nnz = 7)
       .map { case (i, ts) => (i + 1000L, ts) }
@@ -237,12 +207,6 @@ class ApssSpec extends SparkSpec {
     val got = Apss.probePairs(toDf(corpus), toDf(queries), "id", "terms", 0.45)
       .select("query_id", "corpus_id").as[(Long, Long)].collect().toSet
     assert(got == want, s"missed=${want diff got} extra=${got diff want}")
-    val idx = Apss.buildIndex(toDf(corpus), "id", "terms", 0.45, openWorld = true)
-    try {
-      val viaIndex = idx.probe(toDf(queries), "id", "terms")
-        .select("query_id", "corpus_id").as[(Long, Long)].collect().toSet
-      assert(viaIndex == got)
-    } finally idx.release()
   }
 
   test("STRING dims (raw term vocabulary) are exact end-to-end") {

@@ -212,6 +212,24 @@ class LintSpec extends AnyFunSuite {
       hits.mkString("\n"))
   }
 
+  test("one skew split: outside ops/SkewJoin, no src/main code line " +
+      "builds the salt fan-out, the probe salt or the triangle-grid cell keys") {
+    val parts = Seq(
+      "sequence(lit(0), col(\"g\") - 1)",
+      "xxhash64(col(\"id\")), col(\"g\")",
+      "sequence(col(\"blk\")",
+      "sequence(lit(0), col(\"blk\"))")
+    val hits = for {
+      (p, src) <- mainSources
+      if p.getFileName.toString != "SkewJoin.scala"
+      (ln, line) <- codeLines(src)
+      if parts.exists(line.contains)
+    } yield s"$p:$ln: ${line.trim}"
+    assert(hits.isEmpty,
+      s"split hot keys through graft.ops.SkewJoin (${hits.size} lines):\n" +
+        hits.mkString("\n"))
+  }
+
   test("mains census: the src/main objects that define `def main` are " +
       "exactly Bench, Verify, tools.PlanAudit and tools.ScaleUp") {
     val obj = """\bobject\s+(\w+)""".r
@@ -230,7 +248,7 @@ class LintSpec extends AnyFunSuite {
       mains.sorted.mkString(", "))
   }
 
-  test("env-knob census: src/main reads exactly the eight SPARK_GRAFT_* " +
+  test("env-knob census: src/main reads exactly the seven SPARK_GRAFT_* " +
       "knobs of Session, Bench and Verify — a new knob is added on " +
       "purpose, here") {
     val read = """\b(?:sys\.env|System\.getenv)\b""".r
@@ -250,8 +268,7 @@ class LintSpec extends AnyFunSuite {
     assert(names == Set(
       "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_PASSES",
       "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_LOAD_WAITS",
-      "SPARK_GRAFT_VERIFY_SKIP_EXISTING", "SPARK_GRAFT_VERIFY_ONLY",
-      "SPARK_GRAFT_VERIFY_EXCEPT"),
+      "SPARK_GRAFT_VERIFY_ONLY", "SPARK_GRAFT_VERIFY_EXCEPT"),
       names.toSeq.sorted.mkString(", "))
   }
 

@@ -22,6 +22,15 @@ class MainKnobsSpec extends AnyFunSuite {
       refused("SPARK_GRAFT_BENCH_PASSES", v)(Bench.passesOf(Some(v)))
   }
 
+  test("SPARK_GRAFT_BENCH_LOAD_WAITS: unset is 10, a non-negative integer " +
+      "is taken, negatives and non-integers are refused by name") {
+    assert(Bench.loadWaitsOf(None) == 10)
+    assert(Bench.loadWaitsOf(Some("0")) == 0)
+    assert(Bench.loadWaitsOf(Some(" 3 ")) == 3)
+    for (v <- Seq("-1", "ten", "2.5", ""))
+      refused("SPARK_GRAFT_BENCH_LOAD_WAITS", v)(Bench.loadWaitsOf(Some(v)))
+  }
+
   test("SPARK_GRAFT_BENCH_ONLY: selects headline queries in headline " +
       "order; a list naming nothing or a non-headline query is refused") {
     assert(Bench.sweepOf(None) == Bench.headline)

@@ -50,43 +50,13 @@ class TextAnalyticsSpec extends SparkSpec {
     assert(fp1 != fp3)
   }
 
-  test("winnowing: shared substrings guarantee shared fingerprints") {
-    import org.apache.spark.sql.DataFrame
-    def fp(text: String): Set[Long] = {
-      val df: DataFrame = Seq(text).toDF("text")
-        .select(TextAnalytics.tokens(col("text")).as("toks"))
-        .select(TextAnalytics.shingleHashes(col("toks"), 3).as("h"))
-        .select(TextAnalytics.winnow(col("h"), 4).as("fp"))
-      df.head().getSeq[Long](0).toSet
-    }
-    val shared = "the quick brown fox jumps over the lazy dog tonight"
-    val a = fp(s"alpha beta $shared gamma delta")
-    val b = fp(s"one two three four $shared five")
-    val c = fp("entirely different words nothing in common here at all today ok")
-    // shared run of 10 tokens >= k+w-1 = 6 -> fingerprints must intersect
-    assert((a intersect b).nonEmpty)
-    assert((a intersect c).isEmpty)
-    // deterministic
-    assert(fp(shared) == fp(shared))
-  }
-
-  test("winnowing edge cases: short docs, empty docs") {
-    def run(text: String, k: Int, w: Int) =
-      Seq(text).toDF("text")
-        .select(TextAnalytics.tokens(col("text")).as("toks"))
-        .select(TextAnalytics.winnow(
-          TextAnalytics.shingleHashes(col("toks"), k), w))
-        .head().getSeq[Long](0)
-    assert(run("", 3, 4).isEmpty)
-    assert(run("a b", 3, 4).isEmpty)           // fewer tokens than k
-    assert(run("a b c", 3, 4).length == 1)     // one shingle < w -> its min
-  }
-
   test("shingles: contiguous n-grams, distinct, short-text empty") {
-    val sh = one("a b c a b", TextAnalytics.shingles(col("text"), 2))
+    val sh = one("a b c a b",
+      TextAnalytics.shinglesOf(TextAnalytics.tokens(col("text")), 2))
       .asInstanceOf[scala.collection.Seq[String]].toSet
     assert(sh == Set("a b", "b c", "c a"))
-    val short = one("a", TextAnalytics.shingles(col("text"), 2))
+    val short = one("a",
+      TextAnalytics.shinglesOf(TextAnalytics.tokens(col("text")), 2))
       .asInstanceOf[scala.collection.Seq[String]]
     assert(short.isEmpty)
   }
