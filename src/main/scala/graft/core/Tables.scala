@@ -1,6 +1,11 @@
 package graft.core
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the driver-generated parquet test tables
   * (TESTDATA.md). In the reference every pipeline starts from a named
@@ -33,8 +38,54 @@ object Tables {
     }.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast(TimestampType)))
   }
 
+  /** What the first load of one table learned: the schema parquet
+    * inference found, and whether [[load]] fans the scan out.
+    */
+  private final case class Learned(schema: StructType, fanOut: Boolean)
+
+  /** Key of a [[Learned]]: the table path, each of its files' (name,
+    * length, modification time), the `nanosAsLong` read setting that
+    * [[events]] sets (it changes the inferred type of a nanos column)
+    * and the target parallelism the fan-out compares against. A
+    * rewritten table lists new files and is learned again.
+    */
+  private final case class LoadKey(
+      path: String, files: Seq[(String, Long, Long)], nanosAsLong: String, target: Int)
+
+  /** Learned tables, JVM-wide (a schema outlives sessions); cleared
+    * when it holds `LoadMemoCap` tables.
+    */
+  private val loadMemo = new ConcurrentHashMap[LoadKey, Learned]()
+  private val LoadMemoCap = 256
+
+  /** (name, length, modification time) of every file under `path`;
+    * empty if the path does not exist, so that the read raises its own
+    * not-found error (a failed read learns nothing).
+    */
+  private def filesOf(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      out.result()
+    } catch { case _: FileNotFoundException => Seq.empty }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = canonicalizeTimestamps(spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    val target = spark.sparkContext.defaultParallelism
+    val key = LoadKey(path, filesOf(spark, path),
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"), target)
+    // Parquet schema inference is a one-task Spark job per read; a
+    // table loaded before reads with the schema that job found.
+    val known = Option(loadMemo.get(key))
+    val raw = known.fold(spark.read.parquet(path))(l => spark.read.schema(l.schema).parquet(path))
+    val df = canonicalizeTimestamps(raw)
     // Single-file, single-ROW-GROUP parquet (the test harness's layout;
     // verified with pyarrow) is unsplittable: the scan yields ONE
     // partition regardless of core count, so every per-row kernel and
@@ -46,13 +97,23 @@ object Tables {
     // On a real cluster reading many splits (parts >= cores) this is a
     // no-op — it exists to make local single-file inputs behave like
     // the many-split layout a deployment would have.
-    val target = spark.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // toRdd, not .rdd: the partition-count probe must not compile a
-    // second Row-deserializing physical plan just to read a number
-    if (bytes > (64L << 10) && df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
+    //
+    // The 64 KiB gate stays. The sf0.01 documents table (65,049 B)
+    // sits 487 B under it and is scanned as one task; a 32 KiB gate
+    // made perfbench `similarity_sf0.01` slower on a 4-core VM
+    // (wall_s 2.48 -> 3.40 s, q22 0.94 -> 1.60 s, engine.tasks
+    // 26 -> 53): at this size per-stage overhead outweighs the
+    // kernel work a fan-out spreads.
+    val fanOut = known.fold {
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      // toRdd, not .rdd: the partition-count probe must not compile a
+      // second Row-deserializing physical plan just to read a number
+      val f = bytes > (64L << 10) && df.queryExecution.toRdd.getNumPartitions < target
+      if (loadMemo.size >= LoadMemoCap) loadMemo.clear()
+      loadMemo.put(key, Learned(raw.schema, f))
+      f
+    }(_.fanOut)
+    if (fanOut) df.repartition(target) else df
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -3,6 +3,9 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.TaskContext
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.xxhash64
@@ -13,6 +16,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd kernels for the shingle/MinHash hot path of the
@@ -33,7 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    transform(sh, g => conv(substring(md5(concat("i:", g)), 1, 15),
   *    16, 10)))))`, the MinHash signature a SQL engine replays as
   *    `min(('0x' || substr(md5(i || ':' || gram), 1, 15))::BIGINT)`:
-  *    the top 60 bits of each md5 digest, read big-endian.
+  *    the top 60 bits of each md5 digest, read big-endian. Within a
+  *    task each distinct gram is hashed once (a per-task gram memo,
+  *    released when the task completes), since the rows of a partition
+  *    repeat most of their grams.
   */
 object Shingling {
 
@@ -117,15 +124,150 @@ object Shingling {
   }
 
   /** Per-k cache of the UTF-8 permutation prefixes `"i:"` that
-    * [[md5MinHashImpl]] feeds the digest ahead of each shingle.
+    * [[Md5Hasher]] feeds the digest ahead of each shingle.
     */
   private val md5PrefixCache = new ConcurrentHashMap[Int, Array[Array[Byte]]]()
   private def md5PrefixesOf(k: Int): Array[Array[Byte]] =
     md5PrefixCache.computeIfAbsent(k, nh =>
       Array.tabulate(nh)(i => s"$i:".getBytes(StandardCharsets.UTF_8)))
 
-  private val md5Digest = ThreadLocal.withInitial[MessageDigest](
-    () => MessageDigest.getInstance("MD5"))
+  /** One thread's md5 state for the permutation hashes: the digest, its
+    * output buffer and a message buffer in which the shingle sits at
+    * offset `at`, each permutation's prefix copied in just ahead of it,
+    * so one digest update covers the whole "i:gram" message.
+    */
+  private final class Md5Hasher {
+    private val md = MessageDigest.getInstance("MD5")
+    private val digest = new Array[Byte](16)
+    private var msg = new Array[Byte](128)
+
+    /** `out(i)` = permutation i's hash of g, for i < k. */
+    def hashes(g: UTF8String, k: Int, out: Array[Long]): Unit = {
+      val prefixes = md5PrefixesOf(k)
+      val at = prefixes(k - 1).length
+      val len = g.numBytes()
+      if (at + len > msg.length) msg = new Array[Byte](at + len)
+      g.writeToMemory(msg, Platform.BYTE_ARRAY_OFFSET + at)
+      var b = 0
+      while (b < k) {
+        val p = prefixes(b)
+        System.arraycopy(p, 0, msg, at - p.length, p.length)
+        md.update(msg, at - p.length, p.length + len)
+        md.digest(digest, 0, 16)
+        var h = 0L
+        var j = 0
+        while (j < 8) { h = (h << 8) | (digest(j) & 0xffL); j += 1 }
+        out(b) = h >>> 4
+        b += 1
+      }
+    }
+  }
+
+  private val md5Hasher = ThreadLocal.withInitial[Md5Hasher](() => new Md5Hasher)
+
+  /** Entry cap of one task's [[GramMemo]]; a full memo is cleared and
+    * refills. At k = 32 an entry holds about 360 B (the 272 B hash
+    * vector, the copied gram and its table slots), so a full memo is
+    * about 6 MB per running task.
+    */
+  private[graft] final val GramMemoCap = 1 << 14
+
+  /** Entries held by all live memos, for the release check in
+    * ShinglingSpec.
+    */
+  private val gramMemoHeld = new AtomicLong
+  private[graft] def gramMemoEntries: Long = gramMemoHeld.get()
+
+  /** One task's memo from a gram to its permutation-hash vector: an
+    * open-addressing table keyed by a COPY of the gram's UTF-8 bytes
+    * (input strings can point into reused row buffers), hashed with
+    * murmur3 and compared with `binaryEquals` (see the
+    * getenv-per-comparison note in [[sortedShinglesImpl]]). Hash i does
+    * not depend on k, so a stored vector of length >= k serves any k;
+    * a shorter one is recomputed at the longer k and replaced.
+    */
+  private final class GramMemo(val taskAttemptId: Long) {
+    @volatile var live = true
+    private var keys = new Array[UTF8String](1024)
+    private var codes = new Array[Int](1024)
+    private var vecs = new Array[Array[Long]](1024)
+    private var size = 0
+
+    private def slot(g: UTF8String, code: Int): Int = {
+      val mask = keys.length - 1
+      var s = code & mask
+      while (keys(s) != null && !(codes(s) == code && keys(s).binaryEquals(g)))
+        s = (s + 1) & mask
+      s
+    }
+
+    def hashesOf(g: UTF8String, k: Int, hasher: Md5Hasher): Array[Long] = {
+      val code = Murmur3_x86_32.hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes(), 42)
+      var s = slot(g, code)
+      val hit = vecs(s)
+      if (hit != null && hit.length >= k) return hit
+      val vec = new Array[Long](k)
+      hasher.hashes(g, k, vec)
+      if (hit == null) {
+        if (size == GramMemoCap) { clear(); s = slot(g, code) }
+        else if (2 * (size + 1) > keys.length) { grow(); s = slot(g, code) }
+        keys(s) = g.copy()
+        codes(s) = code
+        size += 1
+        gramMemoHeld.incrementAndGet()
+      }
+      vecs(s) = vec
+      vec
+    }
+
+    private def grow(): Unit = {
+      val (ks, cs, vs) = (keys, codes, vecs)
+      keys = new Array[UTF8String](ks.length * 2)
+      codes = new Array[Int](ks.length * 2)
+      vecs = new Array[Array[Long]](ks.length * 2)
+      var i = 0
+      while (i < ks.length) {
+        if (ks(i) != null) {
+          val s = slot(ks(i), cs(i))
+          keys(s) = ks(i); codes(s) = cs(i); vecs(s) = vs(i)
+        }
+        i += 1
+      }
+    }
+
+    def clear(): Unit = {
+      java.util.Arrays.fill(keys.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(vecs.asInstanceOf[Array[AnyRef]], null)
+      gramMemoHeld.addAndGet(-size)
+      size = 0
+    }
+
+    def release(): Unit = {
+      live = false
+      clear()
+      keys = null; codes = null; vecs = null
+    }
+  }
+
+  private val gramMemos = new ThreadLocal[GramMemo]
+
+  /** This thread's memo for the running task, created on the task's
+    * first call. A completion listener releases it, so no executor
+    * thread holds entries once the task has ended.
+    */
+  private def gramMemoOf(tc: TaskContext): GramMemo = {
+    val m = gramMemos.get()
+    if (m != null && m.live && m.taskAttemptId == tc.taskAttemptId()) m
+    else {
+      val fresh = new GramMemo(tc.taskAttemptId())
+      gramMemos.set(fresh)
+      tc.addTaskCompletionListener[Unit] { _ =>
+        fresh.release()
+        if (gramMemos.get() eq fresh) gramMemos.remove()
+      }
+      fresh
+    }
+  }
 
   /** k-permutation MinHash signature in ONE pass over the
     * shingle array. Permutation i hashes shingle g to the first 8
@@ -134,37 +276,34 @@ object Shingling {
     * evaluates to. Null shingles are skipped and a permutation that
     * saw none is null, as `array_min` over the nulls `md5(null)`
     * gives; an empty array therefore yields k nulls.
+    *
+    * Inside a task each distinct gram is hashed once: its hash vector
+    * comes from the task's [[GramMemo]], since rows of one partition
+    * share most of their grams. Without a `TaskContext` (driver-side
+    * evaluation) the hashes are computed directly.
     */
   def md5MinHashImpl(sh: ArrayData, k: Int): ArrayData = {
     val n = sh.numElements()
-    val prefixes = md5PrefixesOf(k)
-    val md = md5Digest.get()
-    val digest = new Array[Byte](16)
-    // message buffer: the shingle sits at offset `at`, and each
-    // permutation's prefix is copied in just ahead of it, so one
-    // digest update covers the whole "i:gram" message
-    val at = prefixes(k - 1).length
-    var msg = new Array[Byte](at + 64)
+    val tc = TaskContext.get()
+    val memo = if (tc == null) null else gramMemoOf(tc)
+    val hasher = md5Hasher.get()
+    var direct: Array[Long] = null
     // every hash is < 2^60, so MaxValue marks "no shingle seen"
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i < n) {
       if (!sh.isNullAt(i)) {
         val g = sh.getUTF8String(i)
-        val len = g.numBytes()
-        if (at + len > msg.length) msg = new Array[Byte](at + len)
-        g.writeToMemory(msg, Platform.BYTE_ARRAY_OFFSET + at)
+        val vec =
+          if (memo != null) memo.hashesOf(g, k, hasher)
+          else {
+            if (direct == null) direct = new Array[Long](k)
+            hasher.hashes(g, k, direct)
+            direct
+          }
         var b = 0
         while (b < k) {
-          val p = prefixes(b)
-          System.arraycopy(p, 0, msg, at - p.length, p.length)
-          md.update(msg, at - p.length, p.length + len)
-          md.digest(digest, 0, 16)
-          var h = 0L
-          var j = 0
-          while (j < 8) { h = (h << 8) | (digest(j) & 0xffL); j += 1 }
-          h >>>= 4
-          if (h < mins(b)) mins(b) = h
+          if (vec(b) < mins(b)) mins(b) = vec(b)
           b += 1
         }
       }

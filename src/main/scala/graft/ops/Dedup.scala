@@ -32,7 +32,10 @@ object Dedup {
     * signature element is the min hash over the shingle set. Evaluated
     * row-local, no shuffle — by the native one-pass kernel
     * [[graft.functions.Shingling.Md5MinHashSig]] (the `transform` HOF
-    * it equals lives in ShinglingSpec as the parity reference).
+    * it equals lives in ShinglingSpec as the parity reference), which
+    * hashes each distinct gram once per task: 32 md5 digests per gram
+    * instead of per gram occurrence (sf0.01 documents: 916 distinct
+    * 2-grams over 25,709 occurrences).
     */
   def minHashSignature(shingleCol: Column, numHashes: Int): Column =
     graft.functions.Shingling.minHashSignature(shingleCol, numHashes)

@@ -1316,7 +1316,9 @@ object Queries {
   /** MinHash+LSH near-dup candidates, verified by exact Jaccard, with
     * the banding derived from the threshold. It resolves to q26b's
     * (8, 4), so both run the same md5 plan and share one oracle;
-    * recall vs q22's exact pairs is pinned in DedupSpec.
+    * recall vs q22's exact pairs is pinned in DedupSpec. 0.80 s warm
+    * median on perfbench `similarity_sf0.01` (4-core VM, 10 runs; 0.95 s
+    * before the kernel's per-task gram memo).
     */
   val q26MinHashLsh: Q = (s, d) =>
     // auto-tuned banding: lshBanding(0.5, 32) = (8, 4), the measured
@@ -1330,8 +1332,9 @@ object Queries {
     * raw-value band buckets, so the oracle replays signature → band
     * collision → exact-Jaccard verify against the engine's banded +
     * skew-salted self-join plan (the cross-set form is q70). The
-    * signature is the native one-pass kernel; 0.91 s warm median on
-    * perfbench `similarity_sf0.01` (4-core VM, 10 runs).
+    * signature is the native one-pass kernel; 0.74 s warm median on
+    * perfbench `similarity_sf0.01` (4-core VM, 10 runs; 0.89 s before
+    * the kernel's per-task gram memo).
     */
   val q26bMinhashLshPortable: Q = (s, d) =>
     Dedup.minHashLsh(

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.GraftColumnBridge
   * codegen spans, how many exchanges) plus what the run cost: each
   * stage's shuffle/spill bytes as it completes, then build and action
   * wall time with the Spark jobs each launched. Prints operator counts,
-  * and the final plan with `--full`.
+  * and with `--full` the final plan, [[normalized]] so that the plans
+  * of two commits can be compared with `diff`.
   *
   * Usage:
   *   runMain graft.tools.PlanAudit <queryName> [sfDir] [--full]
@@ -39,6 +40,21 @@ object PlanAudit {
       case p => p
     }).toString
   }
+
+  /** The plan text with what differs between two runs of one commit
+    * replaced by a fixed token, so `--full` output of a parent and a
+    * change can be compared with `diff`: expression ids (`#12L`),
+    * Exchange `plan_id`s, AQE query-stage numbers, JVM identity hashes
+    * of object literals (`[I@10b9956a`) and the random suffix of the
+    * stream gate's temp dirs.
+    */
+  private[graft] def normalized(plan: String): String = Seq(
+    """#\d+L?""" -> "#N",
+    """plan_id=\d+""" -> "plan_id=N",
+    """\b(\w+QueryStage) \d+""" -> "$1 N",
+    """(?<=[\w$;\[])@[0-9a-f]{1,8}\b""" -> "@N",
+    """\b(graft_stream_[a-z]+_)\d+""" -> "$1N"
+  ).foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
 
   /** Counts jobs and prints one line per completed stage: its shuffle
     * read/write and spill bytes — which stage of a multi-phase plan
@@ -152,7 +168,7 @@ object PlanAudit {
     // codegen shows as "*(n)" operator prefixes; distinct n = spans
     val spans = """\*\((\d+)\)""".r.findAllMatchIn(plan).map(_.group(1)).toSet
     println(f"${"WholeStageCodegen spans"}%-30s ${spans.size}%d")
-    if (full) println(plan)
+    if (full) println(normalized(plan))
     spark.stop()
   }
 }

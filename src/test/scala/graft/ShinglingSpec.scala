@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{Shingling, TextAnalytics}
 import graft.ops.Dedup
@@ -114,6 +119,85 @@ class ShinglingSpec extends SparkSpec {
       assert(r.getSeq[Any](0) == Seq(null, null, null, null))
       assert(r.getSeq[Any](0) == r.getSeq[Any](1))
     }
+  }
+
+  private def shingled(docs: DataFrame): DataFrame =
+    docs.select(TextAnalytics.tokens(col("text")).as("toks"))
+      .select(Shingling.sortedShingles(col("toks"), 2).as("sh"))
+
+  // the kernel and its HOF reference side by side over column `sh`
+  private def signaturesVsHof(sh: DataFrame, ks: Seq[Int]): DataFrame =
+    sh.select(ks.map(k => Dedup.minHashSignature(col("sh"), k).as(s"native_$k")) ++
+      ks.map(k => hofMd5MinHash(col("sh"), k).as(s"hof_$k")): _*)
+
+  private def assertKernelEqualsHof(sh: DataFrame, ks: Seq[Int]): Int = {
+    val rows = signaturesVsHof(sh, ks).collect()
+    rows.foreach { r =>
+      for (k <- ks)
+        assert(r.getSeq[Any](r.fieldIndex(s"native_$k")) ==
+          r.getSeq[Any](r.fieldIndex(s"hof_$k")), s"k=$k row=$r")
+    }
+    rows.length
+  }
+
+  // the seed-42 sf0.01 documents committed with the benchmark (500 docs,
+  // 25,709 shingle occurrences over 916 distinct 2-grams)
+  private def sf001Docs = graft.core.Tables.documents(spark, "perfbench/data/sf0.01")
+
+  test("md5 kernel equals the HOF over every committed sf0.01 document, k in {1, 8, 32}") {
+    val n = sf001Docs.count()
+    for (k <- Seq(1, 8, 32)) assert(assertKernelEqualsHof(shingled(sf001Docs), Seq(k)) == n)
+  }
+
+  test("md5 kernel: signature columns of different k in one projection " +
+      "share one partition's memo and each equals the HOF") {
+    // k = 8 first stores short vectors, k = 32 replaces them with longer
+    // ones and k = 4 reads a prefix of those. The shuffle hands the
+    // kernel shingles that point into the reader's reused row buffer,
+    // so a memo that kept them without a copy would corrupt its keys.
+    assert(assertKernelEqualsHof(shingled(sf001Docs).repartition(1), Seq(8, 32, 4)) > 0)
+  }
+
+  test("md5 kernel equals the HOF on a partition with more distinct grams " +
+      "than the memo cap") {
+    // every doc starts with the same three tokens (grams repeated across
+    // rows, so hits follow the clear) and then has 59 tokens of its own
+    val docs = spark.range(0, 300, 1, numPartitions = 1).select(concat_ws(" ",
+      lit("the same start"),
+      concat_ws(" ", transform(sequence(lit(0), lit(58)),
+        j => concat(lit("w"), (col("id") * 59 + j).cast("string"))))).as("text"))
+    val distinct = docs.select(explode(Shingling.sortedShingles(
+      TextAnalytics.tokens(col("text")), 2))).distinct().count()
+    assert(distinct > Shingling.GramMemoCap)
+    assert(assertKernelEqualsHof(shingled(docs), Seq(2)) == 300)
+  }
+
+  test("md5 kernel called on the driver computes directly, with no memo") {
+    assert(TaskContext.get() == null)
+    val grams = Seq("a b", "b c", "héllo wörld", "a b", null)
+    val sig = Shingling.md5MinHashImpl(
+      new GenericArrayData(grams.map(UTF8String.fromString).toArray[Any]), 8)
+    val hof = Seq(grams).toDF("sh").repartition(1)
+      .select(hofMd5MinHash(col("sh"), 8)).head().getSeq[Any](0)
+    assert(sig.toSeq[Any](LongType) == hof)
+    assert(Shingling.gramMemoEntries == 0)
+  }
+
+  test("md5 kernel memo holds each distinct gram once in a task and " +
+      "nothing once the query is collected") {
+    // one partition fed through a shuffle, whose reader reuses its row
+    // buffer: the entry count read after the last row's signature is
+    // the number of distinct grams only if the memo copied its keys
+    val heldAfter = udf((_: Seq[java.lang.Long]) => Shingling.gramMemoEntries)
+      .asNondeterministic()
+    val sh = shingled(sf001Docs).repartition(1)
+    val distinct = sh.select(explode(col("sh"))).distinct().count()
+    val held = sh.select(heldAfter(Dedup.minHashSignature(col("sh"), 8)).as("held"))
+      .agg(max(col("held"))).head().getLong(0)
+    assert(held == distinct)
+    assert(Shingling.gramMemoEntries == 0)
+    signaturesVsHof(shingled(sf001Docs), Seq(32)).collect()
+    assert(Shingling.gramMemoEntries == 0)
   }
 
   test("shingleStats matches explode/groupBy counting on crafted cases") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -88,6 +89,41 @@ class TablesSpec extends SparkSpec {
       assert(leaked.isEmpty,
         s"$name: NTZ columns escaped the adapter: ${leaked.map(_.name).mkString(",")}")
     }
+  }
+
+  test("a table's schema is inferred once: a second load launches no " +
+      "Spark job, and a rewritten table is inferred again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val path = s"$dir/documents.parquet"
+    def jobsOf(load: => DataFrame): (Int, DataFrame) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.sql.classic.GraftColumnBridge.awaitListeners(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val df = load
+        org.apache.spark.sql.classic.GraftColumnBridge.awaitListeners(spark.sparkContext)
+        (jobs.get, df)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    spark.range(5).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
+      .coalesce(1).write.parquet(path)
+    val (first, inferred) = jobsOf(Tables.load(spark, dir, "documents"))
+    assert(first >= 1, "the first load infers the schema with a Spark job")
+    val (second, df) = jobsOf(Tables.load(spark, dir, "documents"))
+    assert(second == 0)
+    assert(df.columns.toSeq == Seq("doc_id", "text") && df.count() == 5)
+    def plan(d: DataFrame) =
+      graft.tools.PlanAudit.normalized(d.queryExecution.executedPlan.toString)
+    assert(plan(df) == plan(inferred))
+    spark.range(3).selectExpr("id AS doc_id", "id * 2 AS n_chars")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val (third, rewritten) = jobsOf(Tables.load(spark, dir, "documents"))
+    assert(third >= 1)
+    assert(rewritten.columns.toSeq == Seq("doc_id", "n_chars") && rewritten.count() == 3)
   }
 
   test("NTZ→TimestampType cast is value-preserving under the pinned UTC session") {
