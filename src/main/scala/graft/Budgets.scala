@@ -1,11 +1,9 @@
 package graft
 
 /** THE CONF-KEY REGISTRY — every `graft.*` runtime knob in one place,
-  * with its default and what it governs. Two of these are byte
-  * budgets governing superficially similar broadcast decisions with
-  * deliberately different defaults; this table is the disambiguation
-  * (LintSpec pins that every `spark.conf.get*("graft.…")` site in
-  * src/main uses a key registered here).
+  * with its default and what it governs (LintSpec pins that every
+  * `spark.conf.get*("graft.…")` site in src/main uses a key
+  * registered here).
   *
   * | key | default | governs |
   * |---|---|---|
@@ -15,13 +13,6 @@ package graft
   *   broadcast; past it the plan FLIPS to the contract-identical
   *   keyed shuffle-hash attach. Sized to executor memory, not to a
   *   performance crossover. |
-  * | `graft.decontaminate.benchBroadcastBytes` (32 MiB,
-  *   [[graft.ops.Decontaminate]]) | performance CROSSOVER: below it
-  *   the benchmark gram payload broadcasts raw and the plain screen
-  *   is already shuffle-free, so `bloomOverlap` self-routes
-  *   (delegates) to `ngramOverlap`; above it the Bloom bitset is the
-  *   compressed broadcast. Measured, not safety-critical — wrong
-  *   values cost time, never correctness or memory. |
   * | `graft.decontaminate.bloomBytes` (256 MiB,
   *   [[graft.functions.Bloom]]) | hard cap on the Bloom bitset a
   *   screen may broadcast; a benchmark too large for the budget gets
@@ -41,12 +32,13 @@ package graft
   *   refusing, so a non-deterministic corpus-scale input can never
   *   silently pin corpus-scale executor storage. |
   *
-  * All five are byte budgets.
+  * All four are byte budgets.
   *
   * Non-conf knobs (constructor parameters, deliberately NOT ambient
   * config because they change SEMANTICS or plan shape per call site):
   * IVF `nLists`/`nProbe`, LSH bands/rowsPerBand, `shardSpan`,
-  * `bucketCap`, `maxDocFreq`, `denom`, APSS thresholds — a query's
+  * `bucketCap`, `maxDocFreq`, `denom`, `bloomOverlap`'s
+  * `delegateBytes`, APSS thresholds — a query's
   * result must be a function of its code, not of session state.
   */
 object Budgets {
@@ -54,7 +46,6 @@ object Budgets {
   /** Registered keys; LintSpec asserts every conf.get site matches. */
   val keys: Set[String] = Set(
     graft.ops.Similarity.LevelBroadcastBytesKey,
-    graft.ops.Decontaminate.BenchDelegateBytesKey,
     graft.functions.Bloom.BloomBytesKey,
     graft.ops.Quantiles.RankTableBytesKey,
     graft.ops.HeavyHitters.PinBytesKey)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.StagingScope
 import graft.functions.{Shingling, TextAnalytics}
 
 /** Benchmark DECONTAMINATION for a pretraining corpus: flag every
@@ -81,11 +82,10 @@ object Decontaminate {
         (col("n_hit") > 0).as("contaminated"))
   }
 
-  /** Bench gram payload below which [[bloomOverlap]] delegates to the
-    * plain screen: a payload this small broadcasts RAW, the training
-    * grams never shuffle, and a prefilter could only add cost.
+  /** Default bench gram payload below which [[bloomOverlap]] delegates
+    * to the plain screen: a payload this small broadcasts RAW, the
+    * training grams never shuffle, and a prefilter could only add cost.
     */
-  val BenchDelegateBytesKey = "graft.decontaminate.benchBroadcastBytes"
   val DefaultBenchDelegateBytes: Long = 32L << 20
 
   /** [[ngramOverlap]] with a broadcast Bloom PREFILTER on the training
@@ -117,10 +117,10 @@ object Decontaminate {
     *
     * REGIME — measured, and the op ROUTES ITSELF
     * (100× timings in `tools/check_sf10_r14.txt`): when the benchmark
-    * gram payload fits a broadcast ([[BenchDelegateBytesKey]], default
-    * 32 MiB), the PLAIN screen is already optimal — Catalyst
-    * broadcasts the bench side and the training grams never cross an
-    * exchange (map-side combine collapses the per-doc aggregation),
+    * gram payload fits a broadcast (`delegateBytes`, default 32 MiB),
+    * the PLAIN screen is already optimal — Catalyst broadcasts the
+    * bench side and the training grams never cross an exchange
+    * (map-side combine collapses the per-doc aggregation),
     * so a prefilter can only add overhead (measured 7.7× at a %1000
     * split, 100×). bloomOverlap therefore PRICES the bench payload
     * with the same count job that sizes the sketch and DELEGATES to
@@ -140,7 +140,7 @@ object Decontaminate {
       idCol: String,
       n: Int,
       fpp: Double = 0.01,
-      delegateBytes: Option[Long] = None): DataFrame = {
+      delegateBytes: Long = DefaultBenchDelegateBytes): DataFrame = {
     val spark = train.sparkSession
     def grams(docs: DataFrame) = docs
       .select(col(idCol).as("id"),
@@ -164,14 +164,11 @@ object Decontaminate {
       .head()
     val nBench = stats.getLong(0)
     val benchPayload = stats.getLong(1) + nBench * 48L // string + row overhead
-    val delegateBudget = delegateBytes.orElse(
-      spark.conf.getOption(BenchDelegateBytesKey).map(_.toLong))
-      .getOrElse(DefaultBenchDelegateBytes)
-    if (benchPayload <= delegateBudget) {
+    if (benchPayload <= delegateBytes) {
       log.info(
         s"bloomOverlap: bench gram payload $benchPayload B (" +
-          s"$nBench grams) fits the $delegateBudget B broadcast budget " +
-          s"($BenchDelegateBytesKey) — the plain screen broadcasts raw " +
+          s"$nBench grams) fits the $delegateBytes B broadcast budget " +
+          "(delegateBytes) — the plain screen broadcasts raw " +
           "and shuffles nothing; delegating to ngramOverlap")
       return ngramOverlap(train, bench, textCol, idCol, n)
     }
@@ -391,18 +388,6 @@ object Decontaminate {
           (col("seg.e") - col("seg.s")).cast("int"))).as("seg_text"))
   }
 
-  /** Distinct-shingle table `(id, sh)` of a corpus, empty sets dropped
-    * (sub-shingle-width docs have undefined set similarity — same rule
-    * as [[graft.ops.Dedup.ngramJaccardPairs]]).
-    */
-  private def shingleTable(
-      docs: DataFrame, textCol: String, idCol: String, n: Int): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        Shingling.sortedShingles(
-          TextAnalytics.tokens(col(textCol)), n).as("sh"))
-      .where(size(col("sh")) > 0)
-
   /** NEAR-duplicate decontamination, EXACT: every (training doc,
     * benchmark doc) pair whose n-gram Jaccard reaches `threshold` —
     * the fuzzy complement of the exact-overlap screen ([[ngramOverlap]]
@@ -411,16 +396,17 @@ object Decontaminate {
     * their shingle SET).
     *
     * Plan: the CROSS-SET form of the PPJoin prefix-filter join
-    * ([[graft.ops.Dedup.ngramJaccardPairs]] is the self-join form —
-    * same bounds, two tables): under a common total order (ascending
-    * gram frequency over the union), two sets with Jaccard >= t must
-    * share a token inside each side's `|S| - ceil(t*|S|) + 1` prefix,
-    * so candidates come from a keyed equi-join of the two PREFIX
-    * tables — never train × bench — then the size-ratio and positional
-    * overlap bounds prune before the exact sorted-merge verify. All
-    * shuffles are keyed; the benchmark side is small, so its prefix
-    * and shingle tables broadcast under the planner's threshold and
-    * the training side streams through map-side joins.
+    * ([[graft.ops.Dedup.ngramJaccardPairs]] is the self-join form; both
+    * run on Dedup's join core — shingle table, prefix rows and bounds,
+    * verify decision, array and count verify): under a common total
+    * order (ascending gram frequency over the union), two sets with
+    * Jaccard >= t must share a token inside each side's
+    * `|S| - ceil(t*|S|) + 1` prefix, so candidates come from a keyed
+    * equi-join of the two PREFIX tables — never train × bench — then
+    * the size-ratio and positional overlap bounds prune before the
+    * exact verify. All shuffles are keyed; the benchmark side is small,
+    * so its prefix and shingle tables broadcast under the planner's
+    * threshold and the training side streams through map-side joins.
     *
     * Returns `(id, bench_id, jaccard)` — one row per contaminated
     * (train, bench) pairing, the shape a drop-or-review stage consumes.
@@ -432,38 +418,18 @@ object Decontaminate {
       idCol: String,
       shingleN: Int,
       threshold: Double,
-      maxCandidates: Long = SimilarityGuard.Auto,
-      verifyStrategy: String = Dedup.VerifyAuto): DataFrame = {
-    require(Dedup.VerifyStrategies.contains(verifyStrategy),
-      s"verifyStrategy must be one of ${Dedup.VerifyStrategies}, got $verifyStrategy")
+      maxCandidates: Long = SimilarityGuard.Auto): DataFrame = {
     // both shingle tables feed the freq union, a prefix derivation, and
     // a verify side — materialize each once
-    val shT = graft.core.StagingScope.stage(
-      shingleTable(train, textCol, idCol, shingleN))
-    val shB = graft.core.StagingScope.stage(
-      shingleTable(bench, textCol, idCol, shingleN))
-
-    def exploded(sh: DataFrame, side: Int) = sh.select(
-      lit(side).as("side"), col("id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("tok"))
-    // one COMMON total order for both sides: ascending gram frequency
-    // over the UNION (any shared order is sound; rarest-first minimizes
-    // prefix collisions). Frequency attaches via an unbounded COUNT
-    // window — one exchange of the union, not groupBy + rejoin — and
-    // the per-doc rarity window partitions by (side, id) so a train id
-    // colliding with a bench id never mixes windows. Prefix rows carry
-    // the gram as xxhash64: equality-only use, collisions only add
-    // verify-discarded candidates (same reasoning as
-    // [[graft.ops.Dedup.ngramJaccardPairs]]).
-    val wFreq = Window.partitionBy("tok")
-    val byRarity = Window.partitionBy("side", "id").orderBy(col("freq"), col("tok"))
-    val prefixes = exploded(shT, 0).unionAll(exploded(shB, 1))
-      .withColumn("freq", count(lit(1)).over(wFreq))
-      .withColumn("rn", row_number().over(byRarity))
-      .where(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")).cast("int") + 1)
-      .select(col("side"), col("id"), col("sz"),
-        xxhash64(col("tok")).as("htok"), col("rn"))
-      .transform(graft.core.StagingScope.stage(_))
+    val shT = StagingScope.stage(Dedup.shingleTable(train, textCol, idCol, shingleN))
+    val shB = StagingScope.stage(Dedup.shingleTable(bench, textCol, idCol, shingleN))
+    // one COMMON total order for both sides: gram frequency over the
+    // UNION; the rarity window partitions by (side, id) so a train id
+    // colliding with a bench id never mixes windows
+    val prefixes = StagingScope.stage(Dedup.prefixRows(
+      Dedup.postings(shT, lit(0).as("side"))
+        .unionAll(Dedup.postings(shB, lit(1).as("side"))),
+      Nil, Seq("side"), threshold))
     // PRE-FLIGHT GUARD: predict the train×bench candidate join's row
     // volume (Σ over gram of df_train·df_bench) from the prefix tables
     // and refuse a closed-vocabulary blow-up before launching — see
@@ -490,110 +456,50 @@ object Decontaminate {
       "Decontaminate.jaccardScreen",
       "Re-route this corpus to Decontaminate.minHashScreen (signature-" +
         "collision-driven candidates)")
-    // positional overlap bound checked per match row, map-side, before
-    // the dedup shuffle — same pair decisions, only qualifying matches
-    // travel (see the note in [[graft.ops.Dedup.ngramJaccardPairs]])
     val candidatesRaw = prefixes.where(col("side") === 0)
       .select(col("htok"), col("id"), col("sz"), col("rn"))
       .join(
         prefixes.where(col("side") === 1).select(col("htok"),
           col("id").as("bench_id"), col("sz").as("sz_b"), col("rn").as("rn_b")),
         Seq("htok"))
-      .where(
-        col("sz_b") * threshold <= col("sz") &&
-          col("sz") * threshold <= col("sz_b") &&
-          lit(1) + least(col("sz") - col("rn"), col("sz_b") - col("rn_b")) >=
-            ceil(lit(threshold) / (1 + threshold) * (col("sz") + col("sz_b"))))
+      .where(Dedup.prefixBound(col("sz"), col("rn"), col("sz_b"), col("rn_b"), threshold))
       .select("id", "bench_id")
       // predicted-vs-actual telemetry on the candidate matches (before
       // the pair dedup; actual <= predicted, positional prune fused)
       .transform(SimilarityGuard.observed(_,
         "Decontaminate.jaccardScreen", predictedCandidates))
       .distinct()
-    // narrow; materializing buys an exact candidate count for the
-    // verify-strategy decision — only paid when the decision runs
-    // (same element-bound gate as the self-join form: predicted
-    // candidate upper bound × both sides' average array length)
-    val needDecision = verifyStrategy == Dedup.VerifyAuto &&
-      predictedCandidates * (avgT + avgB) > Dedup.VerifyDecisionMinElements
-    val candidates =
-      if (needDecision) graft.core.StagingScope.stage(candidatesRaw)
-      else candidatesRaw
-
-    // VERIFY-STRATEGY DECISION — the cross-set form of the
-    // [[graft.ops.Dedup.ngramJaccardPairs]] decision: array verify
-    // ships candidates × (|train doc| + |bench doc|) array elements;
-    // count verify ships Σ over grams of df_train·df_bench NARROW
-    // rows. Same exact-measurement comparison, same result-identical
-    // guarantee (spec-pinned both ways in DecontaminateSpec).
-    def posts(sh: DataFrame) = sh.select(
-      col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("tok"))
-    val useCount = verifyStrategy match {
-      case Dedup.VerifyCount => true
-      case Dedup.VerifyArray => false
-      case _ if !needDecision => false
-      case _ =>
-        // one fused job: exact candidate count (off the staged pair
-        // table) + gram-join volume, instead of two round trips
-        val decision = candidates.agg(count(lit(1)).as("nc"))
-          .crossJoin(SimilarityGuard.crossJoinVolumeAgg(
-            posts(shT), posts(shB), Seq("tok")))
-          .head()
-        val nCand = decision.getLong(0)
-        val gramVolume = SimilarityGuard.volumeOf(decision, 1)
-        val arrayElems = nCand * (avgT + avgB)
-        val chooseCount = gramVolume < arrayElems
-        log.warn(s"jaccardScreen verify decision: $nCand candidates x " +
-          f"(${avgT}%.0f + ${avgB}%.0f) grams = ${arrayElems}%.3g array " +
-          s"elements vs $gramVolume gram-join rows -> " +
-          (if (chooseCount) "COUNT verify" else "ARRAY verify"))
-        chooseCount
-    }
-    if (useCount)
-      gramCountCrossVerify(posts(shT), posts(shB), threshold)
-    else
-      // hash-join verify attachments — the array-carrying intermediate
-      // streams instead of sorting (see Dedup.ngramJaccardPairs)
-      candidates
-        .join(shT.select(col("id"), col("sh").as("sh_a"))
-          .hint("shuffle_hash"), "id")
-        .join(shB.select(col("id").as("bench_id"), col("sh").as("sh_b"))
-          .hint("shuffle_hash"), "bench_id")
-        .withColumn("jaccard",
-          graft.functions.SetSimilarity.jaccardSorted(col("sh_a"), col("sh_b"), threshold))
-        .where(col("jaccard") >= threshold)
-        .select(col("id"), col("bench_id"), round(col("jaccard"), 4).as("jaccard"))
+    // the count verify's gram join is Σ over grams of df_train·df_bench
+    val (postsT, postsB) = (Dedup.postings(shT), Dedup.postings(shB))
+    val (candidates, useCount) = Dedup.verifyDecision("Decontaminate.jaccardScreen",
+      candidatesRaw, predictedCandidates, avgT + avgB,
+      SimilarityGuard.crossJoinVolumeAgg(postsT, postsB, Seq("tok")))
+    if (useCount) gramCountCrossVerify(postsT, postsB, threshold)
+    else Dedup.arrayVerify(candidates, shT, shB, "id", "bench_id", threshold)
   }
 
-  /** Cross-set count verify (see [[graft.ops.Dedup]]'s self-join
-    * twin): join the two NARROW posting tables per gram, count shared
-    * grams per (train, bench) pair, jaccard = ov / (szT + szB − ov) —
-    * the identical double division the sorted-merge kernel performs.
-    * Hot grams salt-split by the TRAIN-side df, the big side
-    * ([[SkewJoin.crossJoin]]): train rows keep their own salt, bench
-    * rows fan out to all of them, so every (train, bench) pair still
-    * meets exactly once per shared gram; bench grams absent from the
-    * training corpus drop in the df join (they cannot contribute
-    * overlap). The benchmark side is small by design — a benchmark
-    * gram hot on BOTH sides would need the bench df salted too.
+  /** Cross-set count verify over two posting tables `(id, sz, tok)`:
+    * join them per gram and [[graft.ops.Dedup.countVerify]] per
+    * (train, bench) pair. Hot grams salt-split by the TRAIN-side df,
+    * the big side ([[SkewJoin.crossJoin]]): train rows keep their own
+    * salt, bench rows fan out to all of them, so every (train, bench)
+    * pair still meets exactly once per shared gram; bench grams absent
+    * from the training corpus drop in the df join (they cannot
+    * contribute overlap). The benchmark side is small by design — a
+    * benchmark gram hot on BOTH sides would need the bench df salted
+    * too.
     */
-  private def gramCountCrossVerify(
+  private[graft] def gramCountCrossVerify(
       postsT: DataFrame,
       postsB: DataFrame,
       threshold: Double,
-      bucketCap: Int = 4096): DataFrame = {
-    SkewJoin
-      .crossJoin(postsT, postsB,
+      bucketCap: Int = 4096): DataFrame =
+    Dedup.countVerify(
+      SkewJoin.crossJoin(postsT, postsB,
         SkewJoin.saltGroups(postsT, Seq("tok"), bucketCap), Seq("tok"),
         Seq(col("id"), col("sz")),
-        Seq(col("id").as("bench_id"), col("sz").as("sz_b")))
-      .groupBy("id", "bench_id", "sz", "sz_b")
-      .agg(count(lit(1)).as("ov"))
-      .withColumn("jaccard",
-        col("ov").cast("double") / (col("sz") + col("sz_b") - col("ov")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id"), col("bench_id"), round(col("jaccard"), 4).as("jaccard"))
-  }
+        Seq(col("id").as("bench_id"), col("sz").as("sz_b"))),
+      ("id", "bench_id"), ("sz", "sz_b"), threshold)
 
   /** [[minHashScreen]] with the banding derived from the threshold via
     * [[graft.ops.Dedup.lshBanding]] (S-curve inflection closest to the
@@ -637,35 +543,21 @@ object Decontaminate {
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
       bucketCap: Int = 4096): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val shT = graft.core.StagingScope.stage(
-      shingleTable(train, textCol, idCol, shingleN))
-    val shB = graft.core.StagingScope.stage(
-      shingleTable(bench, textCol, idCol, shingleN))
-    def buckets(sh: DataFrame) = sh
-      .select(col("id"), Dedup.minHashSignature(col("sh"), numHashes).as("sig"))
-      .select(col("id"), Dedup.bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
+    val shT = StagingScope.stage(Dedup.shingleTable(train, textCol, idCol, shingleN))
+    val shB = StagingScope.stage(Dedup.shingleTable(bench, textCol, idCol, shingleN))
     // SKEW GUARD ([[SkewJoin.crossJoin]]): a hot bucket on the TRAIN
     // side — boilerplate mass-duplicated across the corpus —
     // concentrates dfT×dfB pair work in one task. Train buckets over
     // `bucketCap` rows split into g salt groups (train keeps its own
     // salt, the small bench side fans out to all g): per-task work
     // drops to (dfT/g)·dfB, the pair set is unchanged.
-    val bT = graft.core.StagingScope.stage(buckets(shT))
+    val bT = StagingScope.stage(Dedup.bandBucketTable(shT, bands, rowsPerBand))
     val candidates = SkewJoin
-      .crossJoin(bT, buckets(shB),
+      .crossJoin(bT, Dedup.bandBucketTable(shB, bands, rowsPerBand),
         SkewJoin.saltGroups(bT, Seq("bb"), bucketCap), Seq("bb"),
         Seq(col("id")), Seq(col("id").as("bench_id")))
       .select("id", "bench_id")
       .distinct()
-    candidates
-      .join(shT.select(col("id"), col("sh").as("sh_a"))
-        .hint("shuffle_hash"), "id")
-      .join(shB.select(col("id").as("bench_id"), col("sh").as("sh_b"))
-        .hint("shuffle_hash"), "bench_id")
-      .withColumn("jaccard",
-        graft.functions.SetSimilarity.jaccardSorted(col("sh_a"), col("sh_b"), threshold))
-      .where(col("jaccard") >= threshold)
-      .select(col("id"), col("bench_id"), round(col("jaccard"), 4).as("jaccard"))
+    Dedup.arrayVerify(candidates, shT, shB, "id", "bench_id", threshold)
   }
 }

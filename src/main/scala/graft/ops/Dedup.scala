@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.TextAnalytics
+import graft.core.StagingScope
+import graft.functions.{Shingling, TextAnalytics}
 
 /** Document deduplication at pretraining-corpus scale: exact, MinHash+LSH
   * near-dup, SimHash, and n-gram Jaccard. The similarity hashes derive
@@ -116,33 +117,16 @@ object Dedup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
       bucketCap: Int = 4096): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // Materialize shingles in their own projection so the signature's k
-    // transforms reference one computed array instead of k inlined copies.
-    val shingled = docs
-      .select(col(idCol).as("id"), TextAnalytics.tokens(col(textCol)).as("toks"))
-      .select(col("id"),
-        graft.functions.Shingling.sortedShingles(col("toks"), shingleN).as("sh"))
-      // docs shorter than the shingle width have an empty set: their
-      // similarity is undefined (and their all-null MinHash signatures
-      // would collide into one giant bucket) — exclude them up front
-      .where(size(col("sh")) > 0)
-      // regex tokenize + shingle assembly feeds four plan consumers
-      // (signatures, both verify sides, and the bucket fan-out);
-      // materialize it once — storage is the shingle table, which the
-      // verify joins shuffle anyway
-      .transform(graft.core.StagingScope.stage(_))
-    val sigs = shingled
-      .select(col("id"), col("sh"), minHashSignature(col("sh"), numHashes).as("sig"))
-
+    // regex tokenize + shingle assembly feeds four plan consumers
+    // (signatures, both verify sides, and the bucket fan-out);
+    // materialize it once — storage is the shingle table, which the
+    // verify joins shuffle anyway
+    val shingled = StagingScope.stage(shingleTable(docs, textCol, idCol, shingleN))
     // Bucket rows are narrow (bucket key + id): the shuffled self-join
     // never carries shingle arrays — at corpus scale that is the
-    // difference between shuffling ids and shuffling the corpus.
-    val buckets = sigs
-      .select(col("id"), bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
-      // both self-join sides replay the k-hash signature otherwise;
-      // bucket rows are narrow (bucket key + id), so this is cheap
-      .transform(graft.core.StagingScope.stage(_))
+    // difference between shuffling ids and shuffling the corpus. Both
+    // self-join sides replay the k-hash signature otherwise, so stage.
+    val buckets = StagingScope.stage(bandBucketTable(shingled, bands, rowsPerBand))
 
     // SKEW GUARD ([[SkewJoin.selfJoin]]): a hot bucket — e.g.
     // mass-duplicated boilerplate hashing every band identically —
@@ -155,27 +139,7 @@ object Dedup {
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-
-    // Verify candidates with exact Jaccard: re-join the shingle table
-    // (small vs the pair space) on each side of the pair — hash joins,
-    // so the array-carrying intermediate is never sorted (see
-    // [[ngramJaccardPairs]]'s verify note).
-    candidates
-      .join(shingled.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        .hint("shuffle_hash"), "id_a")
-      .join(shingled.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        .hint("shuffle_hash"), "id_b")
-      .withColumn("jaccard",
-        graft.functions.SetSimilarity.jaccardSorted(col("sh_a"), col("sh_b"), threshold))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
-
-  /** Exact Jaccard similarity of two (distinct-element) arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = size(array_union(a, b)).cast("double")
-    when(union > 0, inter / union).otherwise(lit(0.0))
+    arrayVerify(candidates, shingled, shingled, "id_a", "id_b", threshold)
   }
 
   /** Exact n-gram Jaccard similarity join within a blocking key
@@ -185,10 +149,13 @@ object Dedup {
     * share at least one element among the first `|S| - ceil(t*|S|) + 1`
     * of their sorted shingles. Candidates therefore come from an
     * equi-join on (block, prefix-shingle) — never the per-block cross
-    * product — followed by a size-ratio prune (`t*|A| <= |B| <= |A|/t`)
-    * and the exact Jaccard verification. This is the standard exact
-    * set-similarity-join plan at corpus scale: every shuffle is keyed
-    * (prefix token, then id), nothing quadratic materializes.
+    * product — followed by the size-ratio and positional prunes
+    * ([[prefixBound]]) and the exact Jaccard verification. This is the
+    * standard exact set-similarity-join plan at corpus scale: every
+    * shuffle is keyed (prefix token, then id), nothing quadratic
+    * materializes. The cross-set form is
+    * [[Decontaminate.jaccardScreen]]; both run on the join core below
+    * ([[shingleTable]] … [[countVerify]]).
     *
     * DATA-REGIME PRECONDITION (measured in the 100× audit, NOTES_r7):
     * prefix filtering prunes only when the rare end of the vocabulary
@@ -208,50 +175,16 @@ object Dedup {
       blockCol: String,
       shingleN: Int,
       threshold: Double,
-      maxCandidates: Long = SimilarityGuard.Auto,
-      verifyStrategy: String = VerifyAuto): DataFrame = {
-    require(VerifyStrategies.contains(verifyStrategy),
-      s"verifyStrategy must be one of $VerifyStrategies, got $verifyStrategy")
-    val sh = docs
-      .select(
-        col(blockCol).as("block"),
-        col(idCol).as("id"),
-        TextAnalytics.tokens(col(textCol)).as("toks"))
-      .select(col("block"), col("id"),
-        graft.functions.Shingling.sortedShingles(col("toks"), shingleN).as("sh"))
-      // empty shingle sets (sub-shingle-length docs) have undefined
-      // similarity — the oracle's 0/0 is NaN and fails its filter too
-      .where(size(col("sh")) > 0)
-      // the shingle table feeds the prefix derivation AND both verify
-      // sides; materialize once instead of re-tokenizing per consumer
-      .transform(graft.core.StagingScope.stage(_))
-    // Prefix length L = |S| - ceil(t*|S|) + 1, under ascending GLOBAL
-    // FREQUENCY order (rarest shingles first) — the PPJoin ordering: any
-    // common total order is correct, but frequency order makes prefixes
-    // collide least, which is what bounds candidates when the vocabulary
-    // is small. Frequency attaches via an unbounded COUNT window over
-    // (block, tok) — one exchange of the gram table, where the
-    // groupBy-then-rejoin formulation shuffled it twice. The prefix
-    // rows then carry the gram as xxhash64 (htok): the candidate
-    // equi-join only needs gram EQUALITY, a hash collision merely adds
-    // a candidate the exact verify discards, and the shuffled pair
-    // rows stay fixed-width. The ORDER stays (freq, tok) — computed
-    // before the hash, identical on both sides, so the prefix bound's
-    // common-total-order requirement is untouched.
-    val exploded = sh.select(
-      col("block"), col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("tok"))
-    val wFreq = org.apache.spark.sql.expressions.Window.partitionBy("block", "tok")
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("block", "id").orderBy(col("freq"), col("tok"))
-    val prefixes = exploded
-      .withColumn("freq", count(lit(1)).over(wFreq))
-      .withColumn("rn", row_number().over(byRarity))
-      .where(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")).cast("int") + 1)
-      .select(col("block"), col("id"), col("sz"),
-        xxhash64(col("tok")).as("htok"), col("rn"))
-      // both sides of the candidate self-join read this table; without
-      // materialization the freq window + rarity window run twice
-      .transform(graft.core.StagingScope.stage(_))
+      maxCandidates: Long = SimilarityGuard.Auto): DataFrame = {
+    // the shingle table feeds the prefix derivation AND both verify
+    // sides; materialize once instead of re-tokenizing per consumer
+    val sh = StagingScope.stage(
+      shingleTable(docs, textCol, idCol, shingleN, col(blockCol).as("block")))
+    val posts = postings(sh, col("block"))
+    // both sides of the candidate self-join read this table; without
+    // materialization the freq window + rarity window run twice
+    val prefixes = StagingScope.stage(
+      prefixRows(posts, Seq("block"), Seq("block"), threshold))
     // PRE-FLIGHT GUARD (the engine-behavior form of the data-regime
     // precondition above): predict the candidate join's row volume
     // from the prefix dfs and refuse the launch past the cap instead
@@ -274,15 +207,6 @@ object Dedup {
       "Dedup.ngramJaccardPairs",
       "Re-route this corpus to Dedup.minHashLsh (signature-collision-" +
         "driven candidates) and keep the exact join for Heaps-law corpora")
-    // Positional filter (PPJoin): jaccard >= t implies overlap >=
-    // ceil(t/(1+t) * (|A|+|B|)), and a pair's overlap is bounded by
-    // 1 + min(|A|-posA, |B|-posB) at its earliest matching prefix
-    // token. The bound is checked PER MATCH ROW, map-side, BEFORE the
-    // dedup shuffle: a row whose own bound fails can never be the max
-    // that passes, so dropping it pre-shuffle decides every pair
-    // identically while only qualifying matches travel the wire (the
-    // earlier post-aggregation filter shuffled every join match — the
-    // dominant cost of the candidate stage on df-heavy corpora).
     val candidatesRaw = prefixes
       .select(col("block"), col("htok"),
         col("id").as("id_a"), col("sz").as("sz_a"), col("rn").as("rn_a"))
@@ -290,162 +214,236 @@ object Dedup {
         prefixes.select(col("block"), col("htok"),
           col("id").as("id_b"), col("sz").as("sz_b"), col("rn").as("rn_b")),
         Seq("block", "htok"))
-      .where(
-        col("id_a") < col("id_b") &&
-          col("sz_b") * threshold <= col("sz_a") &&
-          col("sz_a") * threshold <= col("sz_b") &&
-          lit(1) + least(col("sz_a") - col("rn_a"), col("sz_b") - col("rn_b")) >=
-            ceil(lit(threshold) / (1 + threshold) * (col("sz_a") + col("sz_b"))))
+      .where(col("id_a") < col("id_b") &&
+        prefixBound(col("sz_a"), col("rn_a"), col("sz_b"), col("rn_b"), threshold))
       .select("id_a", "id_b")
       // predicted-vs-actual telemetry on the surviving candidate rows
       // (actual <= predicted: the positional prune is fused above)
       .transform(SimilarityGuard.observed(_,
         "Dedup.ngramJaccardPairs", predictedCandidates))
       .distinct()
-    // narrow (two longs per row); materializing buys an exact candidate
-    // count for the verify-strategy decision without recomputing the
-    // candidate join — only paid when the decision actually runs. The
-    // gate is the PREDICTED array-verify volume (candidate upper bound
-    // × both arrays), free from the guard's aggregation: posting COUNT
-    // is the wrong dimension (the 100× audit corpus holds only 25M
-    // postings yet a catastrophic Σdf² candidate set).
-    val needDecision = verifyStrategy == VerifyAuto &&
-      predictedCandidates * 2.0 * avgSz > VerifyDecisionMinElements
-    val candidates =
-      if (needDecision) graft.core.StagingScope.stage(candidatesRaw)
-      else candidatesRaw
-
-    // VERIFY-STRATEGY DECISION. The array verify ships each candidate
-    // pair's two full shingle arrays through a shuffle — candidates ×
-    // 2·avgSz elements, which is what out-scratched the 100× audit box
-    // (>75 GB for q22: per-pair cost ∝ document length). The count
-    // verify never touches arrays: it re-joins the NARROW posting
-    // table with itself per (block, gram) and counts shared grams per
-    // pair — Σ df·(df−1)/2 rows over ALL grams. Neither dominates
-    // universally: natural corpora have hot stopword grams (df ∝ n
-    // makes the count join quadratic — exactly what PPJoin's
-    // rarest-prefix order avoids) but few candidates; df-heavy
-    // near-duplicate corpora have moderate dfs but candidate × length
-    // products that dwarf the gram volume. Both inputs to the
-    // comparison are EXACT and already cheap to measure here: the
-    // candidate count (above) and the same df aggregation the guard
-    // runs. Both paths compute identical pairs and identical
-    // double-division jaccard, so the choice is invisible to results
-    // (spec-pinned both ways).
-    val useCount = verifyStrategy match {
-      case VerifyCount => true
-      case VerifyArray => false
-      // below the element floor even a pessimal array verify is a few
-      // GB of shuffle — the decision's extra jobs (candidate count +
-      // gram-df aggregation) would cost more than they could save, so
-      // small launches take the array path with zero overhead and the
-      // decision runs only where the stake is real
-      case _ if !needDecision => false
-      case _ =>
-        // one fused job: the exact candidate count (off the staged pair
-        // table) and the gram-join volume, instead of two round trips
-        val decision = candidates.agg(count(lit(1)).as("nc"))
-          .crossJoin(SimilarityGuard.selfJoinVolumeAgg(
-            exploded, Seq("block", "tok")))
-          .head()
-        val nCand = decision.getLong(0)
-        val gramVolume = SimilarityGuard.volumeOf(decision, 1)
-        val arrayElems = nCand * 2.0 * avgSz
-        val chooseCount = gramVolume < arrayElems
-        log.warn(s"ngramJaccardPairs verify decision: $nCand candidates × " +
-          f"2×$avgSz%.0f grams = $arrayElems%.3g array elements vs " +
-          s"$gramVolume gram-join rows → " +
-          (if (chooseCount) "COUNT verify" else "ARRAY verify"))
-        chooseCount
-    }
-    if (useCount)
-      gramCountSelfVerify(exploded, threshold)
-    else
-      // SHUFFLE_HASH on the shingle side of both attachments: sort-merge
-      // would SORT the candidate×array intermediate (KBs per row — on
-      // df-heavy corpora the 100x audit measured multi-GB sort spills
-      // per task exactly here); the hash join streams it instead, and
-      // the build side is one hash-partition of the shingle table —
-      // bounded by partition sizing at any corpus size.
-      candidates
-        .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-          .hint("shuffle_hash"), "id_a")
-        .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-          .hint("shuffle_hash"), "id_b")
-        // native merge-walk verify on the sorted arrays (early-exit
-        // below threshold) — the per-candidate hot kernel
-        .withColumn("jaccard",
-          graft.functions.SetSimilarity.jaccardSorted(col("sh_a"), col("sh_b"), threshold))
-        .where(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    // the count verify's gram join is Σ df·(df−1)/2 over (block, gram)
+    val (candidates, useCount) = verifyDecision("Dedup.ngramJaccardPairs",
+      candidatesRaw, predictedCandidates, 2.0 * avgSz,
+      SimilarityGuard.selfJoinVolumeAgg(posts, Seq("block", "tok")))
+    if (useCount) gramCountSelfVerify(posts, threshold)
+    else arrayVerify(candidates, sh, sh, "id_a", "id_b", threshold)
   }
 
-  val VerifyAuto = "auto"
-  val VerifyArray = "array"
-  val VerifyCount = "count"
-  val VerifyStrategies: Set[String] = Set(VerifyAuto, VerifyArray, VerifyCount)
+  // ---- The exact set-similarity join core -----------------------------
+  // One copy of each piece the self-join forms here ([[minHashLsh]],
+  // [[ngramJaccardPairs]]) and the cross-set forms in [[Decontaminate]]
+  // ([[Decontaminate.jaccardScreen]], [[Decontaminate.minHashScreen]])
+  // share. Tables use fixed column names: `id`, `sh` (sorted distinct
+  // shingles), `sz` (set size), `tok` (one shingle), `htok`, `rn`.
 
-  /** Array-element floor below which the auto verify decision
-    * short-circuits to the array path: the gate compares the
-    * PREDICTED candidate volume (an upper bound on candidates, already
-    * computed for the guard) times both arrays' average length against
-    * this; under a billion elements (~20 GB pessimal, and the
-    * prediction typically overshoots the true candidate count by an
-    * order) the array verify cannot be the binding resource, so the
-    * decision's own jobs aren't worth running.
+  /** Distinct-shingle table `(keys…, id, sh)` of a corpus, empty sets
+    * dropped: docs shorter than the shingle width have undefined
+    * similarity (the oracle's 0/0 is NaN and fails its filter too), and
+    * their all-null MinHash signatures would collide into one giant
+    * bucket.
+    */
+  private[graft] def shingleTable(
+      docs: DataFrame,
+      textCol: String,
+      idCol: String,
+      shingleN: Int,
+      keys: Column*): DataFrame =
+    docs
+      .select(keys ++ Seq(col(idCol).as("id"),
+        Shingling.sortedShingles(TextAnalytics.tokens(col(textCol)), shingleN).as("sh")): _*)
+      .where(size(col("sh")) > 0)
+
+  /** Band-bucket table `(id, bb)` of a shingle table: the MinHash
+    * signature stays in its own projection, because [[bandBuckets]]
+    * slices it once per band.
+    */
+  private[graft] def bandBucketTable(
+      sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sh.select(col("id"), minHashSignature(col("sh"), bands * rowsPerBand).as("sig"))
+      .select(col("id"), bandBuckets(col("sig"), bands, rowsPerBand).as("bb"))
+
+  /** Posting rows `(keys…, id, sz, tok)` of a shingle table: one row per
+    * (doc, distinct shingle), carrying the doc's set size.
+    */
+  private[graft] def postings(sh: DataFrame, keys: Column*): DataFrame =
+    sh.select(keys ++ Seq(col("id"), size(col("sh")).as("sz"),
+      explode(col("sh")).as("tok")): _*)
+
+  /** PPJoin prefix rows `(docKeys…, id, sz, htok, rn)` of a posting
+    * table: each doc's first `|S| - ceil(t*|S|) + 1` shingles under
+    * ascending FREQUENCY order over `freqKeys` (rarest first). Any
+    * common total order is correct; frequency order makes prefixes
+    * collide least, which is what bounds candidates when the
+    * vocabulary is small. Frequency attaches via an unbounded COUNT
+    * window over (freqKeys, tok) — one exchange of the posting table,
+    * where groupBy-then-rejoin shuffled it twice — and the rarity
+    * window partitions by (docKeys, id), so ids from two corpora (the
+    * cross form's `side`) never share a window. The rows carry the gram
+    * as xxhash64 (`htok`): the candidate equi-join needs only gram
+    * EQUALITY, a collision merely adds a candidate the exact verify
+    * discards, and the pair rows stay fixed-width. The ORDER stays
+    * (freq, tok), computed before the hash and identical on both
+    * sides. Self-join: `freqKeys = docKeys = block`; cross-set: no
+    * freq keys (one order over the union) and `docKeys = side`.
+    */
+  private[graft] def prefixRows(
+      posts: DataFrame,
+      freqKeys: Seq[String],
+      docKeys: Seq[String],
+      threshold: Double): DataFrame = {
+    val wFreq = Window.partitionBy((freqKeys :+ "tok").map(col): _*)
+    val byRarity = Window.partitionBy((docKeys :+ "id").map(col): _*)
+      .orderBy(col("freq"), col("tok"))
+    posts
+      .withColumn("freq", count(lit(1)).over(wFreq))
+      .withColumn("rn", row_number().over(byRarity))
+      .where(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")).cast("int") + 1)
+      .select(docKeys.map(col) ++ Seq(col("id"), col("sz"),
+        xxhash64(col("tok")).as("htok"), col("rn")): _*)
+  }
+
+  /** The PPJoin prune of one prefix-match row `(szA, rnA, szB, rnB)`:
+    * the size-ratio bound `t·|B| <= |A| <= |B|/t`, and the positional
+    * bound — jaccard >= t implies overlap >= ceil(t/(1+t)·(|A|+|B|)),
+    * while a pair's overlap is at most 1 + min(|A|-rnA, |B|-rnB) at its
+    * earliest matching prefix token. Checked PER MATCH ROW, map-side,
+    * BEFORE the pair dedup shuffle: a row whose own bound fails can
+    * never be the max that passes, so every pair is decided identically
+    * while only qualifying matches travel the wire.
+    */
+  private[graft] def prefixBound(
+      szA: Column, rnA: Column, szB: Column, rnB: Column, threshold: Double): Column =
+    szB * threshold <= szA && szA * threshold <= szB &&
+      lit(1) + least(szA - rnA, szB - rnB) >=
+        ceil(lit(threshold) / (1 + threshold) * (szA + szB))
+
+  /** Array-element floor below which the verify decision short-circuits
+    * to the array path: the gate compares the PREDICTED candidate
+    * volume (an upper bound on candidates, already computed for the
+    * guard) times the elements per candidate against this; under a
+    * billion elements (~20 GB pessimal, and the prediction typically
+    * overshoots the true candidate count by an order) the array verify
+    * cannot be the binding resource, so the decision's own jobs aren't
+    * worth running.
     */
   val VerifyDecisionMinElements: Double = 1e9
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Exact-similarity verify WITHOUT arrays: self-join the narrow
-    * posting table per (block, gram), count shared grams per id pair,
-    * and compute jaccard = ov / (szA + szB − ov) — the identical
-    * double division the sorted-merge kernel performs, so results are
-    * bit-equal to the array verify. Work is Σ df·(df−1)/2 NARROW rows
-    * (~tens of bytes each) instead of candidates × document-length
-    * array elements — the winning regime for df-heavy corpora whose
-    * candidate sets are large but gram volume linear (the 100× audit
-    * shape). Per-gram salting ([[SkewJoin.selfJoin]]) keeps a single
-    * hot gram from becoming one quadratic task.
+  /** VERIFY DECISION: array verify or count verify, from exact volumes.
+    * The array verify ([[arrayVerify]]) ships each candidate pair's two
+    * full shingle arrays through a shuffle — candidates ×
+    * `elemsPerCandidate` elements (2·avgSz self, avgTrain + avgBench
+    * cross), which is what out-scratched the 100× audit box (>75 GB for
+    * q22: per-pair cost ∝ document length). The count verify never
+    * touches arrays: it joins the NARROW posting tables per gram and
+    * counts shared grams per pair — `gramVolumeAgg`'s Σ df-product rows
+    * over ALL grams. Neither dominates universally: natural corpora
+    * have hot stopword grams (df ∝ n makes the count join quadratic —
+    * exactly what PPJoin's rarest-prefix order avoids) but few
+    * candidates; df-heavy near-duplicate corpora have moderate dfs but
+    * candidate × length products that dwarf the gram volume. Both paths
+    * compute identical pairs and identical double-division jaccard, so
+    * the choice is invisible to results.
     *
-    * Test hook: the count verify over a docs frame with a forced salt
-    * cap — pins pair-set invariance under hot-gram splitting.
+    * Below [[VerifyDecisionMinElements]] predicted elements the array
+    * path is taken with zero overhead. Above it the candidates are
+    * staged (narrow; the exact count then costs no second candidate
+    * join) and ONE fused job measures the candidate count and the
+    * gram-join volume. Returns the candidates to verify and whether the
+    * count verify won.
     */
-  private[graft] def gramCountSelfVerifyForTest(
-      docs: DataFrame,
-      bucketCap: Int,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      blockCol: String = "lang",
-      shingleN: Int = 2,
-      threshold: Double = 0.5): DataFrame = {
-    val posts = docs
-      .select(col(blockCol).as("block"), col(idCol).as("id"),
-        graft.functions.Shingling.sortedShingles(
-          TextAnalytics.tokens(col(textCol)), shingleN).as("sh"))
-      .where(size(col("sh")) > 0)
-      .select(col("block"), col("id"), size(col("sh")).as("sz"),
-        explode(col("sh")).as("tok"))
-    gramCountSelfVerify(posts, threshold, bucketCap)
-  }
+  private[graft] def verifyDecision(
+      site: String,
+      candidates: DataFrame,
+      predictedCandidates: Long,
+      elemsPerCandidate: Double,
+      gramVolumeAgg: => DataFrame): (DataFrame, Boolean) =
+    if (predictedCandidates * elemsPerCandidate <= VerifyDecisionMinElements)
+      (candidates, false)
+    else {
+      val staged = StagingScope.stage(candidates)
+      val decision = staged.agg(count(lit(1)).as("nc"))
+        .crossJoin(gramVolumeAgg)
+        .head()
+      val nCand = decision.getLong(0)
+      val gramVolume = SimilarityGuard.volumeOf(decision, 1)
+      val arrayElems = nCand * elemsPerCandidate
+      val chooseCount = gramVolume < arrayElems
+      log.warn(s"$site verify decision: $nCand candidates × " +
+        f"$elemsPerCandidate%.0f grams = $arrayElems%.3g array elements vs " +
+        s"$gramVolume gram-join rows → " +
+        (if (chooseCount) "COUNT verify" else "ARRAY verify"))
+      (staged, chooseCount)
+    }
 
-  private def gramCountSelfVerify(
-      posts: DataFrame,
-      threshold: Double,
-      bucketCap: Int = 4096): DataFrame = {
-    SkewJoin
-      .selfJoin(posts, Seq("block", "tok"), bucketCap,
-        Seq(col("id").as("id_a"), col("sz").as("sz_a")),
-        Seq(col("id").as("id_b"), col("sz").as("sz_b")))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "sz_a", "sz_b")
+  /** Exact-Jaccard verify of candidate pairs `(idA, idB)` by their
+    * shingle arrays, attached from the shingle tables `shA` and `shB`.
+    * SHUFFLE_HASH on the shingle side of both attachments: sort-merge
+    * would SORT the candidate×array intermediate (KBs per row — on
+    * df-heavy corpora the 100x audit measured multi-GB sort spills per
+    * task exactly here); the hash join streams it instead, and the
+    * build side is one hash-partition of the shingle table — bounded
+    * by partition sizing at any corpus size. The native merge-walk
+    * kernel exits early below threshold. Returns `(idA, idB, jaccard)`.
+    */
+  private[graft] def arrayVerify(
+      candidates: DataFrame,
+      shA: DataFrame,
+      shB: DataFrame,
+      idA: String,
+      idB: String,
+      threshold: Double): DataFrame =
+    candidates
+      .join(shA.select(col("id").as(idA), col("sh").as("sh_a"))
+        .hint("shuffle_hash"), idA)
+      .join(shB.select(col("id").as(idB), col("sh").as("sh_b"))
+        .hint("shuffle_hash"), idB)
+      .withColumn("jaccard",
+        graft.functions.SetSimilarity.jaccardSorted(col("sh_a"), col("sh_b"), threshold))
+      .where(col("jaccard") >= threshold)
+      .select(col(idA), col(idB), round(col("jaccard"), 4).as("jaccard"))
+
+  /** The count-verify tail over one row per (pair, shared gram):
+    * overlap `ov` per pair, jaccard = ov / (szA + szB − ov) — the
+    * identical double division the sorted-merge kernel performs, so
+    * results are bit-equal to [[arrayVerify]]. Returns
+    * `(idA, idB, jaccard)`.
+    */
+  private[graft] def countVerify(
+      matches: DataFrame,
+      ids: (String, String),
+      sizes: (String, String),
+      threshold: Double): DataFrame =
+    matches
+      .groupBy(ids._1, ids._2, sizes._1, sizes._2)
       .agg(count(lit(1)).as("ov"))
       .withColumn("jaccard",
-        col("ov").cast("double") / (col("sz_a") + col("sz_b") - col("ov")))
+        col("ov").cast("double") / (col(sizes._1) + col(sizes._2) - col("ov")))
       .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
+      .select(col(ids._1), col(ids._2), round(col("jaccard"), 4).as("jaccard"))
+
+  /** Self-join count verify over a posting table `(block, id, sz, tok)`:
+    * self-join per (block, gram) and [[countVerify]]. Work is
+    * Σ df·(df−1)/2 NARROW rows (~tens of bytes each) instead of
+    * candidates × document-length array elements — the winning regime
+    * for df-heavy corpora whose candidate sets are large but gram
+    * volume linear (the 100× audit shape). Per-gram salting
+    * ([[SkewJoin.selfJoin]]) keeps a single hot gram from becoming one
+    * quadratic task.
+    */
+  private[graft] def gramCountSelfVerify(
+      posts: DataFrame,
+      threshold: Double,
+      bucketCap: Int = 4096): DataFrame =
+    countVerify(
+      SkewJoin
+        .selfJoin(posts, Seq("block", "tok"), bucketCap,
+          Seq(col("id").as("id_a"), col("sz").as("sz_a")),
+          Seq(col("id").as("id_b"), col("sz").as("sz_b")))
+        .where(col("id_a") < col("id_b")),
+      ("id_a", "id_b"), ("sz_a", "sz_b"), threshold)
 
   /** Winnowing-fingerprint near-dup pair screen — the JOIN consumer of
     * the MOSS fingerprints (Schleimer et al. SIGMOD 2003; the per-row

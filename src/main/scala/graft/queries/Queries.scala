@@ -2018,7 +2018,7 @@ object Queries {
       // the gate must exercise the SKETCH machinery at every SF; at
       // sf0.01 the tiny bench would otherwise self-route to the plain
       // screen (same rows — the routing is a cost call, not semantics)
-      delegateBytes = Some(0L))
+      delegateBytes = 0L)
       .withColumnRenamed("id", "doc_id")
   }
 
@@ -2370,7 +2370,7 @@ object Queries {
       docs.where(col("doc_id") % 10 =!= 0),
       docs.where(col("doc_id") % 10 === 0),
       "text", "doc_id", n = 3,
-      delegateBytes = Some(0L))
+      delegateBytes = 0L)
       .withColumnRenamed("id", "doc_id")
   }
 

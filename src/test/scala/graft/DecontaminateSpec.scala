@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Decontaminate
+import graft.ops.{Decontaminate, Dedup}
 
 /** Benchmark n-gram decontamination: crafted corpus with known overlap
   * structure, checked against hand-computed expectations (one row per
@@ -160,6 +160,27 @@ class DecontaminateSpec extends SparkSpec {
     assert(got(0)._3 > 0.5 && got(0)._3 < 1.0)
   }
 
+  private def screenRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The cross-set verify paths run directly on Dedup's shared shingle
+    * tables: the count verify over their postings, the array verify
+    * over every (train, bench) pair — a candidate superset.
+    */
+  private def verifyPaths(
+      train: org.apache.spark.sql.DataFrame,
+      bench: org.apache.spark.sql.DataFrame,
+      bucketCap: Int = 4096) = {
+    val shT = Dedup.shingleTable(train, "text", "id", 2)
+    val shB = Dedup.shingleTable(bench, "text", "id", 2)
+    val viaCount = Decontaminate.gramCountCrossVerify(
+      Dedup.postings(shT), Dedup.postings(shB), 0.5, bucketCap)
+    val allPairs = shT.select(col("id"))
+      .crossJoin(shB.select(col("id").as("bench_id")))
+    val viaArray = Dedup.arrayVerify(allPairs, shT, shB, "id", "bench_id", 0.5)
+    (screenRows(viaCount), screenRows(viaArray))
+  }
+
   test("jaccardScreen: count verify == array verify == auto, jaccard included") {
     val bench = Seq(
       (100L, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -168,15 +189,32 @@ class DecontaminateSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy cat near the river bank"),
       (2L, "completely different content with no shared phrasing at all"),
       (3L, "pack my box with five dozen liquor jugs tonight")).toDF("id", "text")
-    def run(strategy: String) = Decontaminate.jaccardScreen(
-      train, bench, "text", "id", shingleN = 2, threshold = 0.5,
-      verifyStrategy = strategy)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaArray = run(graft.ops.Dedup.VerifyArray)
-    val viaCount = run(graft.ops.Dedup.VerifyCount)
-    assert(viaArray === viaCount)
-    assert(run(graft.ops.Dedup.VerifyAuto) === viaArray)
-    assert(viaArray.map(p => (p._1, p._2)) === Set((1L, 100L), (3L, 101L)))
+    // at test scale the public screen stays under the verify decision's
+    // element floor, so it takes the array path
+    val viaAuto = screenRows(Decontaminate.jaccardScreen(
+      train, bench, "text", "id", shingleN = 2, threshold = 0.5))
+    val (viaCount, viaArray) = verifyPaths(train, bench)
+    assert(viaCount === viaAuto)
+    assert(viaArray === viaAuto)
+    assert(viaAuto.map(p => (p._1, p._2)) === Set((1L, 100L), (3L, 101L)))
+  }
+
+  test("jaccardScreen: the count verify's train-side salt split (cap 1, " +
+      "every gram splits) keeps the array verify's rows") {
+    val bench = Seq(
+      (100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (101L, "one two three four five six seven eight nine ten")).toDF("id", "text")
+    // repeated near-copies give the shared grams train-side df >= 2
+    val train = ((0 until 4).map(i =>
+      (i.toLong, s"alpha beta gamma delta epsilon zeta eta theta iota v$i")) ++
+      (0 until 4).map(i =>
+        (10L + i, s"one two three four five six seven eight w$i ten")) ++
+      Seq((20L, "unrelated words that share nothing with any benchmark")))
+      .toDF("id", "text")
+    val (viaCount, viaArray) = verifyPaths(train, bench, bucketCap = 1)
+    assert(viaCount === viaArray)
+    assert(viaArray.map(p => (p._1, p._2)) ===
+      ((0L until 4L).map((_, 100L)) ++ (10L until 14L).map((_, 101L))).toSet)
   }
 
   test("minHashScreen recall vs the exact screen on planted near-contaminated docs") {
@@ -295,45 +333,39 @@ class DecontaminateSpec extends SparkSpec {
         r.getDouble(3), r.getBoolean(4)))
       .toSet
 
-  private def forcingSketchPath[T](f: => T): T = {
-    // a tiny bench fits any sane broadcast budget, so the self-routing
-    // would delegate to the plain screen — force the sketch machinery
-    spark.conf.set(Decontaminate.BenchDelegateBytesKey, "0")
-    try f finally spark.conf.unset(Decontaminate.BenchDelegateBytesKey)
-  }
-
+  // a tiny bench fits any sane broadcast budget, so the self-routing
+  // would delegate to the plain screen — delegateBytes = 0L forces the
+  // sketch machinery
   test("bloomOverlap is bit-identical to ngramOverlap (null text included)") {
-    forcingSketchPath {
-      val train = bloomTrain.toDF("id", "text")
-      val bench = bloomBench.toDF("id", "text")
-      val exact = asRows(Decontaminate.ngramOverlap(train, bench, "text", "id", 3))
-      val bloom = asRows(Decontaminate.bloomOverlap(train, bench, "text", "id", 3))
-      assert(bloom === exact)
-      assert(bloom.map(_._1) === Set(1L, 2L, 3L, 4L, 5L))
-    }
+    val train = bloomTrain.toDF("id", "text")
+    val bench = bloomBench.toDF("id", "text")
+    val exact = asRows(Decontaminate.ngramOverlap(train, bench, "text", "id", 3))
+    val bloom = asRows(Decontaminate.bloomOverlap(train, bench, "text", "id", 3,
+      delegateBytes = 0L))
+    assert(bloom === exact)
+    assert(bloom.map(_._1) === Set(1L, 2L, 3L, 4L, 5L))
   }
 
   test("bloomOverlap under a 1-byte budget (saturated filter, all false " +
       "positives) still verifies exactly") {
     spark.conf.set(graft.functions.Bloom.BloomBytesKey, "1")
-    try forcingSketchPath {
+    try {
       val train = bloomTrain.toDF("id", "text")
       val bench = bloomBench.toDF("id", "text")
       assert(
-        asRows(Decontaminate.bloomOverlap(train, bench, "text", "id", 3)) ===
+        asRows(Decontaminate.bloomOverlap(train, bench, "text", "id", 3,
+          delegateBytes = 0L)) ===
           asRows(Decontaminate.ngramOverlap(train, bench, "text", "id", 3)))
     } finally spark.conf.unset(graft.functions.Bloom.BloomBytesKey)
   }
 
   test("bloomOverlap's candidate prefilter is in the plan (codegen predicate " +
       "before the gram join)") {
-    forcingSketchPath {
-      val out = Decontaminate.bloomOverlap(
-        bloomTrain.toDF("id", "text"), bloomBench.toDF("id", "text"),
-        "text", "id", 3)
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("bloom_might_contain"))
-    }
+    val out = Decontaminate.bloomOverlap(
+      bloomTrain.toDF("id", "text"), bloomBench.toDF("id", "text"),
+      "text", "id", 3, delegateBytes = 0L)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("bloom_might_contain"))
   }
 
   test("bloomOverlap self-routes: a broadcast-sized bench delegates to " +

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Dedup
+import graft.ops.{Dedup, SimilarityGuard}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -45,29 +45,66 @@ class DedupSpec extends SparkSpec {
     assert(got.size <= want.size + 5, s"too many spurious pairs: $got")
   }
 
-  test("gram-count verify == array verify, jaccard values included") {
-    // the two verify strategies must be result-identical (the auto
-    // decision is then invisible): same pairs, same double-division
-    // jaccard — compared UNROUNDED beyond the catalog's 4dp via the
-    // returned rounded column (any arithmetic drift >= 5e-5 would show)
+  /** The shared shingle table of the planted corpus in one block, and
+    * its postings — the inputs of the exact join's verify paths.
+    */
+  private def shingled() = {
     val docs = corpus.toDF("doc_id", "text").withColumn("lang", lit("xx"))
-    def run(strategy: String) = Dedup
-      .ngramJaccardPairs(docs, "text", "doc_id", "lang", shingleN = 2,
-        threshold = 0.5, verifyStrategy = strategy)
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val viaArray = run(Dedup.VerifyArray)
-    val viaCount = run(Dedup.VerifyCount)
-    val viaAuto = run(Dedup.VerifyAuto)
-    assert(viaArray === viaCount)
-    assert(viaArray === viaAuto)
+    val sh = Dedup.shingleTable(docs, "text", "doc_id", 2, col("lang").as("block"))
+    (docs, sh, Dedup.postings(sh, col("block")))
+  }
+
+  private def pairRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+
+  test("gram-count verify == array verify, jaccard values included") {
+    // the two verify paths must be result-identical (the verify
+    // decision is then invisible): same pairs, same double-division
+    // jaccard — compared via the returned rounded column (any
+    // arithmetic drift >= 5e-5 would show). At test scale the public
+    // operator stays under VerifyDecisionMinElements, so it takes the
+    // array path; the count verify runs directly on the postings.
+    val (docs, _, posts) = shingled()
+    val viaArray = pairRows(Dedup
+      .ngramJaccardPairs(docs, "text", "doc_id", "lang", shingleN = 2, threshold = 0.5))
     assert(viaArray.nonEmpty)
+    assert(pairRows(Dedup.gramCountSelfVerify(posts, 0.5)) === viaArray)
     // hot-gram salting in the count path is pure work redistribution:
     // cap 1 forces every gram to salt-split and the pairs are unchanged
-    val salted = Dedup.gramCountSelfVerifyForTest(docs, bucketCap = 1)
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(salted === viaCount)
+    assert(pairRows(Dedup.gramCountSelfVerify(posts, 0.5, bucketCap = 1)) === viaArray)
+  }
+
+  test("verify decision: below the element floor no job runs; above it the " +
+      "candidates are staged and COUNT wins iff gramVolume < nCand x elements") {
+    val (docs, sh, posts) = shingled()
+    // every in-block pair: a candidate superset, so either verify
+    // returns exactly the true pairs
+    val candidates = sh.select(col("id").as("id_a"))
+      .crossJoin(sh.select(col("id").as("id_b")))
+      .where(col("id_a") < col("id_b"))
+    val below = Dedup.verifyDecision("DedupSpec", candidates, 1L, 1.0,
+      sys.error("the decision job ran below the element floor"))
+    assert(below._1 eq candidates)
+    assert(!below._2)
+
+    val nCand = candidates.count()
+    val gramAgg = SimilarityGuard.selfJoinVolumeAgg(posts, Seq("block", "tok"))
+    val gramVolume = SimilarityGuard.volumeOf(gramAgg.head(), 0)
+    val predicted = Long.MaxValue / 2 // any prediction past the floor
+    def decide(elems: Double) =
+      Dedup.verifyDecision("DedupSpec", candidates, predicted, elems, gramAgg)
+    val (stagedC, pickCount) = decide(2.0 * gramVolume / nCand)
+    val (stagedA, pickCountA) = decide(0.5 * gramVolume / nCand)
+    assert(pickCount && !pickCountA)
+    for (staged <- Seq(stagedC, stagedA)) {
+      assert(org.apache.spark.sql.classic.GraftColumnBridge
+        .checkpointRootRdd(staged).isDefined, "candidates were not staged")
+      assert(staged.count() === nCand)
+    }
+    val want = pairRows(Dedup
+      .ngramJaccardPairs(docs, "text", "doc_id", "lang", shingleN = 2, threshold = 0.5))
+    assert(pairRows(Dedup.gramCountSelfVerify(posts, 0.5)) === want)
+    assert(pairRows(Dedup.arrayVerify(stagedA, sh, sh, "id_a", "id_b", 0.5)) === want)
   }
 
   test("sub-shingle-length docs (empty shingle sets) never pair as duplicates") {

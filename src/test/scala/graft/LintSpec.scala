@@ -142,6 +142,17 @@ class LintSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("one exact-Jaccard verify choice: no parameter named " +
+      "`verifyStrategy` in src/main overrides the measured decision") {
+    val param = """\bverifyStrategy\s*:""".r
+    val hits = for {
+      (p, src) <- mainSources
+      (ln, line) <- codeLines(src)
+      if param.findFirstIn(line).isDefined
+    } yield s"$p:$ln: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("oracle coverage: every catalog query has a DuckDB oracle except " +
       "the three whose output a fitted quantizer or corpus-sized bits decide") {
     val rowsOnly = graft.queries.Queries.all.keySet -- graft.queries.Queries.oracles.keySet
@@ -169,14 +180,14 @@ class LintSpec extends AnyFunSuite {
   }
 
   test("one staging mode: no graft.staging.* key in src/main, and the " +
-      "conf-key registry holds exactly the five byte budgets") {
+      "conf-key registry holds exactly the four byte budgets") {
     val hits = for {
       (p, src) <- mainSources
       (ln, line) <- src.linesIterator.zipWithIndex.map { case (l, i) => (i + 1, l) }
       if line.contains("graft.staging.")
     } yield s"$p:$ln: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
-    assert(graft.Budgets.keys.size == 5, graft.Budgets.keys.toSeq.sorted.mkString(", "))
+    assert(graft.Budgets.keys.size == 4, graft.Budgets.keys.toSeq.sorted.mkString(", "))
   }
 
   test("one way to stage: no StagingScope.register around a " +
