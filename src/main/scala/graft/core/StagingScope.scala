@@ -29,9 +29,10 @@ import org.apache.spark.sql.DataFrame
   *
   * NOT routed through here: iteration-round checkpoints with an
   * explicit supersede-and-release lifecycle (Closure, Components,
-  * PageRank, BpeLearn, the streaming state holders — each round frees
-  * the previous one immediately; only their FINAL frame is registered
-  * for the boundary drain), and session-cached state that must survive
+  * PageRank, BpeLearn, the one streaming fold-state holder
+  * `streaming.StreamGate.FoldState` — each round frees the previous
+  * one immediately; only their FINAL frame is registered for the
+  * boundary drain), and session-cached state that must survive
   * query boundaries (`Similarity.ivfIndexFor`'s persisted indexes own
   * a release-on-evict lifecycle; `Closure.closureTable` backs the
   * `partClosure` memo).

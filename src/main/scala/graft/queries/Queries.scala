@@ -1493,7 +1493,7 @@ object Queries {
   /** INCREMENTAL connected components, streamed: q53's exact near-dup
     * pairs are hash-sliced into four files, streamed one file per
     * micro-batch, and folded batch-by-batch through
-    * [[graft.streaming.StreamComponents]]'s star-forest accumulator —
+    * [[graft.streaming.StreamComponents]]'s star-forest fold —
     * the final snapshot must equal the one-shot batch clustering, so
     * q53's recursive-reachability oracle gates the incremental
     * machinery VERBATIM.

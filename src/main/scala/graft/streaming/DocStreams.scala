@@ -76,10 +76,9 @@ object DocStreams {
       threshold: Double = 0.5,
       shingleN: Int = 3,
       bands: Int = 8,
-      rowsPerBand: Int = 4,
-      watermark: String = "10 minutes"): DataFrame =
+      rowsPerBand: Int = 4): DataFrame =
     bucketed(
-      docs.withWatermark(tsCol, watermark),
+      docs.withWatermark(tsCol, EventStreams.Watermark),
       textCol, idCol, shingleN, bands, rowsPerBand)
       .join(index, Seq("bb"))
       .withColumn("jaccard",

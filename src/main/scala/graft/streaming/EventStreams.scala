@@ -22,6 +22,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStreams {
 
+  /** The tumbling-window width of [[windowedTypeCounts]] (q31's hour
+    * binning).
+    */
+  val Window = "1 hour"
+
+  /** The late-data bound of every watermarked streaming operator: state
+    * older than the latest event time minus this is evicted.
+    */
+  val Watermark = "10 minutes"
+
   case class Event(user_id: Long, event_id: Long, event_type: String, ts: Timestamp)
 
   case class SessionOut(user_id: Long, n_events: Long, start_us: Long, end_us: Long)
@@ -35,13 +45,10 @@ object EventStreams {
     * incremental form of q31's hour binning. `append` mode — a window
     * emits once, when the watermark passes its end.
     */
-  def windowedTypeCounts(
-      events: DataFrame,
-      window: String = "1 hour",
-      watermark: String = "10 minutes"): DataFrame =
+  def windowedTypeCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("event_type"))
+      .withWatermark("ts", Watermark)
+      .groupBy(window(col("ts"), Window), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
         col("window.start").as("window_start"),
@@ -55,14 +62,10 @@ object EventStreams {
     * dedup needs (the batch groupBy holds ALL history; this holds one
     * watermark's worth).
     */
-  def dedupStream(
-      docs: DataFrame,
-      textCol: String,
-      tsCol: String,
-      watermark: String = "10 minutes"): DataFrame =
+  def dedupStream(docs: DataFrame, textCol: String, tsCol: String): DataFrame =
     docs
       .withColumn("content_hash", md5(col(textCol)))
-      .withWatermark(tsCol, watermark)
+      .withWatermark(tsCol, Watermark)
       .dropDuplicatesWithinWatermark("content_hash")
 
   /** Stream-static decorate: the reference's broadcast-LUT enrichment

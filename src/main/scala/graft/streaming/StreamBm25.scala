@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextAnalytics
 import graft.ops.Bm25
@@ -15,34 +12,13 @@ import graft.ops.Bm25
   * production serving shape (the index is built once and pinned; each
   * query micro-batch pays only its own keyed scoring join). Stream-
   * static scoring is per-batch independent — queries don't interact —
-  * so this is a `foreachBatch` accumulator (the [[StreamComponents]]
-  * precedent: the sanctioned hook for batch-complete logic per
-  * micro-batch), not keyed state. On bounded input the accumulated
-  * answers must equal the batch q103 verbatim — ONE oracle gates both
-  * forms.
+  * so this is a `foreachBatch` fold ([[StreamGate.foldAvailableNow]]:
+  * the sanctioned hook for batch-complete logic per micro-batch)
+  * whose state is the union of per-batch top-k frames (≤ queries×k
+  * rows), not keyed state. On bounded input the accumulated answers
+  * must equal the batch q103 verbatim — ONE oracle gates both forms.
   */
 object StreamBm25 {
-
-  /** Tiny result accumulator: per-batch top-k frames union in;
-    * `snapshot` is always materialized (results are ≤ queries×k rows).
-    */
-  final class Results(spark: SparkSession) {
-    private[this] var state: DataFrame = {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long, Long)]
-        .toDF("query_id", "rank", "doc_id", "score")
-    }
-    def append(batch: DataFrame): Unit = synchronized {
-      val next = state.unionByName(batch).localCheckpoint()
-      // release through the bridge: Dataset.unpersist only touches the
-      // CacheManager and silently leaves a localCheckpoint's RDD blocks
-      // pinned until driver GC
-      org.apache.spark.sql.classic.GraftColumnBridge
-        .unpersistLocalCheckpoint(state)
-      state = next
-    }
-    def snapshot: DataFrame = synchronized(state)
-  }
 
   /** The q112 gate: the q103 queries (first-5-token queries from wide
     * docs 0–7) streamed as hash-sliced micro-batches against the
@@ -52,17 +28,10 @@ object StreamBm25 {
       s: SparkSession, d: String,
       k: Int = 10, slices: Int = 3): DataFrame = {
     val wide = graft.core.Tables.documentsWide(s, d)
-    // the query table is tiny; checkpoint so each staged slice's
-    // write doesn't replay the wide-text synthesis
     val queries = wide.where(col("doc_id") < 8)
       .select(col("doc_id").as("query_id"),
         slice(TextAnalytics.tokens(col("text")), 1, 5).as("terms"))
-      .localCheckpoint()
     val dir = StreamGate.stageSlices(queries, col("query_id"), slices, "bm25q")
-    // the staged slice files are written; nothing reads the query
-    // checkpoint again
-    org.apache.spark.sql.classic.GraftColumnBridge
-      .unpersistLocalCheckpoint(queries)
 
     // build once, pin: these frames ARE the stored serving index —
     // registered so the harness's query-boundary drain frees them
@@ -76,33 +45,13 @@ object StreamBm25 {
     // for the stream's lifetime
     built.releaseStaged()
 
-    val schema = {
-      import scala.jdk.CollectionConverters._
-      val first = scala.util.Using.resource(Files.list(dir)) { l =>
-        l.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no staged query slices under $dir"))
-      }
-      s.read.parquet(first.toString).schema
+    val none = {
+      import s.implicits._
+      Seq.empty[(Long, Long, Long, Long)].toDF("query_id", "rank", "doc_id", "score")
     }
-    val stream = s.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir.toString)
-
-    val acc = new Results(s)
-    val ckpt = Files.createTempDirectory("graft_bm25_ckpt_").toString
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          acc.append(Bm25.scoreTopK(index, batch, "query_id", "terms", k))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    graft.core.StagingScope.register(acc.snapshot)
+    StreamGate.foldAvailableNow(StreamGate.streamStaged(s, dir), none) {
+      (results, batch) =>
+        results.unionByName(Bm25.scoreTopK(index, batch, "query_id", "terms", k))
+    }
   }
 }

@@ -22,7 +22,8 @@ import graft.ops.Components
   * machine — the same guarantees as the batch operator, made
   * incremental.
   *
-  * This is deliberately a `foreachBatch` accumulator rather than a
+  * This is deliberately a `foreachBatch` fold
+  * ([[StreamGate.foldAvailableNow]]) rather than a
   * `flatMapGroupsWithState` operator: component merging is a GLOBAL
   * fixpoint (one edge can fuse two arbitrary clusters), which keyed
   * per-group state cannot express without routing every pair through
@@ -31,62 +32,31 @@ import graft.ops.Components
   */
 object StreamComponents {
 
-  /** Mutable component state, updated batch-by-batch. Thread-safe via
-    * the instance lock (micro-batches arrive serially anyway).
-    * `snapshot` is always a materialized (localCheckpoint'd) plan, so
-    * reading it never races a later update.
-    */
-  final class IncrementalComponents(spark: SparkSession) {
-
-    private[this] var state: DataFrame = {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("id", "component")
-    }
-
-    /** Fold one batch of (u, v) pairs into the mapping. Returns the
-      * updated full mapping (id, component) — component = min id of
-      * the connected component across ALL pairs consumed so far.
-      */
-    def update(pairs: DataFrame): DataFrame = synchronized {
-      val starEdges = state
-        .where(col("id") =!= col("component"))
-        .select(col("id").as("u"), col("component").as("v"))
-      val batchEdges = pairs.select(
-        col(pairs.columns(0)).cast("long").as("u"),
-        col(pairs.columns(1)).cast("long").as("v"))
-      val merged = Components.components(batchEdges.unionByName(starEdges))
-      // singleton clusters (id == component) have no star edge and may
-      // not appear in the new pairs — carry them over untouched
-      val carried = state
-        .join(merged.select(col("id")), Seq("id"), "left_anti")
-      val next = merged.unionByName(carried).localCheckpoint()
-      // release through the bridge: Dataset.unpersist only touches the
-      // CacheManager and silently leaves a localCheckpoint's RDD blocks
-      // pinned until driver GC
-      org.apache.spark.sql.classic.GraftColumnBridge
-        .unpersistLocalCheckpoint(state)
-      state = next
-      next
-    }
-
-    /** The current (id, component) mapping — a stable, materialized
-      * frame safe to join or collect while the stream keeps running.
-      */
-    def snapshot: DataFrame = synchronized(state)
+  /** The empty (id, component) mapping — the fold's initial state. */
+  def empty(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("id", "component")
   }
 
-  /** Attach an accumulator to a STREAMING frame of pairs (first two
-    * columns = the edge). Each micro-batch folds into `acc`; read
-    * `acc.snapshot` at any point for the clusters-so-far. Caller
-    * starts with `.start()` and owns the query lifecycle.
+  /** Fold one batch of (u, v) pairs (first two columns = the edge)
+    * into the `state` mapping. Returns the updated full mapping
+    * (id, component) — component = min id of the connected component
+    * across ALL pairs consumed so far. Held between batches by
+    * [[StreamGate.FoldState]], which keeps `state` one materialized
+    * frame.
     */
-  def accumulate(
-      pairsStream: DataFrame,
-      acc: IncrementalComponents): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairsStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        acc.update(batch)
-        ()
-      }
+  def fold(state: DataFrame, pairs: DataFrame): DataFrame = {
+    val starEdges = state
+      .where(col("id") =!= col("component"))
+      .select(col("id").as("u"), col("component").as("v"))
+    val batchEdges = pairs.select(
+      col(pairs.columns(0)).cast("long").as("u"),
+      col(pairs.columns(1)).cast("long").as("v"))
+    val merged = Components.components(batchEdges.unionByName(starEdges))
+    // singleton clusters (id == component) have no star edge and may
+    // not appear in the new pairs — carry them over untouched
+    val carried = state
+      .join(merged.select(col("id")), Seq("id"), "left_anti")
+    merged.unionByName(carried)
+  }
 }

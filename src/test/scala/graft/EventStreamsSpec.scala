@@ -17,7 +17,7 @@ class EventStreamsSpec extends SparkSpec {
   test("windowedTypeCounts: tumbling counts emitted after watermark passes") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
-    val q = EventStreams.windowedTypeCounts(input.toDF(), "1 hour", "10 minutes")
+    val q = EventStreams.windowedTypeCounts(input.toDF())
       .writeStream.format("memory").queryName("wtc").outputMode("append").start()
     try {
       // two events in hour 0, one in hour 1; then advance watermark far
@@ -37,7 +37,7 @@ class EventStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Timestamp)]
     val docs = input.toDF().toDF("doc_id", "text", "ts")
-    val q = EventStreams.dedupStream(docs, "text", "ts", "10 minutes")
+    val q = EventStreams.dedupStream(docs, "text", "ts")
       .writeStream.format("memory").queryName("dedup").outputMode("append").start()
     try {
       def row(id: Long, text: String, sec: Long) =

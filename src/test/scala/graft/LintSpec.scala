@@ -223,6 +223,62 @@ class LintSpec extends AnyFunSuite {
       hits.mkString("\n"))
   }
 
+  test("one stream-replay harness: readStream, writeStream, foreachBatch " +
+      "and Trigger.AvailableNow appear in src/main only in " +
+      "streaming/StreamGate — one reader, the file-sink and fold runners") {
+    val calls = Seq("readStream", ".writeStream", "foreachBatch", "Trigger.AvailableNow")
+    val hits = for {
+      (p, src) <- mainSources
+      (ln, line) <- codeLines(src)
+      c <- calls
+      if line.contains(c)
+    } yield (c, p.toString, s"$p:$ln: ${line.trim}")
+    val outside = hits.filterNot(_._2.endsWith("graft/streaming/StreamGate.scala"))
+    assert(outside.isEmpty, "replay streams through graft.streaming.StreamGate:\n" +
+      outside.map(_._3).mkString("\n"))
+    assert(hits.groupBy(_._1).view.mapValues(_.size).toMap == Map(
+      "readStream" -> 1, ".writeStream" -> 2, "foreachBatch" -> 1,
+      "Trigger.AvailableNow" -> 2), hits.map(_._3).mkString("\n"))
+  }
+
+  test("no stray temp dirs: Files.createTempDirectory appears in src/main " +
+      "only for StreamGate's scratch root (and dirs under it) and in tools/ScaleUp") {
+    val hits = for {
+      (p, src) <- mainSources
+      (ln, line) <- codeLines(src)
+      if line.contains("Files.createTempDirectory(")
+    } yield (p.getFileName.toString, line.trim, s"$p:$ln: ${line.trim}")
+    val stray = hits.filterNot { case (f, l, _) =>
+      f == "ScaleUp.scala" ||
+        (f == "StreamGate.scala" && (l.contains("createTempDirectory(scratchRoot,") ||
+          l.contains("createTempDirectory(\"graft_stream_gate_\")")))
+    }
+    assert(stray.isEmpty, "create scratch under StreamGate's root:\n" +
+      stray.map(_._3).mkString("\n"))
+    assert(hits.count { case (f, l, _) =>
+      f == "StreamGate.scala" && !l.contains("(scratchRoot,") } == 1,
+      hits.map(_._3).mkString("\n"))
+  }
+
+  test("one fold-state holder: in streaming/, localCheckpoint( and " +
+      "unpersistLocalCheckpoint appear once each, in StreamGate.FoldState") {
+    val cls = """\bclass\s+(\w+)""".r
+    val hits = for {
+      (p, src) <- mainSources
+      if p.toString.contains("/graft/streaming/")
+      code = codeLines(src).map(_._2).mkString("\n")
+      call <- Seq("localCheckpoint(", "unpersistLocalCheckpoint(")
+      at <- java.util.regex.Pattern.quote("." + call).r.findAllMatchIn(code)
+        .map(_.start).toSeq
+      owner = cls.findAllMatchIn(code.substring(0, at)).toSeq.lastOption
+        .fold("?")(_.group(1))
+    } yield (call, s"${p.getFileName}:$owner")
+    assert(hits.sorted == Seq(
+      "localCheckpoint(" -> "StreamGate.scala:FoldState",
+      "unpersistLocalCheckpoint(" -> "StreamGate.scala:FoldState"),
+      hits.mkString("\n"))
+  }
+
   test("one skew split: outside ops/SkewJoin, no src/main code line " +
       "builds the salt fan-out, the probe salt or the triangle-grid cell keys") {
     val parts = Seq(

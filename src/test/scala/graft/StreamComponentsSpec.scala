@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.ops.Components
-import graft.streaming.StreamComponents
+import graft.streaming.{StreamComponents, StreamGate}
 
 /** Incremental connected components: stream-accumulated state must
   * equal the batch operator over the same pairs, regardless of how the
@@ -20,6 +20,14 @@ class StreamComponentsSpec extends SparkSpec {
     }.filter { case (u, v) => u != v }
   }
 
+  /** The components fold, held the way the gate holds it. */
+  private final class Acc {
+    val state = new StreamGate.FoldState(StreamComponents.empty(spark))
+    def update(pairs: org.apache.spark.sql.DataFrame): Unit =
+      state.fold(StreamComponents.fold(_, pairs))
+    def snapshot: org.apache.spark.sql.DataFrame = state.snapshot
+  }
+
   private def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.select("id", "component").as[(Long, Long)].collect().toMap
 
@@ -27,7 +35,7 @@ class StreamComponentsSpec extends SparkSpec {
     val all = edges(seed = 17, n = 60, m = 80)
     val want = asMap(Components.components(all.toDF("u", "v")))
     for (parts <- Seq(1, 3, 7)) {
-      val acc = new StreamComponents.IncrementalComponents(spark)
+      val acc = new Acc
       all.grouped(math.max(1, all.size / parts)).foreach { chunk =>
         acc.update(chunk.toDF("u", "v"))
       }
@@ -36,7 +44,7 @@ class StreamComponentsSpec extends SparkSpec {
   }
 
   test("one edge fuses two established clusters; snapshot is correct mid-stream") {
-    val acc = new StreamComponents.IncrementalComponents(spark)
+    val acc = new Acc
     acc.update(Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L)).toDF("u", "v"))
     val mid = asMap(acc.snapshot)
     assert(mid == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
@@ -50,14 +58,12 @@ class StreamComponentsSpec extends SparkSpec {
   test("foreachBatch stream accumulation equals batch components on the same pairs") {
     val all = edges(seed = 23, n = 40, m = 55)
     val chunks = all.grouped(12).toSeq
-    val acc = new StreamComponents.IncrementalComponents(spark)
+    val acc = new Acc
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long)]
-    val q = StreamComponents.accumulate(
-      input.toDF().toDF("u", "v"), acc)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_sc_ckpt_").toString)
-      .start()
+    // the gate's foreachBatch writer (checkpoint under the gate's
+    // scratch root), fed chunk by chunk under the default trigger
+    val q = StreamGate.foldWriter(input.toDF().toDF("u", "v"))(acc.update).start()
     try {
       chunks.foreach { c => input.addData(c); q.processAllAvailable() }
     } finally q.stop()
@@ -88,7 +94,7 @@ class StreamComponentsSpec extends SparkSpec {
       redundant.grouped(400).toSeq, Seq.empty, Seq.empty)
       .map { case (c, r) => c ++ r }
 
-    val acc = new StreamComponents.IncrementalComponents(spark)
+    val acc = new Acc
     var consumed = 0L
     batches.foreach { b =>
       acc.update(b.toDF("u", "v"))
@@ -115,7 +121,7 @@ class StreamComponentsSpec extends SparkSpec {
     // the state is a star forest — feeding it back through the batch
     // operator must be a no-op (the connectivity-equivalence invariant
     // the incremental fold relies on)
-    val acc = new StreamComponents.IncrementalComponents(spark)
+    val acc = new Acc
     acc.update(edges(seed = 31, n = 30, m = 40).toDF("u", "v"))
     val st = asMap(acc.snapshot)
     val replay = asMap(Components.components(

@@ -41,10 +41,7 @@ class StreamHeavyHittersSpec extends SparkSpec {
       .map { case (t, i) => (i % 3, t) } // 3 spray groups
     val dir = graft.streaming.StreamGate.stageSlices(
       terms.toDF("g", "term"), col("term"), 4, "mgterms")
-    val schema = spark.read.parquet(
-      java.nio.file.Files.list(dir).findFirst().get().toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+    val stream = graft.streaming.StreamGate.streamStaged(spark, dir)
       .select(col("g").cast("int"), col("term")).as[(Int, String)]
     val emissions = graft.streaming.StreamGate.runAvailableNow(
       StreamHeavyHitters.mgSummaryStream(stream, k).toDF())
